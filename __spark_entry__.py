@@ -11,6 +11,7 @@ assembles the registry.
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 from collections.abc import Callable
@@ -20,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from etl_portofolio_spark.plans.reference_queries import REFERENCE_QUERIES
+from etl_portofolio_spark.session import apply_runtime_confs
 
 # One (module, registry-dict-name) pair per plans module. Imports are
 # collected eagerly; any failure is recorded and re-raised the moment
@@ -157,19 +159,33 @@ def _ordered() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str 
     return {n: _ALL[n] for n in names}
 
 
+def _dispatch(
+    fn: Callable[[SparkSession, str], DataFrame],
+) -> Callable[[SparkSession, str], DataFrame]:
+    """Route a plan builder through the session's one-time conf setup, so
+    a session built elsewhere gets RUNTIME_CONFS on its first query."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return fn(apply_runtime_confs(spark), sf_dir)
+
+    return run
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     from etl_portofolio_spark.plans.reference_queries import (
         q_flagship_throughput_pivot,
     )
 
+    spark = apply_runtime_confs(spark)
     return q_flagship_throughput_pivot(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (+ extensions)."""
     _require_full_registry()
-    return {name: fn for name, (fn, _oracle) in _ordered().items()}
+    return {name: _dispatch(fn) for name, (fn, _oracle) in _ordered().items()}
 
 
 def oracle_sql() -> dict[str, str]:

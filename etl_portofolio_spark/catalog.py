@@ -34,10 +34,10 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 #: Columns stored as parquet TIMESTAMP(NANOS), which Spark cannot map to
-#: its microsecond TimestampType directly. We read them as nano longs
-#: (``spark.sql.legacy.parquet.nanosAsLong``) and truncate to micros with
-#: integer division — the same truncation DuckDB applies, so oracle
-#: comparisons agree to the microsecond.
+#: its microsecond TimestampType directly. The session reads them as nano
+#: longs (``spark.sql.legacy.parquet.nanosAsLong`` in RUNTIME_CONFS) and
+#: we truncate to micros with integer division — the same truncation
+#: DuckDB applies, so oracle comparisons agree to the microsecond.
 _NANO_TS_COLUMNS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
@@ -54,7 +54,6 @@ _SCHEMA_CACHE: dict[str, "object"] = {}
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table. Plain parquet scan — pushdown-friendly."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
     schema = _SCHEMA_CACHE.get(path)
     if schema is None:

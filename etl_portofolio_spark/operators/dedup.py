@@ -24,8 +24,6 @@ an exact DuckDB oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -266,33 +264,16 @@ def minhash_candidate_pairs(
         return _verified_pairs(docs, id_col, threshold, num_hashes, rows)
 
     # one aggregation elects the representative text per group —
-    # min_by keeps the text payload out of any join.
-    # r11 A/B (keep-or-revert discipline): a join-back election was
-    # tried — min(id) per group over the ALREADY-PERSISTED narrow
-    # (id, md5) members frame, then a broadcast join-back to fetch the
-    # keeper's text at the scan (guide §2.3 shuffle-fewer-bytes: min_by
-    # re-computes every md5 and shuffles full texts). It LOST at sf0.1,
-    # alternating variants in one session at 32 cores: joinback min
-    # 2.85 / med 3.02 vs min_by min 2.40 / med 2.57 on
-    # dedup_minhash_skewed — the extra stage barrier + broadcast
-    # latency outweigh the text-shuffle saving on short fixture texts,
-    # and at scale the shuffled (md5, text) bytes are within 2x of the
-    # (md5, id, text) the min_by moves anyway. Reverted; the env switch
-    # keeps the losing variant reproducible.
-    if os.environ.get("SPARK_GRAFT_DEDUP_ELECT", "minby") == "joinback":
-        keeps = members.groupBy("__gid").agg(F.min(id_col).alias(id_col))
-        if probe["g"] <= 500_000:
-            keeps = F.broadcast(keeps)
-        rep_docs = df.select(F.col(id_col), F.col(text_col)).join(keeps, id_col)
-    else:
-        rep_docs = df.select(
-            F.md5(F.col(text_col)).alias("__gid"),
-            F.col(id_col),
-            F.col(text_col),
-        ).groupBy("__gid").agg(
-            F.min(id_col).alias(id_col),
-            F.min_by(text_col, F.col(id_col)).alias(text_col),
-        )
+    # min_by keeps the text payload out of any join (a broadcast
+    # join-back election measured slower: extra stage barrier).
+    rep_docs = df.select(
+        F.md5(F.col(text_col)).alias("__gid"),
+        F.col(id_col),
+        F.col(text_col),
+    ).groupBy("__gid").agg(
+        F.min(id_col).alias(id_col),
+        F.min_by(text_col, F.col(id_col)).alias(text_col),
+    )
     docs = scoped_persist(
         shingled_docs(rep_docs, id_col, text_col, extra_cols=("__gid",))
     )
@@ -408,8 +389,8 @@ def _verified_pairs(
     # full sort of both corpus-scale inputs (and Spark 4's SHJ build
     # side is spillable, so partition-sized builds hold at any corpus
     # size), recovering most of merge's sf0.1 tax while the 3x warm
-    # 100x passes stay green. Env override for reproducing the A/B.
-    hint = os.environ.get("SPARK_GRAFT_DEDUP_VERIFY_HINT", "shuffle_hash")
+    # 100x passes stay green.
+    hint = "shuffle_hash"
     da = docs.select(F.col(id_col).alias("id_a"), F.col("sh_set").alias("sh_a"))
     db = docs.select(F.col(id_col).alias("id_b"), F.col("sh_set").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))

@@ -34,16 +34,7 @@ def spread_by(df: DataFrame, *cols: str) -> DataFrame:
     partial aggregation, paying a second exchange for rows a keyed
     exchange ships once. Like :func:`spread`, a no-op at production
     scale where the scan already has enough splits.
-
-    ``SPARK_GRAFT_SPREAD_BY=0`` turns every call into a no-op — the
-    A/B reproduction switch used by the r11 keep-or-revert audit of the
-    r10 spread sites (alternate the env var inside one session so host
-    drift hits both variants equally).
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SPREAD_BY", "1") != "1":
-        return df
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         # explicit count: a bare repartition(*cols) is REPARTITION_BY_COL,

@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 from etl_portofolio_spark.catalog import load_table
 from etl_portofolio_spark.operators import dedup, timeseries
 from etl_portofolio_spark.plans.analytics_queries import cents, _sql_cents
-from etl_portofolio_spark.session import apply_runtime_confs
 
 # --- sub-document (paragraph/chunk) dedup -----------------------------------
 
@@ -34,7 +33,6 @@ def q_dedup_paragraph_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks. The paragraph-dedup shape used on real corpora (explode →
     global first-occurrence election → reassembly), with a fixed-width
     chunker standing in for newline paragraph splits."""
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     return dedup.chunk_dedup_docs(docs, "doc_id", "text", _CHUNK_WORDS)
 
@@ -81,7 +79,6 @@ def q_date_spine_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     days with no qualifying events appear with explicit zeros and a
     was_gap flag. The spine is a single-row min/max aggregate exploded
     into |days| rows and broadcast — the fact side shuffles once."""
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     purch = events.where(
         (F.col("event_type") == "purchase") & (F.col("value") > _SPINE_MIN_VALUE)
@@ -132,7 +129,6 @@ def q_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     group count explodes (see quantile_outlier_filter, which uses it).
     Values interpolate between small integers, so doubles are exact;
     rounded to 6 dp as a cross-engine belt anyway."""
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     q = lambda p: F.round(F.percentile("l_quantity", F.lit(p)), 6)  # noqa: E731
     return (
@@ -172,7 +168,6 @@ def q_stats_corr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``corr()`` aggregate is order-dependent in floating point — this
     formulation is the scale-safe, deterministic variant: partial sums
     merge algebraically across any partitioning."""
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     x = cents("l_quantity")
     y = cents("l_extendedprice")
@@ -237,7 +232,6 @@ def q_approx_distinct_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     implementations), the accuracy contract is not. At 100 TB the
     approx variant is one map-side-mergeable pass where exact distinct
     is two shuffles."""
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     return (
         events.groupBy("event_type")
@@ -274,7 +268,6 @@ def q_grouping_sets_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     with per-column grouping flags (per-column flags agree across
     engines; combined grouping_id bitmasks do not). One pass: Spark
     expands the sets via a single Expand node, not three scans."""
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     pr, st = F.col("o_orderpriority"), F.col("o_orderstatus")
     return (
@@ -320,7 +313,6 @@ def q_histogram_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     with identical floor-divide arithmetic in both engines (exact —
     cents are integers far below 2^53), top bucket clamps the tail.
     One map-side-combinable aggregation on a 12-value key."""
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     pc = cents("l_extendedprice")
     bucket = F.least(
@@ -365,7 +357,6 @@ def q_trailing_7d_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     an integer day number — all same-day peers are in frame, so the
     result is deterministic under intra-day ties (a ROWS frame would
     not be). One shuffle on o_custkey."""
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     o = orders.select(
         "o_custkey",
@@ -401,7 +392,6 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncation conventions are avoided entirely). Two key-partitioned
     aggregations plus one join; the per-user first-seen frame is the
     small side and is broadcast."""
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     epoch = F.lit("1970-01-01").cast("date")
     wk = lambda c: F.floor(F.datediff(c, epoch) / F.lit(7.0))  # noqa: E731
@@ -457,7 +447,6 @@ def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence total). The probability divide happens once per (prev,
     cur) pair on exact BIGINT counts, identically in both engines.
     One shuffle for the window, one for the pair count."""
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     from pyspark.sql import Window
 
@@ -517,7 +506,6 @@ def q_nation_volume_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     their joins are left to AQE: broadcast at small SF, shuffle-hash on
     the join key at scale (both sides key-partitioned, no skew on
     orderkey/custkey)."""
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
@@ -574,7 +562,6 @@ def q_disjunctive_pred_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     extracts the common join key, pushes the shared conjuncts into both
     scans, and evaluates the residual disjunction post-join — the probe
     for 'does a messy business predicate still prune at the scan'."""
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     rev = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)
@@ -627,7 +614,6 @@ def q_vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     top 100 by (count desc, token asc — total order, so the LIMIT is
     deterministic). One explode + one map-side-combinable aggregation
     + TakeOrdered; the classic vocab-build pass over a corpus."""
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     from etl_portofolio_spark.operators.text import tokens
     from etl_portofolio_spark.operators.util import spread
@@ -672,7 +658,6 @@ def q_latest_order_maxby(spark: SparkSession, sf_dir: str) -> DataFrame:
     algebraic aggregation with map-side partials, versus the window
     row_number pattern's full sort of every partition. At 100 TB the
     sort is the bottleneck; max_by never sorts."""
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     day = F.datediff(F.to_date("o_orderdate"), F.lit("1970-01-01").cast("date"))
     sortkey = (day.cast("long") * F.lit(1 << 20)) + F.col("o_orderkey")
@@ -721,7 +706,6 @@ def q_incremental_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole history. The query outputs the MERGED result; the oracle
     recomputes from scratch, so any non-mergeable aggregate sneaking in
     fails the hash."""
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     last_day = events.agg(F.max(F.to_date("ts"))).first()[0]
 
@@ -769,7 +753,6 @@ def q_recursive_order_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursion terminates at the longest per-customer chain). The oracle
     is the INDEPENDENT non-recursive formulation (window running sum):
     two different algorithms must produce identical rows."""
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.catalog import register_tables
 
     register_tables(spark, sf_dir, ("orders",))
@@ -814,7 +797,6 @@ def q_user_active_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     a run of consecutive days, jumps at every gap). Two key-partitioned
     window/agg passes over the DISTINCT (user, day) frame — which is
     |users|×|days| at most, tiny relative to the event fact."""
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     events = load_table(spark, sf_dir, "events")
@@ -873,7 +855,6 @@ def q_user_day_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-activity, popcount for counts). Fits 64-bit longs because the
     fixture spans < 64 days; the same shape shards into (user, epoch
     week) masks at scale. bit_count agrees across engines."""
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     lo = events.agg(F.min(F.to_date("ts"))).first()[0]
     day_idx = F.datediff(F.to_date("ts"), F.lit(lo))
@@ -923,26 +904,14 @@ def q_multimodal_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     walk). The oracle recomputes the embedded values from md5(text) in
     SQL: a stride or chunk-walk bug shifts the decoded statistics and
     fails the hash. ONE Arrow mapInPandas crossing (fused
-    synthesize+decode — r11, guide §4, same change as jpeg_pixel_stats:
-    the chained two-operator form shipped every BMP/WAV payload across
-    the JVM<->Python boundary twice; the fused operator is built from
-    the same two per-doc helpers, so the decoded bytes are identical).
-    SPARK_GRAFT_MM_FUSE=0 restores the chained shape (the r11 A/B
-    switch; alternate inside one session to control host drift)."""
-    apply_runtime_confs(spark)
-    import os
-
-    from etl_portofolio_spark.operators.multimodal import (
-        pixel_sample_stats,
-        synthesize_filled_media,
-        synthesize_filled_pixel_stats,
-    )
+    synthesize+decode: the chained two-operator form ships every BMP/WAV
+    payload across the JVM<->Python boundary twice; the fused operator
+    is built from the same two per-doc helpers, so the decoded bytes
+    are identical)."""
+    from etl_portofolio_spark.operators.multimodal import synthesize_filled_pixel_stats
     from etl_portofolio_spark.operators.util import spread
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    if os.environ.get("SPARK_GRAFT_MM_FUSE", "1") != "1":
-        media = synthesize_filled_media(docs, id_col="doc_id", text_col="text")
-        return pixel_sample_stats(media, id_col="doc_id", bin_col="content")
     return synthesize_filled_pixel_stats(docs, id_col="doc_id", text_col="text")
 
 
@@ -974,7 +943,6 @@ def q_multiset_ops_orderdays(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows carry multiplicity through both operators. Spark plans these
     as aggregate+generate over counts — one shuffle per operand, no
     join explosion."""
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     day = F.to_date("o_orderdate").alias("d")
     urgent = orders.where(
@@ -1017,7 +985,6 @@ def q_nation_day_over_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     shrinks the data to |nations|×|days| rows first, so the window sort
     is over a tiny frame regardless of fact size. Ordering this the
     other way (window over the fact) is the classic scale mistake."""
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -1089,7 +1056,6 @@ def q_sql_interface_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     dialect-neutral and doubles, unmodified, as its own oracle; Catalyst
     plans it identically to the DataFrame equivalent (same pushdown,
     same broadcasts)."""
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.catalog import register_tables
 
     register_tables(spark, sf_dir, ("customer", "orders", "nation"))
@@ -1106,7 +1072,6 @@ def q_window_distribution_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes the order total, so every output is deterministic. One
     shuffle + one sort per partition, all three functions in a single
     Window operator."""
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders")
@@ -1144,7 +1109,6 @@ def q_quality_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     report of a filtering pipeline. All rules are exact-integer
     comparisons (cross-multiplied ratios), single map-side-combinable
     pass."""
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators.text import quality_funnel_report
 
     docs = load_table(spark, sf_dir, "documents")

@@ -18,7 +18,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_portofolio_spark.catalog import load_table
-from etl_portofolio_spark.session import apply_runtime_confs
 
 
 def cents(col: Column | str, scale: int = 2) -> Column:
@@ -43,7 +42,6 @@ def q_agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shipdate filter is pushed to the parquet scan. The classic
     "does partial agg + pushdown happen" probe query.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     qty_c = cents("l_quantity")
     price_c = cents("l_extendedprice")
@@ -92,7 +90,6 @@ def q_join_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     picks broadcast for the dim side; top-10 runs as TakeOrdered (no
     global sort materialization).
     """
-    apply_runtime_confs(spark)
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
@@ -127,7 +124,6 @@ LIMIT 10
 
 def q_join_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 5-way join with small-dim broadcasts, revenue per nation."""
-    apply_runtime_confs(spark)
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
@@ -178,7 +174,6 @@ GROUP BY n_name
 
 def q_window_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """row_number top-3 orders per customer (deterministic tie-break)."""
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
@@ -205,7 +200,6 @@ def q_window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cents-integer running sum so the cumulative value is exact at any
     frame position in both engines.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_orderdate").asc(), F.col("o_orderkey").asc()
@@ -242,7 +236,6 @@ def q_asof_last_click_before_signup(spark: SparkSession, sf_dir: str) -> DataFra
     no range join explosion. (DuckDB's ASOF JOIN would be the oracle
     shortcut, but the window formulation keeps both sides identical.)
     """
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     both = events.where(F.col("event_type").isin("click", "signup"))
     w = (
@@ -280,7 +273,6 @@ FROM ev WHERE event_type = 'signup'
 
 def q_agg_rollup_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP over (returnflag, linestatus): subtotals + grand total."""
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     price_c = cents("l_extendedprice")
     return (
@@ -308,7 +300,6 @@ def q_set_ops_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment — all three legs project the key only, so the set ops run
     on narrow shuffles.
     """
-    apply_runtime_confs(spark)
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     rich = customer.where(F.col("c_acctbal") > 7000).select("c_custkey")
@@ -328,7 +319,6 @@ SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
 
 def q_agg_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct-count per group (the expensive two-shuffle agg)."""
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     return events.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("n_users"),
@@ -344,7 +334,6 @@ FROM events GROUP BY event_type
 
 def q_cross_join_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5 parity: explicit cross join of two tiny relations."""
-    apply_runtime_confs(spark)
     region = load_table(spark, sf_dir, "region")
     events = load_table(spark, sf_dir, "events")
     types = events.select("event_type").distinct()
@@ -364,7 +353,6 @@ def q_agg_decimal_revenue_by_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
     casts at Ingestion Data (MySQL).py:171) grouped by the engine's
     string day-partition key.
     """
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     from pyspark.sql import types as T
 
@@ -393,7 +381,6 @@ def q_anti_join_inactive_customers(spark: SparkSession, sf_dir: str) -> DataFram
     join, and the date filter prunes the probe side at the scan; AQE
     can flip to broadcast when the filtered side shrinks enough.
     """
-    apply_runtime_confs(spark)
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").where(
         F.col("o_orderdate") >= F.lit("2001-01-01").cast("timestamp")
@@ -418,7 +405,6 @@ def q_agg_type_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     ECONOMY-type share of revenue, by order month — a lineitem⋈part
     join where part broadcasts, then a conditional sum.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     rev_c4 = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)
@@ -457,7 +443,6 @@ def q_window_rank_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking-function family over one window: rank / dense_rank /
     ntile / percent_rank / cume_dist (single sort per partition —
     Catalyst evaluates all five in one Window operator)."""
-    apply_runtime_confs(spark)
     customer = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy(
         F.col("c_acctbal").desc(), F.col("c_custkey").asc()
@@ -491,7 +476,6 @@ def q_exists_subquery_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     an account balance above a threshold — planned as a left-semi join
     chain (Catalyst rewrites EXISTS to semi joins; here declared
     directly, same plan)."""
-    apply_runtime_confs(spark)
     supplier = load_table(spark, sf_dir, "supplier")
     customer = load_table(spark, sf_dir, "customer")
     rich_nations = (
@@ -520,7 +504,6 @@ def q_skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges <=16 partials per key. The oracle is the PLAIN group-by —
     salting must be invisible in the result.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators.skew import salted_aggregate
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -554,7 +537,6 @@ def q_tumbling_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan Structured Streaming runs per micro-batch (§2.8 window
     assignment as ``F.window``, not a driver loop).
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.streaming.structured import windowed_counts
 
     events = load_table(spark, sf_dir, "events")
@@ -584,7 +566,6 @@ def q_range_join_quantity_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     per band. The bucket width equals the band width, so the interval
     side inflates at most 2x and the join is a broadcast hash join.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators.rangejoin import bucketed_range_join
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
@@ -619,7 +600,6 @@ def q_scd2_user_event_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeds. One shuffle (window partition on the key); ties broken on
     event_id so reruns and the oracle agree. is_current marks open rows.
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "event_type").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
@@ -654,7 +634,6 @@ def q_sliding_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     row inflation happens map-side (window explode before the partial
     agg), so the only shuffle carries already-combined partials.
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
@@ -697,7 +676,6 @@ def q_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id; the session assignment itself is a sort-based merge
     inside the aggregation, no window-function pass.
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
@@ -746,7 +724,6 @@ def q_agg_cube_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     expands the grouping sets before the single shuffle, so the fact
     table is scanned once, not 4 times. Exact integer money sums.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.cube("l_returnflag", "l_linestatus")
@@ -777,7 +754,6 @@ def q_time_bounded_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     both plans). Equi-join on user_id + time-range residual: hash
     join, state-expirable in streaming mode.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.streaming.structured import time_bounded_join
 
     ev = load_table(spark, sf_dir, "events")
@@ -807,7 +783,6 @@ def q_unpivot_lineitem_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     happens inside the scan's projection. Bounded to the first 2000
     orders so the long-form result stays driver-collectable.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") <= 2000)
     wide = li.select(
         "l_orderkey",
@@ -852,7 +827,6 @@ def q_upsert_merge_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     and rewrite only the touched files. This query keeps the canonical
     single-plan form the split compiles from.
     """
-    apply_runtime_confs(spark)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", cents("c_acctbal").alias("acctbal_c")
     )
@@ -905,7 +879,6 @@ def q_window_value_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic last_value foot-gun) / nth_value / lag-with-default, all
     evaluated in a single Window operator (one sort per partition).
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     w_full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -939,7 +912,6 @@ def q_agg_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract is sort-then-serialize (array_sort + concat_ws) — the only
     reproducible form of "gather the group's values" on a cluster.
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.where(F.col("user_id") < 200)
@@ -971,7 +943,6 @@ def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     but never self-joined row-to-row; the sequential dependency between
     stages is inherent to funnel semantics.
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     s1 = (
         ev.where(F.col("event_type") == "view")

@@ -17,7 +17,6 @@ from etl_portofolio_spark.catalog import load_table
 from etl_portofolio_spark.functions.hashing import h32, h32_sql
 from etl_portofolio_spark.operators import cdc, similarity, text
 from etl_portofolio_spark.plans.analytics_queries import cents, _sql_cents
-from etl_portofolio_spark.session import apply_runtime_confs
 
 #: DuckDB twin of text.tokens() — whitespace tokens of lowercased text.
 _SQL_TOKENS = r"regexp_split_to_array(lower(trim({col})), '\s+')"
@@ -40,7 +39,6 @@ def q_cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental twin of the reference's truncate-and-reload partitions
     (Ingestion Data (MySQL).py:58-65). One full-outer join on the
     primary key; see operators/cdc.py for the 100 TB notes."""
-    apply_runtime_confs(spark)
     base = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderdate",
@@ -118,7 +116,6 @@ def q_dataset_split_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc never migrates between splits as the corpus grows. Output is
     the per-(split, source) manifest a training job consumes: doc
     count, token sum, char sum. Single map-side-combinable pass."""
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     bucket = h32(F.concat(F.lit(_SPLIT_SALT), F.col("doc_id").cast("string"))) % 1000
     split = (
@@ -177,7 +174,6 @@ def q_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalized-content hash used by downstream exact dedup. Pure
     codegen string expressions — at 100 TB this runs at scan speed
     with zero shuffles (the output is one row per input row)."""
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     norm = F.regexp_replace(
         F.translate(F.lower(F.trim(F.col("text"))), _ACCENTS, _PLAIN),
@@ -217,7 +213,6 @@ def q_embedding_quality_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-cast array — sequential IEEE folds identical to the DuckDB
     list_reduce twin (same proven idiom as the ANN cosine oracles).
     Map-only: no shuffle, no Python."""
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     v = F.transform("embedding", lambda x: x.cast("double"))
     l2 = similarity.norm(v)
@@ -266,7 +261,6 @@ def q_quantile_sketch_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     4 dp) and the accuracy boolean — the sketch values themselves are
     engine-specific (GK vs t-digest). At 100 TB the approx variant is
     one mergeable pass; exact percentile needs a full sort per group."""
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     c = cents("l_extendedprice")
     rows = li.select(F.col("l_returnflag").alias("flag"), c.alias("c"))
@@ -309,7 +303,6 @@ def q_contract_violations_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule. Thresholds are deliberately tighter than the data's envelope
     so the report is non-trivial. One combinable pass — see
     operators/contracts.py for the 100 TB notes."""
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators.contracts import violations_report
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -365,7 +358,6 @@ def q_robust_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass reuses the first as a broadcast (|groups| rows). Exact
     interpolated medians agree across engines over integer inputs
     (same contract as quantile_sketch_gate), rounded 4 dp as a belt."""
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events")
     rows = ev.select("event_type", cents("value").alias("c"))
     med = rows.groupBy("event_type").agg(
@@ -438,7 +430,6 @@ def q_not_in_three_valued(spark: SparkSession, sf_dir: str) -> DataFrame:
     to 0 — the classic footgun, pinned identically on both engines.
     Spark plans the null-aware branch as a null-aware anti join
     (broadcast single-column NAAJ), not a per-row subquery."""
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.catalog import register_tables
 
     register_tables(spark, sf_dir, ("customer", "orders"))

@@ -25,7 +25,6 @@ from etl_portofolio_spark.functions.hashing import (
 from etl_portofolio_spark.operators import dedup, similarity, text
 from etl_portofolio_spark.operators.multimodal import decode_binary_metadata
 from etl_portofolio_spark.operators.util import spread
-from etl_portofolio_spark.session import apply_runtime_confs
 
 # --- shared SQL fragments (DuckDB) -----------------------------------------
 
@@ -63,7 +62,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the hash is computed at scan time and only (hash, id)
     pairs move.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     return dedup.exact_dedup_groups(docs, "doc_id", "text")
 
@@ -82,7 +80,6 @@ GROUP BY 1
 
 def q_dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc MinHash signature (16 salted-md5 mins over 3-shingles)."""
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     return dedup.minhash_signatures(docs, "doc_id", "text")
 
@@ -107,7 +104,6 @@ def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Candidates only from shared (band, hash) buckets — never a cross
     join — then exact Jaccard on the candidate set.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     return dedup.minhash_candidate_pairs(docs, "doc_id", "text", threshold=0.7)
 
@@ -151,7 +147,6 @@ WHERE len(list_intersect(sa.s, sb.s))::DOUBLE
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """60-bit SimHash fingerprints (frequency-weighted bit votes)."""
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     return dedup.simhash_fingerprints(docs, "doc_id", "text")
 
@@ -185,7 +180,6 @@ ORACLE_SIMHASH = _sql_simhash_fingerprint()
 
 def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs at hamming <= 3 via 4x15-bit block LSH."""
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     return dedup.simhash_near_pairs(docs, "doc_id", "text", max_hamming=3)
 
@@ -214,7 +208,6 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard pairs blocked by language, >= 0.5."""
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     return dedup.ngram_jaccard_pairs(docs, "doc_id", "text", "lang", threshold=0.5)
 
@@ -239,7 +232,6 @@ WHERE len(list_intersect(a.s, b.s))::DOUBLE
 
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc quality features + composite score (pure map stage)."""
-    apply_runtime_confs(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     feats = text.quality_features("text")
     return docs.select("doc_id", *[v.alias(k) for k, v in feats.items()])
@@ -277,7 +269,6 @@ FROM g
 
 def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-ratio language ID with deterministic argmax."""
-    apply_runtime_confs(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     toks = text.tokens(F.col("text"))
     scores = text.langid_scores(toks)
@@ -325,7 +316,6 @@ ORACLE_TEXT_LANGID = _sql_langid()
 
 def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-sensitive rolling-hash fingerprint of each token stream."""
-    apply_runtime_confs(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     return docs.select(
         "doc_id", text.doc_fingerprint("text").alias("fingerprint")
@@ -366,7 +356,6 @@ def _sql_cosine(a: str, b: str) -> str:
 
 def q_ann_brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 for 5 query vectors (broadcast, no shuffle)."""
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     out = similarity.brute_force_topk(emb, query_ids=(0, 1, 2, 3, 4), k=5)
     return out.withColumn("rank", F.col("rank").cast("long"))
@@ -393,7 +382,6 @@ FROM ranked WHERE rank <= 5
 
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-3 within hyperplane-LSH buckets (the scale path)."""
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     out = similarity.lsh_ann_topk(emb, dim=64, num_planes=4, k=3)
     return out.withColumn("rank", F.col("rank").cast("long"))
@@ -433,7 +421,6 @@ ORACLE_ANN_LSH = _sql_ann_lsh(4, 64)
 
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (nprobe=1) ANN top-3 within nearest-centroid clusters."""
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     out = similarity.ivf_topk(emb, query_ids=(10, 11, 12, 13, 14), num_centroids=8, k=3)
     return out.withColumn("rank", F.col("rank").cast("long"))
@@ -478,7 +465,6 @@ def q_ann_brute_force_topk_np(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine values themselves are asserted against the oracle-checked
     expression variant in tests/test_similarity_np.py to 1e-9.
     """
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     out = similarity.brute_force_topk_np(emb, query_ids=(0, 1, 2, 3, 4), k=5)
     return out.select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"))
@@ -504,7 +490,6 @@ FROM ranked WHERE rank <= 5
 
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-blocked near-dup pairs (cosine >= 0.35, 2 planes x 6 tables)."""
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.embedding_near_dup_pairs(
         emb, threshold=0.35, dim=64, num_planes=2, num_tables=6
@@ -553,7 +538,6 @@ def q_multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     see operators/multimodal.py). Oracle recomputes the same values in
     SQL, proving the UDF plumbing end to end.
     """
-    apply_runtime_confs(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     binary = docs.select(
         "doc_id", F.encode(F.col("text"), "UTF-8").alias("content")
@@ -574,7 +558,6 @@ FROM documents
 
 def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary→binary resize plumbing (fake resample; hex for the oracle)."""
-    apply_runtime_confs(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     binary = docs.select("doc_id", F.encode(F.col("text"), "UTF-8").alias("content"))
     from etl_portofolio_spark.operators.multimodal import resize_binary
@@ -596,7 +579,6 @@ FROM documents
 
 def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-sampling fan-out: one row per sampled fake video frame."""
-    apply_runtime_confs(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     binary = docs.select("doc_id", F.encode(F.col("text"), "UTF-8").alias("content"))
     from etl_portofolio_spark.operators.multimodal import sample_frames
@@ -620,7 +602,6 @@ FROM d
 def q_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min gap) — batch twin of the
     applyInPandasWithState streaming operator."""
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.streaming.stateful import sessionize_batch
 
     events = load_table(spark, sf_dir, "events")
@@ -640,7 +621,6 @@ def q_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     writes out. Left-semi join of the corpus against the keeper set: the
     corpus shuffles once on doc_id; no wide row ever moves twice.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     keepers = dedup.exact_dedup_groups(docs, "doc_id", "text").select(
         F.col("keep_id").alias("doc_id")
@@ -665,7 +645,6 @@ def q_text_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the explode stays map-side and only (lang, token) pairs
     shuffle.
     """
-    apply_runtime_confs(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     tok = docs.select(
         "lang", "doc_id", F.explode(text.tokens(F.col("text"))).alias("tok")
@@ -699,7 +678,6 @@ def q_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dedup branch and once for the semi-join probe, both pruned to
     the used columns).
     """
-    apply_runtime_confs(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     keepers = dedup.exact_dedup_groups(docs, "doc_id", "text").select(
         F.col("keep_id").alias("doc_id")
@@ -754,7 +732,6 @@ def q_json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     one pass, no sampling) then a grouped aggregate on the extracted
     field. JSON parse happens once per row in the scan stage.
     """
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     parsed = events.withColumn(
         "k", F.from_json(F.col("props"), "k int").getField("k")
@@ -785,7 +762,6 @@ def q_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     join back the neighbor labels, majority vote with deterministic
     ties (higher count first, then smaller label).
     """
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     topk = similarity.brute_force_topk(emb, query_ids=(20, 21, 22, 23, 24), k=5)
     labels = emb.select(F.col("vec_id").alias("neighbor_id"), "label")
@@ -838,7 +814,6 @@ def q_stratified_source_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     order column (doc_id) makes reruns and oracles exact — never
     ``sample()`` inside a quota.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(F.col("doc_id").asc())
     return (
@@ -867,7 +842,6 @@ def q_dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     (O(diameter) shuffle rounds, see operators/dedup.connected_components);
     the oracle computes the same fixpoint with a recursive CTE.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_candidate_pairs(docs, "doc_id", "text", threshold=0.7)
     cc = dedup.connected_components(pairs)
@@ -901,7 +875,6 @@ def q_text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     before scrubbing — every row provably exercises all three patterns.
     Map-only codegen: zero shuffle, no Python.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     blurb = F.concat(
         F.col("text"),
@@ -952,7 +925,6 @@ ORACLE_PII = _sql_pii_oracle()
 
 def q_text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 TF-IDF terms per document (smoothed idf, deterministic ties)."""
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     return text.tfidf_topk(docs, "doc_id", "text", k=3)
 
@@ -990,7 +962,6 @@ def q_multimodal_container_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
     recomputes the embedded params from md5(text) in SQL: the parser
     must agree from the bytes alone.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators.multimodal import (
         decode_container_metadata,
         synthesize_containers,
@@ -1047,7 +1018,6 @@ def q_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, so the gram stream is built once and split by the predicate
     (operators/dedup.decontaminate_corpus).
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     out = dedup.decontaminate_corpus(
         docs, "doc_id", "text", eval_pred=F.col("doc_id") % _EVAL_MOD == 0,
@@ -1084,7 +1054,6 @@ def q_text_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions — zero shuffle, no Python; the filter threshold is the
     caller's (here: emit the features for every doc).
     """
-    apply_runtime_confs(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     toked = docs.select("doc_id", text.tokens("text").alias("__toks"))
     feats = text.repetition_features(F.col("__toks"))
@@ -1117,7 +1086,6 @@ def q_quantile_outlier_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tiny aggregate), broadcast, then a map-side range filter — same
     output modulo sketch error, no per-lang global sort.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("lang").orderBy(F.col("n_chars").asc())
     ranked = docs.select(
@@ -1145,7 +1113,6 @@ def q_fuzzy_match_part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/er.py). Both engines' levenshtein is the classic
     unit-cost DP, so the oracle mirrors blocking and threshold exactly.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators.er import blocked_fuzzy_pairs
 
     part = load_table(spark, sf_dir, "part")
@@ -1175,7 +1142,6 @@ def q_feature_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     double stddev), broadcast-joined back, and the float math applied
     identically per row in both engines from those three integers.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     stats = docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1220,7 +1186,6 @@ def q_dedup_incremental_novel(spark: SparkSession, sf_dir: str) -> DataFrame:
     history disqualifies). New-batch bands would broadcast at real
     scale; history never recomputes per batch.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     new = docs.where(F.col("doc_id") % 2 == 1)
     hist = docs.where(F.col("doc_id") % 2 == 0)
@@ -1306,7 +1271,6 @@ def q_corpus_mix_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle can check it). Pure map-side filter: the rate table is a
     literal CASE, no join, no shuffle.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     rate = F.lit(_MIX_DEFAULT_BP)
     for src, bp in sorted(_MIX_RATES_BP.items()):
@@ -1332,7 +1296,6 @@ def q_token_budget_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort per lang partition; at scale the order key would be a
     precomputed shuffle-once sort key, and packing runs per partition.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     n_tok = text.token_count_ws("text").cast("long")
     w = (

@@ -34,7 +34,6 @@ from etl_portofolio_spark.functions import (
     prefix_before,
     shift_hours,
 )
-from etl_portofolio_spark.session import apply_runtime_confs
 
 # ---------------------------------------------------------------------------
 # dim chain (J1–J3): remotes ⋈ hosts with IN/LIKE residual predicates
@@ -70,7 +69,6 @@ def _dim_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dim_chain_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1–J3 + P7/P8 + F3: the dim chain as a standalone checkable query."""
-    apply_runtime_confs(spark)
     return _dim_chain(spark, sf_dir)
 
 
@@ -109,7 +107,6 @@ def q_flagship_throughput_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial aggs and the outer join, all on the same key, and AQE merges
     them into co-partitioned stages.
     """
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     dim = _dim_chain(spark, sf_dir)
 
@@ -214,7 +211,6 @@ def q_ingest_hour_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     — on a ds-partitioned production table this is partition pruning; on
     JDBC it is the pushdown subquery plus partitioned reads.
     """
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     lo, hi = "2024-01-02 00:00:00", "2024-01-02 01:00:00"
     shifted = shift_hours(F.col("ts"))
@@ -258,7 +254,6 @@ def q_ingest_dateparts(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference slices out of a formatted timestamp. Fixture stand-in: the
     events table plays the API payload; event_type plays aplikasi.
     """
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     shifted = shift_hours(F.col("ts"))
     parts = date_parts(shifted)
@@ -292,7 +287,6 @@ def q_epoch_clock_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     The fixture has real timestamps; derive an epoch ``clock`` first, then
     reproduce the reference's ``clock + 7*3600 → timestamp → ds`` chain.
     """
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     clock = F.unix_timestamp("ts")
     local_ts = epoch_to_ts_utc7(clock)
@@ -334,7 +328,6 @@ def q_allowlist_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed equivalent is a broadcast left_semi join — no shuffle of
     the big side, allowlist ships once per executor.
     """
-    apply_runtime_confs(spark)
     customer = load_table(spark, sf_dir, "customer")
     allow = spark.createDataFrame(
         [("BUILDING",), ("MACHINERY",), ("AUTOMOBILE",)], ["allowed_segment"]
@@ -364,7 +357,6 @@ def q_regex_item_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern, require a nonempty regex extraction, and emit the extracted
     features (direction-style token, prefix before a delimiter).
     """
-    apply_runtime_confs(spark)
     part = load_table(spark, sf_dir, "part")
     first_word = F.regexp_extract(F.col("p_type"), r"^(\w+)\b.*$", 1)
     return (
@@ -409,7 +401,6 @@ def q_watermark_max_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned table this is metadata-only; here it is a single-column
     scan + partial max — no full shuffle (one-row exchange).
     """
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     return events.select(ds_from_ts(F.col("ts")).alias("ds")).agg(
         F.max("ds").alias("max_ds")
@@ -429,7 +420,6 @@ def q_direction_pivot_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
     two aggregates + a join. This is the shape the engine prefers at
     scale; the full-join variant exists for exact reference parity.
     """
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     return (
         events.where(F.col("event_type").isin("click", "view"))
@@ -467,7 +457,6 @@ def q_empty_gate_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``Ingestion Data (MySQL).py:172,175`` counts the batch twice (no
     cache); the engine computes counts once, grouped, in one pass.
     """
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     return (
         events.groupBy("event_type")
@@ -487,7 +476,6 @@ def q_topn_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: Spark executes sort+limit as a TakeOrdered — per-partition
     top-N then a single-driver merge of N·partitions rows, no full sort.
     """
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     return (
         events.orderBy(F.col("ts").desc(), F.col("event_id").asc())
@@ -512,7 +500,6 @@ def q_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     size-estimation sample is a deterministic key-modulus slice so reruns
     and oracle checks agree.
     """
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     return events.where(F.col("event_id") % 10 == 0).select(
         "event_id", "user_id", "event_type", "value"

@@ -43,7 +43,6 @@ from pyspark.sql import functions as F
 
 from etl_portofolio_spark.catalog import load_table
 from etl_portofolio_spark.plans.oracle_types import oracle_bigint
-from etl_portofolio_spark.session import apply_runtime_confs
 
 ROUND10_QUERIES: dict[
     str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
@@ -174,7 +173,6 @@ def q_anova_oneway_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments, never fact rows.  The F statistic is scalar arithmetic on
     the 5-row frame.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", F.col("l_quantity").cast("long").alias("q")
     )
@@ -223,7 +221,6 @@ def q_brown_forsythe_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 5-row broadcast back onto the joined fact rows, then the same
     single combinable 5-group moment pass as the ANOVA.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.caching import scoped_persist
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -295,7 +292,6 @@ def q_logrank_return_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     duration rows, not fact rows), so the shuffle after the per-order
     collapse carries O(durations).
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.to_date("o_orderdate").alias("odate"),
@@ -480,7 +476,6 @@ def q_yule_walker_ar2(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpartitioned window is domain-bounded (days), the repo's standard
     dispensation.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.expr("sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) div 100")
@@ -618,7 +613,6 @@ def q_gram_matrix_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     same per-row expansion (precedent: similarity.cosine_fold_pd)
     replaces the interpreted HOF without changing the plan shape.
     """
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings").select("embedding")
     q = emb.select(
         F.expr(
@@ -703,7 +697,6 @@ def q_mutual_information_discount_return(
     margins and the MI total are windows over those 33 rows — the
     shuffle carries cells, never fact rows, at any scale.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         F.expr("CAST(floor(l_discount * 100 + 0.5) AS BIGINT)").alias(
             "discount_pct"
@@ -812,18 +805,18 @@ def q_good_turing_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny frame.  Tokenizer matches the corpus-wide convention
     (``text.tokens`` / regexp_split on whitespace of lowercased text).
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators import text
 
     docs = load_table(spark, sf_dir, "documents").select(
         text.tokens("text").alias("toks")
     )
     # two-param transform lambda receives (element, index); toks is a
-    # materialized column, so the per-element lookup is O(1) (r1 HOF rule)
+    # materialized column, so the per-element lookup is O(1) (r1 HOF rule);
+    # greatest(.., 0) keeps an empty token array from a negative slice length
     bigrams = docs.select(
         F.explode(
             F.expr(
-                "transform(slice(toks, 1, size(toks) - 1),"
+                "transform(slice(toks, 1, greatest(size(toks) - 1, 0)),"
                 " (t, i) -> concat(t, ' ', toks[i + 1]))"
             )
         ).alias("tok")
@@ -921,7 +914,6 @@ def q_cohens_kappa_heuristics(spark: SparkSession, sf_dir: str) -> DataFrame:
     value rollups), and the 2×2 table is a single combinable
     aggregation — no shuffle ever carries more than the cell counts.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators import text
 
     from etl_portofolio_spark.caching import scoped_persist

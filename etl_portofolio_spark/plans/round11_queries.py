@@ -34,7 +34,6 @@ so matching is co-partitioned with no cross-document fan-out.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,7 +41,6 @@ from pyspark.sql import functions as F
 
 from etl_portofolio_spark.catalog import load_table
 from etl_portofolio_spark.plans.oracle_types import oracle_bigint
-from etl_portofolio_spark.session import apply_runtime_confs
 
 ROUND11_QUERIES: dict[
     str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
@@ -122,26 +120,15 @@ def q_jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     of 8, so MCU edge padding + crop is on the verified path.
 
     Scale design: ONE Arrow-batched mapInPandas crossing (fused
-    synthesize+decode — r11, guide §4: the chained two-operator form
-    shipped every JPEG payload across the JVM<->Python boundary twice;
-    the fused operator is built from the same two per-doc helpers, so
-    the bytes decoded are identical), map-only — a 100 TB media scan
-    stays shuffle-free; `spread` only widens the tiny fixture scan to
-    all cores. SPARK_GRAFT_JPEG_FUSE=0 restores the chained shape (the
-    r11 A/B switch; alternate inside one session to control host
-    drift)."""
-    apply_runtime_confs(spark)
-    from etl_portofolio_spark.operators.multimodal import (
-        jpeg_pixel_stats,
-        synthesize_jpeg_media,
-        synthesize_jpeg_pixel_stats,
-    )
+    synthesize+decode: the chained two-operator form ships every JPEG
+    payload across the JVM<->Python boundary twice; the fused operator
+    is built from the same two per-doc helpers, so the bytes decoded
+    are identical), map-only — a 100 TB media scan stays shuffle-free;
+    `spread` only widens the tiny fixture scan to all cores."""
+    from etl_portofolio_spark.operators.multimodal import synthesize_jpeg_pixel_stats
     from etl_portofolio_spark.operators.util import spread
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    if os.environ.get("SPARK_GRAFT_JPEG_FUSE", "1") != "1":
-        media = synthesize_jpeg_media(docs, id_col="doc_id", text_col="text")
-        return jpeg_pixel_stats(media, id_col="doc_id", bin_col="content")
     return synthesize_jpeg_pixel_stats(docs, id_col="doc_id", text_col="text")
 
 
@@ -210,7 +197,6 @@ def q_mcnemar_paired_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale design: ONE combinable aggregation over map-side flags — the
     shuffle carries four cell counts at any corpus size."""
-    apply_runtime_confs(spark)
     a, b = _flag_cols()
     docs = load_table(spark, sf_dir, "documents").select(a, b)
     tab = docs.agg(
@@ -290,7 +276,6 @@ def q_cochran_q_heuristics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale design: map-side flags, ONE combinable aggregation carrying
     six integer moments — O(1) shuffle at any corpus size."""
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators import text
 
     a, b = _flag_cols()
@@ -384,7 +369,9 @@ def _tagged_gram_counts(docs: DataFrame) -> DataFrame:
             F.expr(
                 "concat("
                 " transform(toks, t -> struct(1 AS n, t AS g)),"
-                " transform(slice(toks, 1, size(toks) - 1),"
+                # greatest(.., 0): slice raises on a negative length,
+                # which an empty token array would otherwise produce
+                " transform(slice(toks, 1, greatest(size(toks) - 1, 0)),"
                 "  (t, i) -> struct(2 AS n, concat(t, ' ', toks[i + 1]) AS g)))"
             )
         ).alias("x"),
@@ -553,7 +540,6 @@ def q_rouge_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation. At 100 TB the shuffle carries (pair, n, gram) count
     rows only. Both gram sizes share one census + one merge
     (:func:`_pair_gram_stats_both`)."""
-    apply_runtime_confs(spark)
     return (
         _pair_gram_stats_both(spark, sf_dir)
         .select(
@@ -622,7 +608,6 @@ def q_bleu_ngram_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design: identical pair-keyed aggregation as ROUGE (shared
     one-census helper :func:`_pair_gram_stats_both`), then ONE global
     six-moment reduction — O(1) final shuffle at any corpus size."""
-    apply_runtime_confs(spark)
     m = _pair_gram_stats_both(spark, sf_dir).agg(
         F.sum("ov_uni").cast("long").alias("m1"),
         F.sum("n_hyp_uni").cast("long").alias("t1"),

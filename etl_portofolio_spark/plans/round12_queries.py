@@ -53,7 +53,6 @@ from etl_portofolio_spark.catalog import load_table
 from etl_portofolio_spark.functions.hashing import h60_sql
 from etl_portofolio_spark.plans.oracle_types import oracle_bigint
 from etl_portofolio_spark.plans.round4_queries import _SQL_TOKENS
-from etl_portofolio_spark.session import apply_runtime_confs
 
 ROUND12_QUERIES: dict[
     str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
@@ -92,7 +91,6 @@ def q_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-doc cost is O(tokens * w); fingerprints per doc are bounded
     between n/w and n, so output stays linear in corpus size.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators import text
 
     K, W = _WINNOW_K, _WINNOW_W
@@ -209,7 +207,6 @@ def q_jensen_shannon_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame
     (token) join, never a window over fact rows. No global windows,
     no driver collection.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators import text
 
     # NO spread here, deliberately (r10 A/B): the token census ``st``
@@ -331,7 +328,6 @@ def q_runs_test_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     one combinable aggregation; the sign/lag sequence and the final
     fold run on the bounded panel (~2.4k rows at any corpus size).
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.plans.analytics_queries import cents
 
     orders = load_table(spark, sf_dir, "orders")
@@ -446,7 +442,6 @@ def q_ks_wasserstein_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded quantity domain (~50 distinct values); every window below
     runs on that bounded panel.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").where(
         F.col("l_returnflag").isin("R", "N")
     )
@@ -589,7 +584,6 @@ def q_theil_index_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join; nation panels (25 rows) fold map-side. No windows, no
     driver collection.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.plans.analytics_queries import cents
 
     orders = load_table(spark, sf_dir, "orders")
@@ -696,7 +690,6 @@ def q_gumbel_block_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded month panel (~80 rows) folds to a single row —
     nothing after the first shuffle grows with data.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.plans.analytics_queries import cents
 
     orders = load_table(spark, sf_dir, "orders")
@@ -791,7 +784,6 @@ def q_simpson_diversity_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design: one fact-scale combinable (lang, source) census; the
     panel after it is bounded by |langs|·|sources|. No windows.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     ls = docs.groupBy("lang", "source").agg(
         F.count(F.lit(1)).cast("long").alias("c")
@@ -869,7 +861,6 @@ def q_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     head (k = 100 at any corpus size), and everything after runs on
     that panel. No fact-scale windows or joins.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.plans.analytics_queries import cents
 
     orders = load_table(spark, sf_dir, "orders")

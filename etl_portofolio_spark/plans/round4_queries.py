@@ -19,7 +19,6 @@ from etl_portofolio_spark.operators import text
 from etl_portofolio_spark.operators.dedup import normalized_text
 from etl_portofolio_spark.plans.analytics_queries import _sql_cents, cents
 from etl_portofolio_spark.plans.extension_queries import _CDC_CUT_NEW, _CDC_CUT_OLD
-from etl_portofolio_spark.session import apply_runtime_confs
 
 #: DuckDB twin of text.tokens() — whitespace tokens of lowercased text.
 _SQL_TOKENS = r"regexp_split_to_array(lower(trim({col})), '\s+')"
@@ -47,7 +46,6 @@ def q_market_share_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem⋈orders becomes the one real exchange). The p_type filter
     prunes the probe side at the scan.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -142,7 +140,6 @@ def q_equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     collection is ``approx_percentile`` (see quantile_sketch_gate) —
     this exact form is for when bucket counts must be exact.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", cents("o_totalprice").alias("price_c")
     )
@@ -191,7 +188,6 @@ def q_text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimals (the sum over distinct tokens is order-sensitive in the
     last double ulp).
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.explode(text.tokens("text")).alias("tok")
@@ -250,7 +246,6 @@ def q_event_throttle_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from etl_portofolio_spark.operators.throttle import throttle_events
 
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events")
     return throttle_events(
         ev,
@@ -289,7 +284,6 @@ def q_price_trend_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast part join — the shape that lets a 100 TB fact table
     stream through without a second pass.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     x = F.col("l_quantity").cast("long")
@@ -350,7 +344,6 @@ def q_partition_zonemap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the distinct-user count is the only true shuffle and is exact here
     (the sketch variant is ``approx_distinct_gate``).
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.select(
@@ -397,7 +390,6 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     salting. Output is the survivor manifest (group key, kept doc,
     duplicates absorbed).
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     hashed = docs.select(
         "doc_id",
@@ -462,7 +454,6 @@ def q_dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingled_docs,
     )
 
-    apply_runtime_confs(spark)
     docs_raw = load_table(spark, sf_dir, "documents")
     # three plan branches (signatures + both verification sides) read the
     # shingled frame — persist so shingling runs once; the cache manager
@@ -577,7 +568,6 @@ def q_unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from etl_portofolio_spark.caching import scoped_persist
 
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(text.tokens("text")).alias("tok"))
     doc_tok = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c_doc"))
@@ -649,7 +639,6 @@ def q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from etl_portofolio_spark.operators import similarity
 
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     truth = similarity.brute_force_topk(
         emb, query_ids=tuple(range(_RECALL_QUERIES)), k=_RECALL_K
@@ -738,7 +727,6 @@ def q_doc_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     result set stays narrow; the dedup twin that operates on chunk
     CONTENT is ``dedup_paragraph_chunks``.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     return text.chunk_manifest(
         docs, "doc_id", "text", window=_CHUNK_W, stride=_CHUNK_S
@@ -793,7 +781,6 @@ def q_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingled_docs,
     )
 
-    apply_runtime_confs(spark)
     docs_raw = load_table(spark, sf_dir, "documents")
     docs = scoped_persist(shingled_docs(docs_raw, "doc_id", "text"))
     sig = scoped_persist(minhash_signatures_from_shingles(docs, "doc_id"))
@@ -905,7 +892,6 @@ def q_dedup_cluster_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from etl_portofolio_spark.operators import dedup as D
 
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     pairs = D.minhash_candidate_pairs(docs, "doc_id", "text", threshold=0.7)
     cc = D.connected_components(pairs).select(
@@ -990,7 +976,6 @@ def q_ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/similarity.ivf_multiprobe_topk)."""
     from etl_portofolio_spark.operators import similarity
 
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     out = similarity.ivf_multiprobe_topk(
         emb,
@@ -1059,7 +1044,6 @@ def q_referential_integrity_report(spark: SparkSession, sf_dir: str) -> DataFram
     is a union of three 1-row aggregates (each branch prunes to its
     key columns at the scan).
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -1120,7 +1104,6 @@ def q_schema_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r4 verdict nit: the previous o_orderstatus count was trivially
     zero).
     """
-    apply_runtime_confs(spark)
     base = load_table(spark, sf_dir, "orders")
 
     def stats(df, tag):
@@ -1206,7 +1189,6 @@ def q_brand_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair. Deterministic top-20 via total order (count desc, brand
     pair asc).
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     ob = (
@@ -1261,7 +1243,6 @@ def q_brand_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from etl_portofolio_spark.operators.graph import pagerank
 
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     ob = (
@@ -1331,7 +1312,6 @@ def q_multi_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     and no float shares for engines to disagree on. One interval
     equi-join + one count window over the purchase key.
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events")
     clicks = ev.where(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_user"),

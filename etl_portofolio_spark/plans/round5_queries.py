@@ -19,7 +19,6 @@ from etl_portofolio_spark.plans.round4_queries import (
     _N_DEPTH_BUCKETS,
     ORACLE_EQUI_DEPTH,
 )
-from etl_portofolio_spark.session import apply_runtime_confs
 
 # --- exact equi-depth without a global sort ----------------------------------
 
@@ -52,7 +51,6 @@ def q_equi_depth_exact_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a pure function of the row and the (deterministic) min/max agg,
     never of physical partitioning.
     """
-    apply_runtime_confs(spark)
     B = _N_DEPTH_BUCKETS
     P = _DEPTH_PREBINS
     orders = load_table(spark, sf_dir, "orders").select(
@@ -131,12 +129,9 @@ def q_kl_divergence_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_portofolio_spark.caching import scoped_persist
     from etl_portofolio_spark.operators import text
 
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
-    # NO spread_by(doc_id) at the scan, deliberately (r11 A/B,
-    # alternating SPARK_GRAFT_SPREAD_BY in one session, 32 cores:
-    # spread min 1.008 / med 1.190 vs none min 0.982 / med 1.059 —
-    # LOST). The 1-task tokenize+census chain the spread parallelizes
+    # NO spread_by(doc_id) at the scan, deliberately (measured slower).
+    # The 1-task tokenize+census chain the spread parallelizes
     # is only ~0.5 s of a wall dominated by the window-by-token
     # exchange that follows either way; the extra exchange costs more
     # than the parallelism buys at this SF, and production scans split
@@ -224,7 +219,6 @@ def q_embedding_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from etl_portofolio_spark.operators.similarity import int8_quantize_audit
 
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return int8_quantize_audit(emb, err_gate=_QUANT_ERR_GATE)
 
@@ -276,7 +270,6 @@ def q_simhash_accuracy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_portofolio_spark.caching import scoped_persist
     from etl_portofolio_spark.operators import dedup as D
 
-    apply_runtime_confs(spark)
     docs_raw = load_table(spark, sf_dir, "documents")
     pairs = D.simhash_near_pairs(
         docs_raw, "doc_id", "text", max_hamming=_SIMHASH_EVAL_HAMMING
@@ -358,7 +351,6 @@ def q_asof_tolerance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to the unbounded variant. Gap in whole seconds (both
     engines floor the epoch before differencing).
     """
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     both = events.where(F.col("event_type").isin("click", "signup"))
     w = (
@@ -419,7 +411,6 @@ def q_heavy_hitter_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     (never a full global sort) and a broadcast scalar for the share.
     Deterministic under count ties via the key tiebreak.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     cnt = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n_rows"))
     total = li.agg(F.count(F.lit(1)).alias("n_total"))
@@ -472,7 +463,6 @@ def q_audio_window_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from etl_portofolio_spark.operators.util import spread
 
-    apply_runtime_confs(spark)
     docs = spread(load_table(spark, sf_dir, "documents"))
     audio = synthesize_ramp_audio(docs, id_col="doc_id")
     return audio_window_energy(audio, id_col="doc_id", window=64)
@@ -514,7 +504,6 @@ def q_curriculum_phase_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from etl_portofolio_spark.operators import text
 
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     per = docs.select(
         "doc_id", "lang", text.token_count_ws("text").cast("long").alias("n_tokens")
@@ -578,7 +567,6 @@ def q_label_dispersion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast) into ONE posexplode + ONE combinable aggregation per
     (label, dim) + a metadata-scale rollup to labels. Rounded to 6.
     """
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "label", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -701,7 +689,6 @@ def q_brand_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     power-law graphs (the hub's wedges are counted from its low-id
     side only). Integer counts end-to-end.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     ob = (
@@ -769,7 +756,6 @@ def q_idf_rare_token_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from etl_portofolio_spark.operators.dedup import shingled_docs
 
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     grams = shingled_docs(docs, "doc_id", "text").select(
         "doc_id", F.explode("sh_set").alias("g")
@@ -838,7 +824,6 @@ def q_ann_first_hit_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from etl_portofolio_spark.operators import similarity
 
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     truth = similarity.brute_force_topk(
         emb, query_ids=tuple(range(_MRR_QUERIES)), k=_MRR_K
@@ -924,7 +909,6 @@ def q_kmeans_update_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from etl_portofolio_spark.operators.similarity import ivf_assign
 
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     assigned = ivf_assign(emb, num_centroids=8)
     ex = assigned.select("cluster_id", F.posexplode("v").alias("dim", "val"))
@@ -983,7 +967,6 @@ def q_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_portofolio_spark.operators.dedup import shingled_docs
     from etl_portofolio_spark.plans.pipeline_queries import _DECON_K, _EVAL_MOD
 
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     flagged = docs.withColumn("__is_eval", F.col("doc_id") % _EVAL_MOD == 0)
     grams = scoped_persist(
@@ -1061,7 +1044,6 @@ def q_brand_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from etl_portofolio_spark.operators.graph import pagerank
 
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     ob = (
@@ -1135,7 +1117,6 @@ def q_tokenizer_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from etl_portofolio_spark.operators import text
 
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     per = docs.select(
         "lang",

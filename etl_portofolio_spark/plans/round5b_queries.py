@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 
 from etl_portofolio_spark.catalog import load_table
 from etl_portofolio_spark.plans.analytics_queries import _sql_cents, cents
-from etl_portofolio_spark.session import apply_runtime_confs
 
 # ---------------------------------------------------------------------------
 # Q2 shape: per-part minimum-cost supplier (correlated MIN -> agg+join)
@@ -59,7 +58,6 @@ def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier→nation→region is broadcast (constant-size); the part
     filter (p_size) prunes the probe side before the join.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     supplier = load_table(spark, sf_dir, "supplier")
@@ -139,7 +137,6 @@ def q_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame
     map-side partials collapse it).  At 100 TB the first agg dominates
     and is one exchange; nothing is collected.
     """
-    apply_runtime_confs(spark)
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     per_cust = (
@@ -190,7 +187,6 @@ def q_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer 1e-4 cents so the equality compare is exact on both
     engines.  Ties would all be returned, matching the oracle.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     supplier = load_table(spark, sf_dir, "supplier")
     rev = (
@@ -251,7 +247,6 @@ def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded from an exact integer-cents sum via an identical
     expression tree on both engines.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").withColumn(
         "qty_l", F.col("l_quantity").cast("long")
     )
@@ -318,7 +313,6 @@ def q_large_order_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny (top ~0.3% of orders), so AQE broadcasts it into the
     orders/customer joins at any scale.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
@@ -385,7 +379,6 @@ def q_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same answers, one-third the shuffled bytes — at 100 TB the Expand
     form shuffles 3 copies of the joined fact table.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     supplier = load_table(spark, sf_dir, "supplier")
@@ -461,7 +454,6 @@ def q_idle_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     table); the left side is customer-scale, both hash-partitioned on
     custkey.
     """
-    apply_runtime_confs(spark)
     customer = load_table(spark, sf_dir, "customer").withColumn(
         "bal_c", cents("c_acctbal")
     )
@@ -542,7 +534,6 @@ def q_returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the orderkey/custkey spine; nation broadcasts.  Revenue in exact
     1e-4 cents so ordering ties are impossible across engines.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
@@ -602,7 +593,6 @@ def q_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     countDistinct shuffles (brand, size, suppkey) once with map-side
     partial dedup.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     supplier = load_table(spark, sf_dir, "supplier")
@@ -656,7 +646,6 @@ def q_excess_stock_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     is keyed; nothing correlates per outer row.  The nation broadcast
     caps the output dimension.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     supplier = load_table(spark, sf_dir, "supplier")
@@ -742,7 +731,6 @@ def q_product_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     intermediate) is left to the optimizer and pinned by the runtime
     bloom/broadcast tests rather than hints.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     supplier = load_table(spark, sf_dir, "supplier")

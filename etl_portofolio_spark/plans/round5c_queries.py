@@ -28,7 +28,6 @@ from etl_portofolio_spark.plans.pipeline_queries import (
     _sql_band_hash,
     _sql_minhash_aggs,
 )
-from etl_portofolio_spark.session import apply_runtime_confs
 
 # ---------------------------------------------------------------------------
 # Benford first-significant-digit audit
@@ -46,7 +45,6 @@ def q_benford_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant digits).  One groupBy over a 9-value domain: map-side
     partials collapse it; the total enters as a broadcast scalar.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     digits = (
         orders.where(F.col("o_totalprice") > 0)
@@ -103,7 +101,6 @@ def q_lsh_bucket_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     band width must grow before the pairs join is launched (the
     round-2 8-bit-simhash lesson, now a query instead of a postmortem).
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     sig = dedup.minhash_signatures(docs, "doc_id", "text")
     bands = dedup.minhash_bands(sig, "doc_id")
@@ -181,7 +178,6 @@ def q_weighted_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pick count: picks = floor(cum_hi/stride) − floor(cum_lo/stride)
     (stride points at s·k, k ≥ 1) — pure integer arithmetic.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("n_chars").cast("long").alias("w")
     )
@@ -276,7 +272,6 @@ def q_token_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast scalar.  PMI = ln(N·c12/(c1·c2)), doubles only in the
     final rounded projection.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     doc_tok = docs.select(
         "doc_id", F.explode(F.array_distinct(text.tokens("text"))).alias("tok")
@@ -348,7 +343,6 @@ def q_bigram_surprise_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     surprise = ln(c(w₁·)) − ln(c(w₁w₂)); per-doc double sum rounded
     to 6 (order ulps don't survive).
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.posexplode(text.tokens("text")).alias("pos", "w1")
@@ -427,7 +421,6 @@ def q_interval_overlap_campaigns(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side generation.  Overlap seconds use floor-epoch integers
     (both engines floor identically).
     """
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     spans = events.groupBy(
         "user_id", F.to_date("ts").alias("day")
@@ -545,7 +538,6 @@ def q_heavy_hitters_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from etl_portofolio_spark.operators import skew
 
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     return skew.heavy_hitters_exact_via_sketch(events, "event_type", _MG_DENOM)
 
@@ -578,7 +570,6 @@ def q_text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximation cancels in the hash check). Map-only, zero-shuffle
     plan; the formula is one rounded double from integer counts.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     t = F.lower(F.trim(F.col("text")))
     words = F.regexp_count(t, F.lit(r"\s+")) + F.lit(1)
@@ -639,7 +630,6 @@ def q_variant_props_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: per event_type, decile-bucket histogram of the extracted
     metric — integers only.
     """
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     v = events.withColumn("props_v", F.parse_json("props"))
     k = F.variant_get(F.col("props_v"), "$.k", "int")
@@ -686,7 +676,6 @@ def q_k_anonymity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     generalization decisions consume this report; the query stays a
     pure audit.
     """
-    apply_runtime_confs(spark)
     customer = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
     return (
@@ -746,7 +735,6 @@ def q_geo_proximity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from etl_portofolio_spark.functions.hashing import h32
 
-    apply_runtime_confs(spark)
     customer = load_table(spark, sf_dir, "customer")
     pts = customer.select(
         F.col("c_custkey").alias("id"),

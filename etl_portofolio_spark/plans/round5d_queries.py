@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from etl_portofolio_spark.catalog import load_table
 from etl_portofolio_spark.operators import similarity
-from etl_portofolio_spark.session import apply_runtime_confs
 
 _PQ_QUERIES = (20, 21, 22, 23, 24)
 _PQ_K = 5
@@ -118,7 +117,6 @@ def q_ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     over float32 vectors) and full vectors are fetched for just
     |Q| x 100 id-keyed rows — which is the whole point of PQ serving.
     """
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.pq_search_topk(
         emb, query_ids=_PQ_QUERIES, k=_PQ_K, shortlist=_PQ_SHORTLIST
@@ -154,7 +152,6 @@ def q_ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     escapes; this query IS the dial for the shortlist size. Integer-
     only output, so the hash check is trivially stable.
     """
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     approx = similarity.pq_search_topk(
         emb, query_ids=_PQ_QUERIES, k=_PQ_K, shortlist=_PQ_SHORTLIST
@@ -260,7 +257,6 @@ def q_semantic_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from etl_portofolio_spark.caching import scoped_persist
 
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     assigned = scoped_persist(similarity.ivf_assign(emb))
     a = assigned.select(
@@ -356,7 +352,6 @@ def q_part_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle check it. The fixpoint variant (rounds=None) is the
     operator's production mode, convergence-tested separately.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     op = li.select("l_orderkey", "l_partkey").distinct()
     a = op.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))

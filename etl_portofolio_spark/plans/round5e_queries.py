@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from etl_portofolio_spark.catalog import load_table
 from etl_portofolio_spark.plans.analytics_queries import _sql_cents, cents
-from etl_portofolio_spark.session import apply_runtime_confs
 
 # ---------------------------------------------------------------------------
 # RFM segmentation via broadcast quantile thresholds
@@ -39,7 +38,6 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     Recency is days-since-last-order against the corpus max date
     (broadcast scalar), so LOWER r_days means a fresher customer.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     per_cust = orders.groupBy("o_custkey").agg(
         F.max(F.to_date("o_orderdate")).alias("last_day"),
@@ -146,7 +144,6 @@ def q_incremental_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     Every term is the same keyed equi-join on orderkey; the date
     splits push into both scans as pushed filters.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority", "o_orderdate"
     )
@@ -217,7 +214,6 @@ def q_seasonal_naive_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     domains after the first fact-scale groupBy; train/test split
     prunes by date at the scan.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.sum(cents("o_totalprice")).alias("rev_c")
@@ -289,7 +285,6 @@ def q_event_count_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two aggregations, both map-side combinable; the per-type stats
     frame is |types| rows and broadcasts into the flag pass.
     """
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     daily = events.groupBy(
         "event_type", F.to_date("ts").alias("day")
@@ -358,7 +353,6 @@ def q_column_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     (approx_count_distinct) is the default there, with this exact
     query as its audit twin (the ``approx_distinct_gate`` pattern).
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     cols = [
         "o_orderkey",
@@ -437,7 +431,6 @@ def q_props_map_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality (like every bounded fan-out in this engine); one
     combinable aggregation per key follows.
     """
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     kv = events.select(
         F.explode(F.from_json("props", "map<string,bigint>")).alias("key", "val")

@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 
 from etl_portofolio_spark.catalog import load_table
 from etl_portofolio_spark.plans.analytics_queries import _sql_cents, cents
-from etl_portofolio_spark.session import apply_runtime_confs
 
 # ---------------------------------------------------------------------------
 # Q4 shape: order-priority checking (EXISTS -> semi join with residual)
@@ -47,7 +46,6 @@ def q_late_order_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside the join — no second scan, no per-order re-probe. The date
     window prunes the orders scan (PushedFilters) before the join.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit(_Q4_FROM))
         & (F.col("o_orderdate") < F.lit(_Q4_TO))
@@ -103,7 +101,6 @@ def q_forecast_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     DERIVED integer, not the stored double, so the boundary rows are
     engine-independent by construction.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     bps = F.round(F.col("l_discount") * 100, 0).cast("long")
     return (
@@ -154,7 +151,6 @@ def q_important_part_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain BEFORE the per-part shuffle, so the aggregation only touches
     that nation's lines.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     supplier = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation").where(
@@ -217,7 +213,6 @@ def q_shipmode_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     two combinable sums, never two passes.  The shipdate window prunes
     the lineitem scan before the join.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit(_Q12_FROM))
         & (F.col("l_shipdate") < F.lit(_Q12_TO))
@@ -268,7 +263,6 @@ def q_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     on any engine, at any partitioning.  The part join carries no hint:
     AQE broadcasts at small SF and shuffle-hashes at scale.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit(_Q14_FROM))
         & (F.col("l_shipdate") < F.lit(_Q14_TO))

@@ -24,7 +24,6 @@ from etl_portofolio_spark.catalog import load_table
 from etl_portofolio_spark.operators import text
 from etl_portofolio_spark.plans.analytics_queries import cents
 from etl_portofolio_spark.plans.pipeline_queries import _SQL_TOKENS
-from etl_portofolio_spark.session import apply_runtime_confs
 
 # ---------------------------------------------------------------------------
 # BM25 top-k retrieval
@@ -58,7 +57,6 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from etl_portofolio_spark.caching import scoped_persist
 
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     arr = docs.select("doc_id", text.tokens("text").alias("toks"))
     toks = arr.select(
@@ -189,7 +187,6 @@ def q_embedding_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent, the house rule for double sums.  One combinable
     groupBy on the label; map-only before it.
     """
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     sumsq = F.aggregate(
         "embedding",
@@ -255,7 +252,6 @@ def q_length_bucket_padding(spark: SparkSession, sf_dir: str) -> DataFrame:
     float log anywhere near a boundary).  One combinable groupBy over
     ~a dozen buckets; everything before it is map-only.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     n = text.token_count_ws("text").cast("long")
     # ceil_pow2(n) = 1 << bit_length(n-1); bit_length via the hex trick
@@ -341,7 +337,6 @@ def q_daily_revenue_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     Excluding the current day from its own baseline keeps the
     detector sensitive to single-day spikes.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.col("o_orderdate").alias("day")).agg(
         F.sum(cents("o_totalprice")).alias("rev_c")
@@ -447,7 +442,6 @@ def q_histogram_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     double, rounded to 6. At 100 TB each snapshot pass is one scan;
     the report is O(bands).
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     c = cents("o_totalprice")
     band = F.lit(len(_PSI_EDGES_C))
@@ -548,7 +542,6 @@ def q_fd_violation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the audits run as parallel stages of one job, never a
     cross-FD join.
     """
-    apply_runtime_confs(spark)
     out = None
     for name, table, lhs, rhs in _FD_CANDIDATES:
         df = load_table(spark, sf_dir, table)

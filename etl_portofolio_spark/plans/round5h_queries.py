@@ -19,7 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_portofolio_spark.catalog import load_table
-from etl_portofolio_spark.session import apply_runtime_confs
 
 #: week index anchor — a constant DATE, so the week bucketing is plain
 #: integer datediff arithmetic in both engines
@@ -41,7 +40,6 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     Week index = days-since-anchor DIV 7: integer arithmetic, no
     calendar-week convention to disagree on.
     """
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     # floor(), not cast("long"): cast truncates toward zero, so a
     # pre-epoch event (negative datediff) would land one week late vs
@@ -128,7 +126,6 @@ def q_revenue_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression from those exact scalars, rounded to 6.  Lags union
     into a 3-row report.
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     from etl_portofolio_spark.plans.analytics_queries import cents
@@ -218,7 +215,6 @@ def q_user_state_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE partitioning (user_id) — Catalyst plans them in one sort of
     one exchange; nothing global, nothing quadratic.
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     events = load_table(spark, sf_dir, "events")
@@ -290,7 +286,6 @@ def q_pit_state_at_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the user's first state event drop (inner join), which the
     oracle mirrors.
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     events = load_table(spark, sf_dir, "events")
@@ -367,7 +362,6 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-anchor panel — the pair-mining pass that assembles contrastive
     training batches for an embedding model (`operators/similarity.
     hard_negative_mining`; broadcast panel, corpus never shuffles)."""
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators import similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -423,7 +417,6 @@ def q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     one combinable groupBy over the |langs|² domain; the per-declared
     row share attaches as a window sum over that tiny frame.
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     from etl_portofolio_spark.operators import text as text_ops
@@ -492,7 +485,6 @@ def q_dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     source) — the same two-level discipline as ``table_profile``'s
     distincts, never a countDistinct Expand next to other aggregates.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     per_hash = docs.select(
         "source", F.md5(F.col("text")).alias("h")
@@ -549,7 +541,6 @@ def q_label_centroid_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation, converting to double only for the final
     divide-and-sqrt, rounded to 6.
     """
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     comps = emb.select(
         "label", F.posexplode("embedding").alias("dim", "x")
@@ -660,7 +651,6 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct passes are the honest cost of exactness; a production
     profiler swaps them for HLL sketches in the same report shape.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     norm = {
         c: (
@@ -740,7 +730,6 @@ def q_supplier_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem × broadcast(supplier); the HHI collapse is a second
     groupBy over |suppliers| rows.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.plans.analytics_queries import cents
 
     lineitem = load_table(spark, sf_dir, "lineitem")
@@ -817,7 +806,6 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     precision 38); the five regression sums are then exact, and the
     slope/intercept are the only unrounded doubles, emitted at 6.
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     from etl_portofolio_spark.operators import text
@@ -931,7 +919,6 @@ def q_unicode_normalization_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     ASCII fixture) is the healthy verdict, same contract as the
     integrity audits.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators import text as text_ops
 
     docs = load_table(spark, sf_dir, "documents")
@@ -986,7 +973,6 @@ def q_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-safe-rounding pattern.  Day-frame windows only —
     calendar-bounded, the ``daily_revenue_anomaly`` scale argument.
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     from etl_portofolio_spark.plans.analytics_queries import cents
@@ -1097,7 +1083,6 @@ def q_quantity_price_mutual_information(
     exact integer counts in one identical expression tree, rounded
     to 6.  Band edges are integer constants — no quantile coupling.
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     from etl_portofolio_spark.plans.analytics_queries import cents
@@ -1201,7 +1186,6 @@ def q_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the plain global-window form; the hash match proves the
     decomposition exact.
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     from etl_portofolio_spark.plans.analytics_queries import cents
@@ -1298,7 +1282,6 @@ def q_theilsen_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     Never a global sort, never a per-pair BigDecimal.  Output: one row
     (n_pairs, the median slope in cents/day).
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.caching import scoped_persist
     from etl_portofolio_spark.plans.analytics_queries import cents
 
@@ -1425,7 +1408,6 @@ def q_conversion_latency_histogram(
     floor-epoch differences, a capped overflow bucket so the domain
     stays bounded, one combinable groupBy over ≤49 buckets.
     """
-    apply_runtime_confs(spark)
     events = load_table(spark, sf_dir, "events")
     ev = events.select("user_id", "event_type", "ts")
     t1 = ev.where(F.col("event_type") == "view").groupBy("user_id").agg(
@@ -1492,7 +1474,6 @@ def q_growth_accounting_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-week churn arrivals) full-outer-joined on the week.  Weeks are
     integer days-since-anchor DIV 7 (no calendar conventions).
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     events = load_table(spark, sf_dir, "events")

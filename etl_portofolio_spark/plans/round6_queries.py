@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from etl_portofolio_spark.catalog import load_table
 from etl_portofolio_spark.plans.analytics_queries import cents
 from etl_portofolio_spark.plans.oracle_types import oracle_bigint
-from etl_portofolio_spark.session import apply_runtime_confs
 
 def _round_half_up(x: float, k: int) -> float:
     """Driver-side scalar rounding matching Spark's F.round / DuckDB's
@@ -74,7 +73,6 @@ def q_zonemap_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     count.  This is the same file-level skipping contract as Delta
     stats / Iceberg manifests.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.sinks.writer import write_range_clustered
     from etl_portofolio_spark.sources.skipping import skipping_scan
 
@@ -134,7 +132,6 @@ def q_wap_time_travel_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded).  Publishing is the audited atomic-pointer protocol —
     no reader ever sees a partial snapshot.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.sinks.writer import (
         publish_snapshot,
         read_snapshot,
@@ -254,7 +251,6 @@ def q_pareto_frontier_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     same-band dominator B that was itself pre-filtered implies a
     higher-band C with C.n <= B.n <= A.n, which pre-filters A too.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     cust = orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
         F.sum(cents("o_totalprice")).alias("rev_cents"),
@@ -341,7 +337,6 @@ def q_revenue_bridge_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partials all the way; unit prices are the only doubles
     and they derive from identical integer sums in both engines.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
@@ -450,7 +445,6 @@ def q_abc_pareto_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative-share classification.  Ties rank by part key, so the
     class boundary is bit-deterministic in both engines.
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -541,7 +535,6 @@ def q_prorated_revenue_by_shipmode(
     shipmode column in this fixture, so the mode derives
     deterministically from the line number (stable across engines).
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -648,7 +641,6 @@ def q_boilerplate_gram_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline of `operators/dedup.py:101` (same tokenizer, so the
     oracle's split expression matches exactly).
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators.dedup import shingled_docs
 
     docs = load_table(spark, sf_dir, "documents")
@@ -657,22 +649,12 @@ def q_boilerplate_gram_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source", F.explode("sh_set").alias("g"))
         .select("doc_id", "source", F.md5("g").alias("gh"))
     )
-    # NO scoped_persist of the gram frame, deliberately (r11 A/B,
-    # alternating SPARK_GRAFT_BP_PERSIST in one session, 32 cores,
-    # 8 rounds: persist min 1.221 / med 1.396 vs recompute min 1.074 /
-    # med 1.335 — recompute WINS). The two consumers (df_counts, the
-    # join probe side) each re-run the map-only tokenize+shingle+md5
-    # scan into their own exchange, which beats materializing a
-    # fact-scale gram cache — the same lesson as the r11-wave rouge
-    # census persist (cache write + codegen pipeline break cost more
-    # than the replay), and strictly safer at 100 TB where the cache
-    # would spill. SPARK_GRAFT_BP_PERSIST=1 restores the cached form.
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_BP_PERSIST", "0") == "1":
-        from etl_portofolio_spark.caching import scoped_persist
-
-        grams = scoped_persist(grams)
+    # NO scoped_persist of the gram frame, deliberately (measured
+    # slower). The two consumers (df_counts, the join probe side) each
+    # re-run the map-only tokenize+shingle+md5 scan into their own
+    # exchange, which beats materializing a fact-scale gram cache
+    # (cache write + codegen pipeline break cost more than the replay),
+    # and is strictly safer at 100 TB where the cache would spill.
     df_counts = grams.groupBy("gh").agg(
         F.count(F.lit(1)).alias("n_docs_gram")  # rows are doc-distinct
     )
@@ -758,7 +740,6 @@ def q_embedding_covariance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Covariances round to 6 BEFORE the top-k ordering (the established
     cross-engine ranking rule); k rows ride TakeOrderedAndProject.
     """
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     comps = emb.select(
         "vec_id",
@@ -881,7 +862,6 @@ def q_order_backlog_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     and closes share a date cancel to zero and still appear (backlog
     unchanged), keeping the spine dense over active days.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.to_date("o_orderdate").alias("start_d")
     )
@@ -949,7 +929,6 @@ def q_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     seconds stay below 9.2e14 (≈29M years of per-user gaps), vs ~1e15
     cents-seconds for the naive `(s*1e4) div d`.
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -1026,7 +1005,6 @@ def q_orderkey_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     that tiny list and unioned in as literal rows.  The oracle is the
     textbook global lead().
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     keys = load_table(spark, sf_dir, "orders").select(
@@ -1106,7 +1084,6 @@ def q_bloom_pruned_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     files regardless of table size — the Delta/ORC bloom_filter_columns
     contract from plain Spark + parquet.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.sources.bloomindex import (
         _BLOOM_DIR,
         bloom_point_lookup,
@@ -1167,7 +1144,6 @@ def q_mv_rollup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     rejected at CREATE time (not re-aggregable) — the containment
     rules live in `answer_from_mv`.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.sinks.matview import (
         answer_from_mv,
         create_rollup_mv,
@@ -1250,7 +1226,6 @@ def q_rolling_median_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (calendar-bounded), never fact rows, and the array work
     is whole-stage-codegen built-ins.
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders")
@@ -1306,7 +1281,6 @@ def q_purchase_gap_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     would switch to the prebin rank decomposition
     (`equi_depth_exact_scalable`) — documented tradeoff.
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -1374,7 +1348,6 @@ def q_dp_noisy_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule).  Counts are exact pre-noise; the noisy value rounds to 4.
     Scale: pure map-side math over an already-aggregated frame.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     counts = orders.groupBy(
         F.col("o_orderpriority").alias("priority")
@@ -1432,7 +1405,6 @@ def q_masked_customer_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     ever leaves unmasked.  Deterministic by construction, so the
     masked export is reproducible and oracle-checkable.
     """
-    apply_runtime_confs(spark)
     cust = load_table(spark, sf_dir, "customer")
     return cust.select(
         F.md5(F.concat(F.col("c_name"), F.lit("|mask-salt-1"))).alias(
@@ -1487,7 +1459,6 @@ def q_ab_test_cuped_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     lifts are a handful of double ops on eight scalars — one
     aggregation pass over the user frame, no per-row doubles anywhere.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     yr = F.year("o_orderdate")
     per_user = orders.groupBy(F.col("o_custkey").alias("u")).agg(
@@ -1598,7 +1569,6 @@ def q_conversion_rate_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (correctly-rounded IEEE — cross-engine safe, unlike ln/exp) over
     exact integer counts, rounded to 6.
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events")
     v = ev.where(F.col("event_type") == "view").select(
         "user_id", "ts", (F.col("user_id") % 2).alias("cohort")
@@ -1679,7 +1649,6 @@ def q_brand_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     as tie-break; ratios from exact integer counts, rounded to 6
     before ranking.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     baskets = (
@@ -1774,7 +1743,6 @@ def q_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(38,0)-summed group, and the percentile envelope indexes
     the sorted B-element array.
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     from etl_portofolio_spark.functions.hashing import h32
@@ -1885,7 +1853,6 @@ def q_ewma_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame: O(days × 40) rows total, never fact rows.  Weighted terms
     round to 6 into DECIMAL(38,6) before summing (order-independent).
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.sum(cents("o_totalprice")).alias("rev_c")
@@ -1955,7 +1922,6 @@ def q_brand_rank_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs), not data-bounded, joined from one aggregate of the fact
     table; the τ division happens once on two integers.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
@@ -2054,7 +2020,6 @@ def q_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     The upper-weighted-median convention (first value whose cumulative
     weight >= ceil((W+1)/2)) is pinned in both engines.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         F.round(
             F.col("l_extendedprice") / F.col("l_quantity"), 2
@@ -2158,7 +2123,6 @@ def q_sql_udf_revenue_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests — no Python evaluator node, codegen intact).  The oracle
     inlines the same expressions in DuckDB SQL.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.functions.sqludf import register_sql_functions
 
     register_sql_functions(spark)
@@ -2217,7 +2181,6 @@ def q_xml_roundtrip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor-side Python XML parser in `sources/http_xml.py`, for
     payloads already in a column.
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value", "user_id"
     )
@@ -2278,7 +2241,6 @@ def q_clv_decile_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect), never a corpus-wide ntile sort.  The matrix itself is a
     100-cell aggregate.
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders")
@@ -2375,7 +2337,6 @@ def q_returns_shrunk_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     lives on the line item, the customer arrives via orders — one
     shuffle join on the order key, one groupBy, one top-k.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("ret"),
@@ -2450,7 +2411,6 @@ def q_brand_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     the frontier join shuffles only frontier×degree rows per round and
     the visited set is domain-bounded (brands, not baskets).
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     baskets = (
@@ -2550,7 +2510,6 @@ def q_dup_span_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the source rollup.  Everything is md5 + integers — exact
     DuckDB twin.
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     from etl_portofolio_spark.caching import scoped_persist
@@ -2694,7 +2653,6 @@ def q_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the top-k.  Count ties break lexicographically so both engines
     pick the same 20.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2753,7 +2711,6 @@ def q_ppjoin_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     with).  Windows partition by doc; one shuffle keys the global
     shingle frequencies.
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     from etl_portofolio_spark.caching import scoped_persist

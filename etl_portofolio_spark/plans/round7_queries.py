@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from etl_portofolio_spark.catalog import load_table
 from etl_portofolio_spark.plans.analytics_queries import cents
 from etl_portofolio_spark.plans.oracle_types import oracle_bigint
-from etl_portofolio_spark.session import apply_runtime_confs
 
 ROUND7_QUERIES: dict[
     str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
@@ -51,7 +50,6 @@ def q_chi2_returns_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     — deterministic cross-engine — rounded to 6 on emission
     (magnitudes ~1e6, far inside the safe round() range).
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     cells = li.groupBy("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("obs")
@@ -127,7 +125,6 @@ def q_mannwhitney_quantity_returns(spark: SparkSession, sf_dir: str) -> DataFram
     double, built from integer inputs via IEEE mul/div/sqrt
     (deterministic) and rounded to 6.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").where(
         F.col("l_returnflag").isin("R", "N")
     )
@@ -229,7 +226,6 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     the global total run over that ~2.4k-row frame only.  All math is
     BIGINT (n·cum peaks ~5e15 at sf0.1 — far inside int64).
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.to_date("l_shipdate").alias("day")).agg(
         F.sum(cents("l_extendedprice")).alias("rev_c")
@@ -303,7 +299,6 @@ def q_km_time_to_return(spark: SparkSession, sf_dir: str) -> DataFrame:
     indifferent to the origin — the curve is still the exact product-
     limit estimate over that domain.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.to_date("o_orderdate").alias("odate")
     )
@@ -409,7 +404,6 @@ def q_data_freshness_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast single row.  Timestamps emit as floored unix seconds
     (integers) — cross-engine-safe, no timestamp formatting in play.
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events")
     gmax = ev.agg(F.max("ts").alias("gmax_ts"))
     per_type = (
@@ -488,7 +482,6 @@ def q_edit_distance_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     per block are bounded by the block's cardinality, audited the same
     way as `lsh_bucket_skew_audit`.
     """
-    apply_runtime_confs(spark)
     docs = (
         load_table(spark, sf_dir, "documents")
         .select(
@@ -563,7 +556,6 @@ def q_linear_interpolate_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     run over that frame (~2.4k rows), never fact rows.  At 100× data
     the spine is unchanged — cost tracks the calendar.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     daily = (
@@ -684,7 +676,6 @@ def q_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket, not per token), so each doc's sum is exact decimal
     arithmetic — order- and partition-independent.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.functions.hashing import h32
 
     docs = load_table(spark, sf_dir, "documents")
@@ -780,7 +771,6 @@ def q_adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL before the wedge sum (order-independent); degree-1
     neighbors are excluded (ln(1)=0 has no defined AA weight).
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     ob = (
@@ -896,7 +886,6 @@ def q_sprt_daily_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines); each day's term is integer-weighted IEEE arithmetic
     rounded to 9 into DECIMAL — the running sum is exact.
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events").where(
         F.col("event_type").isin("purchase", "click")
     )
@@ -969,7 +958,6 @@ def q_udtf_token_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design: the UDTF fans out per document on executors (no
     driver loop); downstream is pass-through.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.functions.udtfs import register_udtfs
 
     register_udtfs(spark)
@@ -1016,7 +1004,6 @@ def q_kruskal_wallis_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     H and its tie-corrected form are IEEE arithmetic over those
     integers (deterministic), rounded to 6.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     per_v = li.groupBy(F.col("l_quantity").cast("long").alias("v")).agg(
         F.sum(F.when(F.col("l_returnflag") == "A", 1).otherwise(0)).alias("na_v"),
@@ -1133,7 +1120,6 @@ def q_holt_trend_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(days), unavoidable for a recurrence, and independent of data
     volume.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators.timeseries import holt_linear_cents
 
     orders = load_table(spark, sf_dir, "orders")
@@ -1190,7 +1176,6 @@ def q_zorder_pruned_scan_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     footer-metadata-only, the data read tracks the box's true
     selectivity in BOTH dimensions, independent of table size.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.fixtures import ensure_fixture
     from etl_portofolio_spark.sinks.writer import write_zorder_clustered
     from etl_portofolio_spark.sources.skipping import skipping_scan_multi
@@ -1272,7 +1257,6 @@ def q_tokenizer_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 1024-row vocab against the token stream; the per-source reduce
     is the only other shuffle.  Rates are integer permille.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "source", F.explode(F.split("text", " ")).alias("tok")
@@ -1342,7 +1326,6 @@ def q_l_diversity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     node from a mixed count/countDistinct); the QI-group frame is
     domain-bounded.
     """
-    apply_runtime_confs(spark)
     cust = load_table(spark, sf_dir, "customer")
     bucketed = cust.select(
         "c_nationkey",
@@ -1405,7 +1388,6 @@ def q_sql_script_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     logarithmic in the price domain — O(log(domain)) passes at any
     data size.
     """
-    apply_runtime_confs(spark)
     spark.conf.set("spark.sql.scripting.enabled", "true")
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("r7_orders")
     return spark.sql(
@@ -1497,7 +1479,6 @@ def q_label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFra
     previous labeling — partition-order independent, and exactly
     reproducible by the oracle's unrolled SQL rounds.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.caching import scoped_persist
 
     edges = scoped_persist(_lpa_edges(spark, sf_dir))
@@ -1597,7 +1578,6 @@ def q_ngram_novelty_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed shuffles with map-side combine; the join back is gram-keyed
     equi — never all-pairs.  Rates are integer permille.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     arr = F.filter(F.split("text", " "), lambda t: t != "")
     based = docs.select("doc_id", arr.alias("arr"))
@@ -1683,7 +1663,6 @@ def q_rolling_7d_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     `countDistinct OVER (RANGE 7 days)` would instead re-scan the full
     user set per day inside one task.
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events")
     pairs = ev.select("user_id", F.to_date("ts").alias("d")).distinct()
     days = ev.select(F.to_date("ts").alias("w")).distinct()
@@ -1740,7 +1719,6 @@ def q_time_decay_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-purchase totals and remainder election are one groupBy +
     a per-purchase window over that purchase's own touches.
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events")
     purchases = ev.where(F.col("event_type") == "purchase").select(
         F.col("user_id").alias("u"),
@@ -1854,7 +1832,6 @@ def q_compaction_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch appends — compaction keeps scan task counts bounded by
     data size, not by append frequency.
     """
-    apply_runtime_confs(spark)
     import glob
     import os
 
@@ -1943,7 +1920,6 @@ def q_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite of historical files is ever needed to onboard a widened
     contract.
     """
-    apply_runtime_confs(spark)
     import os
 
     from etl_portofolio_spark.fixtures import ensure_fixture
@@ -2029,7 +2005,6 @@ def q_spearman_quantity_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`stats_corr_exact`), Kendall (`brand_rank_kendall_tau`) and
     mutual information (`quantity_price_mutual_information`).
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_quantity").cast("long").alias("q"),
         F.round(F.col("l_discount") * 100, 0).cast("long").alias("d_bp"),
@@ -2157,7 +2132,6 @@ def q_isotonic_price_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarantee and is pinned by the oracle hash (any violation would
     diverge from the SQL minimax).
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     per_v = li.groupBy(F.col("l_quantity").cast("long").alias("v")).agg(
         F.count(F.lit(1)).alias("w"),
@@ -2264,7 +2238,6 @@ def q_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows over it.  The same shape runs per-source or per-language
     for corpus sampling budgets.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     x = cents("l_extendedprice")
     stats = li.groupBy(F.col("l_returnflag").alias("stratum")).agg(
@@ -2360,7 +2333,6 @@ def q_fd_repair_election(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts → per-key election), the election itself a per-key window
     over that key's own variants (bounded by variant fan-out).
     """
-    apply_runtime_confs(spark)
     part = load_table(spark, sf_dir, "part")
     pairs = part.groupBy("p_type", "p_size").agg(F.count(F.lit(1)).alias("n"))
     win = Window.partitionBy("p_type").orderBy(
@@ -2429,7 +2401,6 @@ def q_quantile_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     curves per source — sort cost bounded by distinct value-cents,
     never event rows.
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events").select(
         F.col("event_type").alias("src"),
         F.round(F.col("value") * 100, 0).cast("long").alias("vc"),
@@ -2552,7 +2523,6 @@ def q_ks_drift_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable groupBy); the CDF merge runs over the union of distinct
     value-cents (domain-bounded); one row out.
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events")
     mid = ev.agg(
         F.to_date(
@@ -2644,7 +2614,6 @@ def q_welch_ttest_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents); t and df are a single IEEE expression over those integers,
     rounded to 6.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").where(
         F.col("l_returnflag").isin("R", "N")
     )
@@ -2742,7 +2711,6 @@ def q_bucketed_join_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     remaining Exchange in the plan belongs to the final small rollup
     only.
     """
-    apply_runtime_confs(spark)
     import hashlib
     import os
 
@@ -2831,6 +2799,10 @@ ROUND7_QUERIES["bucketed_join_colocated"] = (
 # streaming_tumbling_oracle — a REAL streaming run, hash-gated
 # ---------------------------------------------------------------------------
 
+#: State stores per micro-batch: the aggregation's state is bounded by
+#: windows x event types, not by input size (see q_streaming_tumbling_oracle).
+_STREAM_STATE_PARTITIONS = "4"
+
 
 def q_streaming_tumbling_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming executed FOR REAL inside the correctness
@@ -2854,7 +2826,6 @@ def q_streaming_tumbling_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark-bounded state, window aggregation; availableNow is the
     catch-up/backfill trigger.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.fixtures import ensure_fixture
     from etl_portofolio_spark.streaming.structured import (
         read_file_stream,
@@ -2887,7 +2858,6 @@ def q_streaming_tumbling_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = windowed_counts(stream, window="6 hours", lateness="1 day")
     import hashlib
-    import os
 
     sink = f"r7_stream_sink_{hashlib.md5(path.encode()).hexdigest()[:8]}"
     # State-store right-sizing (r10): a streaming aggregation creates
@@ -2897,11 +2867,9 @@ def q_streaming_tumbling_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus size, since the calendar and the type domain do not grow
     # with data), so 32 stores per batch were ~28 empty commits of pure
     # fixed cost. Stores should track STATE size, not input size — the
-    # map side (file splits) is unaffected. Parameterized for clusters
-    # where a wider key domain genuinely needs more stores.
-    n_state = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4")
+    # map side (file splits) is unaffected.
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n_state)
+    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_STATE_PARTITIONS)
     # no-data micro-batches exist to advance the watermark for APPEND-
     # mode finalization; complete mode re-emits full state every batch,
     # so the trailing empty batch is one more round of full machinery
@@ -2966,7 +2934,6 @@ def q_observe_metrics_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (count / integer sum / min / max) — an observe() of a float sum
     would be partition-order-dependent and could never pass this gate.
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Observation
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -3029,7 +2996,6 @@ def q_diff_in_diff_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression rounded to 6.  Per-cell rows emit alongside the
     estimate so the parallel-trends inputs are auditable.
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events")
     cells = ev.groupBy(
         (F.col("user_id") % 2 == 1).cast("int").alias("treated"),
@@ -3130,7 +3096,6 @@ def q_pca_top_eigenvector(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`similarity.py`'s Arrow path) is the drop-in; the plan shape
     here is the declarative twin.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.caching import scoped_persist
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -3224,30 +3189,33 @@ def q_pca_top_eigenvector(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pca_oracle() -> str:
+    # Every CTE is MATERIALIZED: round r reads v{r-1} and n{r}, so an
+    # inlined chain re-expands all earlier rounds (exponential plan; the
+    # un-materialized oracle ran DuckDB out of memory). Same semantics.
     rounds = []
     prev = "v0"
     for r in range(1, _PCA_ROUNDS + 1):
         rounds.append(
-            f""", w{r} AS (
+            f""", w{r} AS MATERIALIZED (
   SELECT c.i, CAST(SUM(CAST(round(c.c * p.v, 12) AS DECIMAL(38,12))) AS DOUBLE) AS w
   FROM cov c JOIN {prev} p ON c.j = p.j GROUP BY 1
-), n{r} AS (
+), n{r} AS MATERIALIZED (
   SELECT sqrt(CAST(SUM(CAST(round(w * w, 12) AS DECIMAL(38,12))) AS DOUBLE)) AS nrm
   FROM w{r}
-), v{r} AS (
+), v{r} AS MATERIALIZED (
   SELECT i AS j, round(w / nrm, 9) AS v FROM w{r}, n{r}
 )"""
         )
         prev = f"v{r}"
     return f"""
-WITH ex AS (
+WITH ex AS MATERIALIZED (
   SELECT vec_id, CAST(u.i - 1 AS INT) AS dim,
          CAST(round(CAST(embedding[u.i] AS DOUBLE), 12) AS DECIMAL(38,12)) AS x
   FROM embeddings, LATERAL unnest(generate_series(1, {_PCA_DIMS})) AS u(i)
-), m AS (
+), m AS MATERIALIZED (
   SELECT dim, CAST(SUM(x) AS DOUBLE) / COUNT(*) AS mu, COUNT(*) AS n
   FROM ex GROUP BY 1
-), cov AS (
+), cov AS MATERIALIZED (
   SELECT a.dim AS i, b.dim AS j,
          CAST(SUM(CAST(round((CAST(a.x AS DOUBLE) - ma.mu)
                              * (CAST(b.x AS DOUBLE) - mb.mu), 12)
@@ -3256,7 +3224,7 @@ WITH ex AS (
   FROM ex a JOIN ex b ON a.vec_id = b.vec_id
   JOIN m ma ON ma.dim = a.dim JOIN m mb ON mb.dim = b.dim
   GROUP BY 1, 2
-), v0 AS (
+), v0 AS MATERIALIZED (
   SELECT dim AS j, 1.0 AS v FROM m
 ){''.join(rounds)}
 SELECT v.j AS dim, round(v.v, 6) AS loading_r6,
@@ -3295,7 +3263,6 @@ def q_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     both scores round to 6 BEFORE ranking (the cross-engine ranking
     rule), ids break ties everywhere.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     lex_score = F.size(
         F.filter(F.split("text", " "), lambda t: t.isin(*_RRF_TERMS))
@@ -3418,7 +3385,6 @@ def q_business_days_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram emits mean scaled to integers (sum/count separately) so
     no float aggregate exists.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", F.to_date("o_orderdate").alias("od")
     )
@@ -3490,7 +3456,6 @@ def q_brand_series_correlation_topk(spark: SparkSession, sf_dir: str) -> DataFra
     to 6 BEFORE the top-k ordering, brand pair breaks ties; only
     pairs with full month overlap and nonzero variance rank.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.caching import scoped_persist
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -3589,7 +3554,6 @@ def q_weekday_seasonality_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     modulo 7 from an epoch Monday — identical in both engines, no
     locale-dependent dayname anywhere.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.sum(cents("o_totalprice")).alias("rev_c")

@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from etl_portofolio_spark.catalog import load_table
 from etl_portofolio_spark.functions.hashing import h32, h32_sql
 from etl_portofolio_spark.plans.oracle_types import oracle_bigint
-from etl_portofolio_spark.session import apply_runtime_confs
 
 ROUND7B_QUERIES: dict[
     str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
@@ -63,7 +62,6 @@ def q_hll_register_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     #keys rows pre-shuffle, keyed by 64 registers with uniform md5
     routing — no hot key possible).  The output frame is 64 rows.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     ck = F.col("o_custkey").cast("string")
     keyed = orders.select(
@@ -126,7 +124,6 @@ def q_mrr_label_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort is parallel across the panel and never global; scores round
     to 6 before ranking, ids break ties.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators.similarity import _dvec, cosine_fold_pd
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -233,7 +230,6 @@ def q_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic cross-engine; the oracle replays the same 4 rounds
     as unrolled CTEs.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators.similarity import (
         _dvec,
         cosine,
@@ -372,7 +368,6 @@ def q_sink_partition_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path (K3); the readback is one map-side-combinable aggregate per
     partition.  Only the ≤31-day boundary pick is driver-side.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.fixtures import ensure_fixture
     from etl_portofolio_spark.sinks.writer import write_partitioned
 
@@ -441,7 +436,6 @@ def q_xml_api_window_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     parsed into doubles losslessly, so the SUMs are exact at any scale
     (< 2^53) and emit as BIGINT.
     """
-    apply_runtime_confs(spark)
     import os as _os
 
     from etl_portofolio_spark.sources.http_xml import register_xml_api
@@ -515,7 +509,6 @@ def q_jdbc_stripe_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     executing INSIDE the database; only the 1-row clock-bounds probe is
     driver-side.  Values are integers end to end.
     """
-    apply_runtime_confs(spark)
     import os as _os
     from datetime import datetime, timezone
 
@@ -656,7 +649,6 @@ def q_winsorized_mean_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass is one map-side-combinable aggregate over a persisted
     single-column projection.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.caching import scoped_persist
     from etl_portofolio_spark.plans.analytics_queries import cents
 
@@ -727,7 +719,6 @@ def q_source_shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     at most |sources|² rows regardless of corpus size; the result
     frame is bounded by source-pair count.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators.dedup import shingled_docs
 
     docs = load_table(spark, sf_dir, "documents")
@@ -800,7 +791,6 @@ def q_streaming_dedup_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``tests/test_io_streaming.py``).  Files are time-ordered, so no
     record arrives behind the watermark.
     """
-    apply_runtime_confs(spark)
     import hashlib
 
     from etl_portofolio_spark.fixtures import ensure_fixture
@@ -878,7 +868,6 @@ def q_loo_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     through one task at 100 TB.  One fact scan for stats, one for the
     join; both map-side-combinable/broadcast.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.plans.analytics_queries import cents
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -944,7 +933,6 @@ def q_event_path_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     events; array_sort on (sec, id, type) structs is in-group only;
     the final top-20 is TakeOrdered, never a global sort.
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.to_date("ts").alias("d"),
@@ -1009,7 +997,6 @@ def q_xml_api_stream_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental-ingest production shape for this API).  Payload
     numerics are integers in doubles; sums are exact and emit BIGINT.
     """
-    apply_runtime_confs(spark)
     import hashlib
     import os as _os
 
@@ -1098,7 +1085,6 @@ def q_incremental_runner_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     state — no state store); the readback is one combinable aggregate.
     Only day-boundary arithmetic is driver-side.
     """
-    apply_runtime_confs(spark)
     from datetime import datetime, timedelta
 
     from etl_portofolio_spark.fixtures import ensure_fixture
@@ -1170,7 +1156,6 @@ def q_overwrite_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the small-dimension refresh pattern, not the fact path), one
     combinable aggregate on readback.
     """
-    apply_runtime_confs(spark)
     import os as _os
 
     from etl_portofolio_spark.fixtures import ensure_fixture
@@ -1227,7 +1212,6 @@ def q_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, and share arithmetic over the 8-row frame (the window
     sees cells, never vectors).
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators.similarity import ivf_assign
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1292,7 +1276,6 @@ def q_tombstone_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     always small relative to facts); the sweep is one anti join at
     scan speed; both audit aggregates are single combinable passes.
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
     tombstones = (
         ev.select("user_id").where(F.col("user_id") % 97 == 0).distinct()
@@ -1365,7 +1348,6 @@ def q_lag_feature_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     over that ~2.4k-row frame, never over fact rows — the repo's
     bounded-frame window rule.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.plans.analytics_queries import cents
 
     daily = (
@@ -1430,7 +1412,6 @@ def q_session_gap_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded ~32-bucket aggregate.  Zero-gap events (same second) land
     in bucket -1.
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.unix_timestamp("ts").alias("sec"), "event_id"
     )
@@ -1497,7 +1478,6 @@ def q_token_length_percentiles_by_source(
     histogram aggregate, and windows over the histogram frame —
     |sources| × |distinct lengths| rows, never documents.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators.text import tokens
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -1576,7 +1556,6 @@ def q_event_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side; moments are one combinable aggregate over that bounded
     frame; magnitudes stay far inside int64 (Σc² ≤ days·max_daily²).
     """
-    apply_runtime_confs(spark)
     daily = (
         load_table(spark, sf_dir, "events")
         .groupBy("event_type", F.to_date("ts").alias("d"))
@@ -1640,7 +1619,6 @@ def q_hierarchy_rollup_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer cents, integer keys; the oracle builds the same ancestor
     chains with hardcoded integer divisions.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.plans.analytics_queries import cents
 
     part = load_table(spark, sf_dir, "part").select(
@@ -1710,7 +1688,6 @@ def q_conformal_interval_calibration(
     daily frame; residuals, the cumulative-histogram order statistic,
     and the coverage count all run on that ≤few-thousand-row frame.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.plans.analytics_queries import cents
 
     daily = (

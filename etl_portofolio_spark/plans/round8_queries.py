@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from etl_portofolio_spark.catalog import load_table
 from etl_portofolio_spark.plans.analytics_queries import cents
 from etl_portofolio_spark.plans.oracle_types import oracle_bigint
-from etl_portofolio_spark.session import apply_runtime_confs
 
 ROUND8_QUERIES: dict[
     str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
@@ -62,7 +61,6 @@ def q_roc_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     under 2^63 up to ~2*10^9 rows per class; beyond that the same plan
     emits per-score partials and the division moves to the caller.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     hist = (
         li.select(
@@ -144,7 +142,6 @@ def q_calibration_bins_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     single combinable aggregation over the scan, nothing downstream of
     it larger than 10 rows.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     scored = li.select(
         F.least(
@@ -234,7 +231,6 @@ def q_multiple_testing_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded 25 x 50 frame) via the tie-corrected rank-sum identity;
     the step-up runs on the 25-row panel.  One scan, one shuffle.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     hist = (
@@ -393,7 +389,6 @@ def q_pinball_loss_quantile_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-quantile explode both run on that ~2.4k-row frame.  The daily
     window orders a calendar axis, not fact rows.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     daily = (
         li.groupBy(F.to_date("l_shipdate").alias("d"))
@@ -490,7 +485,6 @@ def q_item_cf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT while c < ~3e6 baskets per pair (beyond that, rank on
     c^2 * 10^6 div (n_a * n_b) with the constant moved down).
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.caching import scoped_persist
 
     li = (
@@ -625,7 +619,6 @@ def q_graph_modularity_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     a <= 300-row edge frame and a 5-row community panel.  The windows
     run on those bounded frames only.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     # spread_by(l_orderkey): parallelizes the one-row-group test scan
@@ -759,7 +752,6 @@ def q_metadata_file_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     listing job); the aggregation keys on the partition value.  The
     only shuffle is the 8-key groupBy.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.fixtures import ensure_fixture
 
     def _build(tmp: str) -> None:
@@ -840,7 +832,6 @@ def q_snapshot_expiry_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     publish/retire is O(#versions) pointer and directory work, never
     data rewrites; the audit aggregate is one combinable pass.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.fixtures import ensure_fixture
     from etl_portofolio_spark.sinks.writer import (
         publish_snapshot,
@@ -955,7 +946,6 @@ def q_groupwise_cv_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one combinable pass keyed by user, then a 5-row max) — no window
     over fact rows anywhere.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.functions.hashing import h32
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -1055,7 +1045,6 @@ def q_feature_hashing_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     small columns); the aggregation keys on (source, dim) <= 80 cells.
     Nothing Python-side, nothing quadratic, no vocabulary state.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.functions.hashing import h32
     from etl_portofolio_spark.operators.text import tokens
 
@@ -1138,7 +1127,6 @@ def q_gains_capture_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the calibration scorer has < 100 distinct values) in one
     combinable pass; the cumulative window walks that frame only.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem")
     hist = (
         li.select(
@@ -1252,7 +1240,6 @@ def q_streaming_session_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     catch-up via availableNow; the sentinel trick is how batch-drain
     jobs flush trailing state deterministically.
     """
-    apply_runtime_confs(spark)
     import hashlib
     import os
 
@@ -1372,7 +1359,6 @@ def q_embedding_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join of two id-keyed single-row-per-id frames.  Nothing
     quadratic in the corpus anywhere.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.caching import scoped_persist
     from etl_portofolio_spark.operators import similarity
 
@@ -1501,7 +1487,6 @@ def q_partition_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     migration's cost, and why backfills rewrite it eventually).  The
     union is a plan-level concat — no shuffle beyond the rollup's own.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.fixtures import ensure_fixture
 
     def _build(tmp: str) -> None:
@@ -1614,7 +1599,6 @@ def q_weighted_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same loop runs with the distance frame disk-backed — the
     structure is Pregel's, expressed in joins.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.caching import scoped_persist
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -1776,7 +1760,6 @@ def q_rake_keyword_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup islands; phrase lengths and word stats are two combinable
     aggregations.  The top-20 is a TakeOrderedAndProject.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators.text import LANG_STOPWORDS, tokens
 
     stop = F.array(*[F.lit(w) for w in LANG_STOPWORDS["en"]])
@@ -1874,7 +1857,6 @@ def q_stratified_ate_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-row arithmetic.  This is the causal-analysis twin of the CUPED
     and diff-in-diff entries.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -1969,7 +1951,6 @@ def q_lateral_topk_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost over the window form (asserted in tests) — the point is API
     parity.
     """
-    apply_runtime_confs(spark)
     load_table(spark, sf_dir, "nation").createOrReplaceTempView("r8_nation")
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("r8_customer")
     return spark.sql(
@@ -2034,7 +2015,6 @@ def q_ranking_overlap_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the curve math runs on a <= 20-row matched frame against a 20-row
     depth spine.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2167,7 +2147,6 @@ def q_nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design: identical to KM — everything after the first-return
     collapse runs on the calendar-bounded duration frame.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.to_date("o_orderdate").alias("odate")
     )
@@ -2279,7 +2258,6 @@ def q_order_fill_rate_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar.  A left join keeps shipmentless orders in the
     denominator — an inner join would silently inflate attainment.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.to_date("o_orderdate").alias("odate"),
@@ -2369,7 +2347,6 @@ def q_streaming_interval_join_oracle(spark: SparkSession, sf_dir: str) -> DataFr
     100 TB: this is the production attribution shape — two keyed
     streams, bounded state, availableNow catch-up.
     """
-    apply_runtime_confs(spark)
     import hashlib
     import os
 
@@ -2493,7 +2470,6 @@ def q_malformed_json_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design: parse + null-check are map-side; the rollup keys on
     event types.  One scan, one small shuffle.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.fixtures import ensure_fixture
 
     def _build(tmp: str) -> None:
@@ -2610,7 +2586,6 @@ def q_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     Emitted only for OBSERVED days (days with any event), stickiness
     in exact permille.
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events")
     ud = ev.select(
         "user_id", F.to_date("ts").alias("day")
@@ -2704,7 +2679,6 @@ def q_session_funnel_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything after keys on session id (uniform); the output is one
     row and no fact row crosses more than two exchanges.
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_type",
@@ -2853,7 +2827,6 @@ def q_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the customer key; the (cohort, age) rollup is calendar-bounded;
     the cumulative window walks ages inside each cohort partition.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     first = orders.groupBy("o_custkey").agg(
         F.min(F.date_format("o_orderdate", "yyyy-MM")).alias("cohort")
@@ -2959,7 +2932,6 @@ def q_t_closeness_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design: one (group x value) aggregation (25 cells), prefix
     cumsum windows on that bounded frame, one 5-row report.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -3091,7 +3063,6 @@ def q_shapley_channel_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale design: one combinable user-day aggregation (presence flags
     + conversion flag via max), a 4-key rollup, 4-row arithmetic.
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events")
     ud = (
         ev.groupBy("user_id", F.to_date("ts").alias("day"))
@@ -3210,7 +3181,6 @@ def q_ucb_arm_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design: one combinable 5-arm aggregation; everything after
     is 5-row arithmetic.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     arms = orders.groupBy(F.col("o_orderpriority").alias("arm")).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -3300,7 +3270,6 @@ def q_rendezvous_shard_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design: both assignments are map-side expressions over one
     scan of the key set; the rollup keys on <= 6 nodes.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.functions.hashing import h32
 
     cust = load_table(spark, sf_dir, "customer").select(

@@ -32,7 +32,6 @@ from etl_portofolio_spark.catalog import load_table
 from etl_portofolio_spark.operators.text import token_count_ws
 from etl_portofolio_spark.plans.analytics_queries import cents
 from etl_portofolio_spark.plans.oracle_types import oracle_bigint
-from etl_portofolio_spark.session import apply_runtime_confs
 
 ROUND9_QUERIES: dict[
     str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
@@ -70,7 +69,6 @@ def q_token_packing_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable aggregation on the same key.  At 100 TB each shard
     packs independently, which is exactly how packed batches shard.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", token_count_ws(F.col("text")).alias("tok")
     )
@@ -164,7 +162,6 @@ def q_systematic_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     key), selection is a per-row integer predicate, no second scan —
     at 100 TB this is a single pass per shard with bounded output.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", F.col("n_chars").cast("long").alias("w")
     )
@@ -250,7 +247,6 @@ def q_partial_agg_state_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     over that bounded frame; the direct recompute exists only to prove
     the contract and would not ship in production.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_shipdate",
         F.date_format("l_shipdate", "yyyy-MM").alias("ym"),
@@ -366,7 +362,6 @@ def q_table_profile_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-row report; the distinct count is the only shuffle and keys on
     the column's own values.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     frames = []
     for c in _PROFILE_COLS:
@@ -429,7 +424,6 @@ def q_shuffle_key_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     values), so the percentile walk is a window over a tiny frame; the
     bucket model is a second combinable aggregation.  One row out.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_partkey")
     from etl_portofolio_spark.caching import scoped_persist
 
@@ -554,7 +548,6 @@ def q_late_arrival_backfill_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     aggregation keyed on event day; per-budget columns are conditional
     sums in the same pass (never one scan per budget).
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events").select(
         F.to_date("ts").alias("ds"),
         (F.col("event_id") % 3).cast("long").alias("late_days"),
@@ -624,7 +617,6 @@ def q_semdedup_lsh_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-vectorized sequential-fold cosine (bit-identical to the
     oracle's list_reduce).
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators import similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -712,7 +704,6 @@ def q_merkle_replica_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     replica aggregates once on the bucket key (64 groups); the diff is
     a 64-row join.  No replica ever shuffles fact rows to the other.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.functions.hashing import h60
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -833,7 +824,6 @@ def q_mad_outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     one broadcast join of the 25-row (median, MAD) panel back to the
     scan.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.caching import scoped_persist
 
     part = scoped_persist(

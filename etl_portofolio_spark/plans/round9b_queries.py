@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from etl_portofolio_spark.catalog import load_table
 from etl_portofolio_spark.plans.analytics_queries import cents
 from etl_portofolio_spark.plans.oracle_types import oracle_bigint
-from etl_portofolio_spark.session import apply_runtime_confs
 
 ROUND9B_QUERIES: dict[
     str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
@@ -65,7 +64,6 @@ def q_hits_two_step_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the cached edge list — the structure GraphX uses for HITS,
     expressed as joins.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.caching import scoped_persist
 
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -76,8 +74,6 @@ def q_hits_two_step_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread_by(l_orderkey): parallelize the one-row-group test scan's
     # two join probes + the distinct's partial aggregation, and
     # co-partition the orders join (no-op at production split counts)
-    # r11 keep-or-revert A/B (alternating SPARK_GRAFT_SPREAD_BY in one
-    # session, 32 cores, wall s spread-vs-none): min 2.257 vs 2.344, med 2.314 vs 2.453 — kept.
     edges = scoped_persist(
         spread_by(li, "l_orderkey")
         .join(F.broadcast(part), li.l_partkey == part.p_partkey)
@@ -177,7 +173,6 @@ def q_join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     results cross-join into one panel.  This is exactly how an
     ANALYZE-backed optimizer validates its own stats.
     """
-    apply_runtime_confs(spark)
     outs: list[DataFrame] = []
     for fam, t1, k1, t2, k2 in _JOIN_FAMILIES:
         c1 = (
@@ -309,7 +304,6 @@ def q_frequent_triple_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     freq_pairs/C(freq_items,2) << 1, which is measurable with the one
     cheap pair census before committing to the triple pass.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     from etl_portofolio_spark.caching import scoped_persist
@@ -318,8 +312,6 @@ def q_frequent_triple_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread_by(l_orderkey): parallelize the one-row-group test scan's
     # broadcast probe + basket partial aggregation; the keyed exchange
     # already satisfies the groupBy (no-op at production split counts)
-    # r11 keep-or-revert A/B (alternating SPARK_GRAFT_SPREAD_BY in one
-    # session, 32 cores, wall s spread-vs-none): min 2.050 vs 2.216, med 2.167 vs 2.560 — kept.
     sets = scoped_persist(
         spread_by(li, "l_orderkey")
         .join(F.broadcast(part), li.l_partkey == part.p_partkey)
@@ -423,7 +415,6 @@ def q_ols_cramer_two_feature(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design: single fact pass, map-side partial aggregation on a
     3-value key; everything after the shuffle is constant-size.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators.util import spread
 
     # round-robin spread of the PROJECTED columns (guide §2.3: project
@@ -538,7 +529,6 @@ def q_ndcg_at_k_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation (parallel across nations).  At 100 TB the eval panel stays
     nation×brand-bounded.
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -709,7 +699,6 @@ def q_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     11-value key; the base rate folds in as a broadcast 1-row frame —
     no driver action, no second scan.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         cents("l_discount", 3).alias("f_bin"),
         (F.col("l_returnflag") == "R").cast("long").alias("is_r"),
@@ -790,7 +779,6 @@ def q_kneser_ney_continuation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup is combinable on the right word.  The final top-20 runs on
     the vocabulary-bounded panel.
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
     from etl_portofolio_spark.operators import text as _text
 
@@ -900,7 +888,6 @@ def q_shard_mixing_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable count on the (shard, source) key (8×sources panel),
     global terms fold in as a broadcast 1-row frame.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.functions.hashing import h60
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -993,7 +980,6 @@ def q_orc_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate with partition pruning available on the year column.
     Money crosses the seam as integer cents, so the gate is exact.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.fixtures import ensure_fixture
 
     def _build(tmp: str) -> None:
@@ -1061,7 +1047,6 @@ def q_jsonl_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design: export and re-scan are each one map-side pass; the
     gate aggregate is combinable on the 5-value type key.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.fixtures import ensure_fixture
 
     def _build(tmp: str) -> None:
@@ -1127,7 +1112,6 @@ def q_class_balance_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned BY LABEL over the md5 priority — parallel across
     classes, never a global sort.
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
     from etl_portofolio_spark.functions.hashing import h60
 
@@ -1228,7 +1212,6 @@ def q_lead_lag_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     panel×15 — never fact-scale.  At 100 TB nothing after the first
     aggregation grows with data.
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -1245,8 +1228,6 @@ def q_lead_lag_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partial aggregation; hash(d) satisfies the (brand, d) clustering,
     # so the groupBy adds no second exchange (no-op at production
     # split counts)
-    # r11 keep-or-revert A/B (alternating SPARK_GRAFT_SPREAD_BY in one
-    # session, 32 cores, wall s spread-vs-none): min 2.158 vs 2.166, med 2.304 vs 2.926 over 8 rounds — kept.
     from etl_portofolio_spark.operators.util import spread_by
 
     brandday = scoped_persist(
@@ -1396,7 +1377,6 @@ def q_hll_intersection_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     flags (combinable); registers aggregate on a 64-value uniform md5
     key; everything after is a 64-row panel cross-joined into one row.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.caching import scoped_persist
     from etl_portofolio_spark.functions.hashing import h32
 

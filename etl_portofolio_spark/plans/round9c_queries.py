@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from etl_portofolio_spark.catalog import load_table
 from etl_portofolio_spark.plans.analytics_queries import cents
 from etl_portofolio_spark.plans.oracle_types import oracle_bigint
-from etl_portofolio_spark.session import apply_runtime_confs
 
 ROUND9C_QUERIES: dict[
     str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
@@ -61,7 +60,6 @@ def q_error_budget_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
     panel (the registry's ewma/trailing-revenue discipline), so
     nothing after the first shuffle grows with data.
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events").select(
         F.to_date("ts").alias("day"),
         (F.col("event_type") == "error").cast("long").alias("is_err"),
@@ -202,7 +200,6 @@ def q_session_entry_exit_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     are per-row comparisons against windowed step counts; the census
     is a combinable aggregate on the 5-value type key.
     """
-    apply_runtime_confs(spark)
     stepped = _sessions_with_steps(spark, sf_dir).withColumn(
         "sess_n",
         F.count(F.lit(1)).over(Window.partitionBy("user_id", "sid")),
@@ -267,7 +264,6 @@ def q_order_aging_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combinable; totals fold back via a second broadcast
     cross-join of the 4-row panel's own rollup.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     asof = orders.agg(F.max(F.to_date("o_orderdate")).alias("asof"))
     open_o = orders.where(F.col("o_orderstatus") == "O").select(
@@ -369,7 +365,6 @@ def q_woe_information_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design: one fact pass to an 11-bin count panel; corpus
     totals fold in via a broadcast 1-row frame.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         cents("l_discount", 3).alias("bin"),
         (F.col("l_returnflag") == "R").cast("long").alias("is_bad"),
@@ -451,7 +446,6 @@ def q_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact scale — the pairs never touch fact rows); tie groups are a
     grouped count on the revenue value.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.caching import scoped_persist
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -579,7 +573,6 @@ def q_decision_stump_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     part dim; cumulative windows partition per feature over bounded
     domains.  At 100 TB only histograms ever shuffle.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey",
         cents("l_quantity", 0).alias("qty"),
@@ -750,7 +743,6 @@ def q_edge_triangle_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain-bounded (≤C(25,2)) so the triangle join is
     broadcast-vs-broadcast; counts are exact integers.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.caching import scoped_persist
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -758,8 +750,6 @@ def q_edge_triangle_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread_by(l_orderkey): parallelize the one-row-group test scan's
     # broadcast probe + basket partial aggregation; the keyed exchange
     # already satisfies the groupBy (no-op at production split counts)
-    # r11 keep-or-revert A/B (alternating SPARK_GRAFT_SPREAD_BY in one
-    # session, 32 cores, wall s spread-vs-none): min 1.651 vs 2.005, med 1.735 vs 2.177 — kept.
     from etl_portofolio_spark.operators.util import spread_by
 
     sets = scoped_persist(
@@ -875,7 +865,6 @@ def q_churn_label_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     before/after aggregates (combinable, keyed on custkey); the
     census is a second combinable aggregate on a ≤12-cell key.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.to_date("o_orderdate").alias("od"),
@@ -992,7 +981,6 @@ def q_embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells (label×64×2 panel, combinable sums); the drift reduces the
     bounded panel.  At 100 TB only quantized partial sums shuffle.
     """
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
@@ -1096,7 +1084,6 @@ def q_transition_by_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design: one user-keyed shuffle; the census aggregates a
     ≤4×5×5 key domain, combinable.
     """
-    apply_runtime_confs(spark)
     stepped = _sessions_with_steps(spark, sf_dir)
     wlead = Window.partitionBy("user_id", "sid").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
@@ -1184,7 +1171,6 @@ def q_kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     minima via a bounded heap per partition then merges — the same
     min-merge algebra this SELECT expresses declaratively.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.caching import scoped_persist
     from etl_portofolio_spark.functions.hashing import h60
 

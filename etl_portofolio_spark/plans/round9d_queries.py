@@ -35,7 +35,6 @@ from etl_portofolio_spark.catalog import load_table
 from etl_portofolio_spark.functions.hashing import h32, h32_sql
 from etl_portofolio_spark.plans.analytics_queries import cents
 from etl_portofolio_spark.plans.oracle_types import oracle_bigint
-from etl_portofolio_spark.session import apply_runtime_confs
 
 ROUND9D_QUERIES: dict[
     str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
@@ -74,24 +73,15 @@ def q_countmin_point_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy in ``heavy_hitters_sketch``).  The probe side is a 20-row
     broadcast against the 4,096-row sketch.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.operators.util import spread
 
     # round-robin spread: the 4-way depth explode + salted md5 per
     # (depth, key) — the query's dominant per-row work — otherwise
     # serializes on the one-row-group test scan's single task; the one
     # narrow exchange is shared by the exact and sketch branches
-    # (no-op at production split counts).
-    # r11 re-A/B after the driver's r10 bench flagged 1.30->1.90 on this
-    # touched path (alternating variants in ONE session to control the
-    # documented host drift; env switch kept for reproduction): 32 cores
-    # min 1.182 spread vs 1.181 without (parity; the driver's 1.90 had a
-    # 1.90/2.42/2.87 pass spread — drift); 8 cores min 0.924 vs 1.117,
-    # median 0.978 vs 1.335 — the spread WINS the low-core scaling run
-    # and ties at 32, so it stays.
-    orders = load_table(spark, sf_dir, "orders").select("o_custkey")
-    if os.environ.get("SPARK_GRAFT_CMS_SPREAD", "1") == "1":
-        orders = spread(orders)
+    # (no-op at production split counts). Measured a tie at 32 cores
+    # and a win at 8.
+    orders = spread(load_table(spark, sf_dir, "orders").select("o_custkey"))
 
     exact = orders.groupBy("o_custkey").agg(
         F.count(F.lit(1)).cast("long").alias("n_exact")
@@ -211,7 +201,6 @@ def q_dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     becomes repartitionByRange with sampled bounds; the stitch logic
     is unchanged.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.substring("text", 1, 24).alias("pfx"),
@@ -351,7 +340,6 @@ def q_phrase_match_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists alone — exactly how a search engine intersects posting
     lists, never the full postings self-join.
     """
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", " ").alias("arr")
     )
@@ -449,7 +437,6 @@ def q_ohlc_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate per partition per group (no sort, no window over the
     fact stream), the exact shape a 100 TB tick table needs.
     """
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events").where(
         F.col("event_type") == "purchase"
     )
@@ -528,7 +515,6 @@ def q_checkpoint_resume_equivalence(spark: SparkSession, sf_dir: str) -> DataFra
     content-keyed fixture; the gated readback is one combinable
     aggregate.
     """
-    apply_runtime_confs(spark)
     from etl_portofolio_spark.fixtures import ensure_fixture
 
     def _build(tmp: str) -> None:
@@ -643,7 +629,6 @@ def q_encoding_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed (column, value) whose post-aggregation state is the
     dictionary itself — the same state the real encoder would build.
     """
-    apply_runtime_confs(spark)
 
     def _stack(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
         args = ", ".join(f"'{c}', {c}" for c in cols)
@@ -765,7 +750,6 @@ def q_walk_forward_cv_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
     and aggregates in one combinable pass — fold membership never
     materializes row-wise.
     """
-    apply_runtime_confs(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         F.to_date("o_orderdate").alias("d")
     )
@@ -894,7 +878,6 @@ def q_grace_hash_join_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     fanout-bounded rollup; exactly the two passes a spill planner can
     afford at 100 TB.
     """
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_partkey")
     fan = (
         li.agg(F.count(F.lit(1)).cast("long").alias("n_build"))

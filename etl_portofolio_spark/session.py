@@ -12,6 +12,8 @@ partition overwrite replacing TRUNCATE-PARTITION + append.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import SparkSession
 
 #: Runtime confs every query should run under. These are all
@@ -50,7 +52,14 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.optimizer.excludedRules": (
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
     ),
+    # Fixture parquet stores some timestamps as TIMESTAMP(NANOS), which
+    # Spark cannot map to its microsecond TimestampType; read them as
+    # nano longs and let `catalog.load_table` truncate to micros.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
+
+#: Sessions that already got RUNTIME_CONFS (see `apply_runtime_confs`).
+_CONFIGURED: weakref.WeakSet[SparkSession] = weakref.WeakSet()
 
 #: Builder-time confs (only applied when *we* create the session).
 BUILDER_CONFS: dict[str, str] = {
@@ -73,7 +82,15 @@ BUILDER_CONFS: dict[str, str] = {
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an existing session (driver-owned)."""
+    """Set RUNTIME_CONFS on ``spark`` the first time this session is seen.
+
+    This is the one place runtime confs are decided: ``build_session``
+    and the registry dispatch in ``__spark_entry__`` call it, plan
+    builders never do. Later calls on the same session are no-ops, so a
+    conf the caller changes afterwards (e.g. AQE off) stays changed.
+    """
+    if spark in _CONFIGURED:
+        return spark
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
@@ -81,6 +98,7 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
             # A conf may be non-settable on some builds; queries must not
             # hard-depend on any single conf to be *correct*, only faster.
             pass
+    _CONFIGURED.add(spark)
     return spark
 
 
@@ -93,6 +111,8 @@ def build_session(
 
     ``master`` defaults to ``local[N]`` with N from ``$SPARK_GRAFT_CPUS``
     (fallback ``local[*]``) so tests and bench share one entry point.
+    ``overrides`` are builder confs; change a RUNTIME_CONFS value with
+    ``spark.conf.set`` on the returned session.
     """
     import os
 
@@ -101,7 +121,6 @@ def build_session(
         master = f"local[{cpus}]" if cpus else "local[*]"
 
     builder = SparkSession.builder.appName(app_name).master(master)
-    for k, v in {**BUILDER_CONFS, **RUNTIME_CONFS, **overrides}.items():
+    for k, v in {**BUILDER_CONFS, **overrides}.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    return apply_runtime_confs(spark)
+    return apply_runtime_confs(builder.getOrCreate())

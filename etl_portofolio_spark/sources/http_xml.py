@@ -114,21 +114,11 @@ class XmlApiReader(DataSourceReader):
         """Executor-side: fetch one window's CSV and parse with explicit
         types (S3's `pd.read_csv(StringIO)` without dtype inference).
 
-        r11 A/B note (keep-or-revert): a pandas-parsed pyarrow
-        RecordBatch yield (SPARK_GRAFT_XMLAPI_ARROW=1; row-identical,
-        pinned by tests/test_r11_equivalence.py) was tried and LOST —
-        in-Spark alternating A/B med 1.380 vs 1.281 s, micro 60 vs
-        53 ms/window: Spark's datasource worker already converts the
-        tuple stream to Arrow batches in C
-        (plan_data_source_read.records_to_arrow_batches), so the
-        python-side pandas/pa.array construction only ADDS work at this
-        window size (~3.3k rows). The tuple path stays the default; the
-        stage is python-worker-startup bound regardless (stage profile:
-        11 s executor / 1.4 s CPU over 30 tasks — the blocked time is
-        worker fork + imports, not row processing)."""
+        Yields plain tuples: Spark's datasource worker already converts
+        the tuple stream to Arrow batches in C, and the stage is bound by
+        python-worker startup, not row processing."""
         import csv
         import io
-        import os
 
         fetch = resolve_fetcher(self.fetcher_spec)
         body = build_query_xml(
@@ -144,34 +134,6 @@ class XmlApiReader(DataSourceReader):
         double_cols = {
             f.name for f in self.schema_.fields if f.dataType.typeName() == "double"
         }
-        if os.environ.get("SPARK_GRAFT_XMLAPI_ARROW", "0") == "1":
-            import pandas as pd
-            import pyarrow as pa
-
-            pdf = pd.read_csv(
-                io.StringIO(text), dtype=str, keep_default_na=False
-            )
-            arrays = []
-            for f in self.schema_.fields:
-                col = (
-                    pdf[f.name]
-                    if f.name in pdf.columns
-                    else pd.Series([None] * len(pdf), dtype=object)
-                )
-                if f.name in double_cols:
-                    arrays.append(
-                        pa.array(
-                            pd.to_numeric(col.where(col != "", None)),
-                            type=pa.float64(),
-                            from_pandas=True,
-                        )
-                    )
-                else:
-                    arrays.append(pa.array(col, type=pa.string(), from_pandas=True))
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=[f.name for f in self.schema_.fields]
-            )
-            return
         reader = csv.DictReader(io.StringIO(text))
         for rec in reader:
             yield tuple(

@@ -18,8 +18,6 @@ ingestion shape the reference's driver-pandas loop lacked.
 
 from __future__ import annotations
 
-import csv
-import io
 import re
 
 
@@ -33,8 +31,6 @@ def fetch_events_csv(url: str, xml_body: str, window_id: str) -> str:
     serverAddr='s'||(event_id%7), transactions=event_id%100,
     delay=user_id%50, throughput=event_id%1000.
     """
-    import os
-
     import pandas as pd
     import pyarrow.parquet as pq
 
@@ -42,54 +38,12 @@ def fetch_events_csv(url: str, xml_body: str, window_id: str) -> str:
     end = re.search(r"<endTime>(.*?)</endTime>", xml_body).group(1)
     lo, hi = pd.Timestamp(start), pd.Timestamp(end)
 
-    if os.environ.get("SPARK_GRAFT_XMLAPI_VEC", "1") != "1":
-        # r11 A/B reproduction switch: the original row-at-a-time
-        # server — full-file read, pandas boolean filter, per-row
-        # csv.writer loop. Kept byte-identical to the vectorized
-        # default (pinned by tests/test_r11_equivalence.py).
-        tbl = pq.read_table(
-            url, columns=["event_id", "ts", "user_id", "event_type"]
-        )
-        df = tbl.to_pandas()
-        df = df[(df["ts"] >= lo) & (df["ts"] < hi)]
-        out = io.StringIO()
-        w = csv.writer(out)
-        w.writerow(
-            [
-                "waktu",
-                "appId_String",
-                "clientAddr",
-                "serverAddr",
-                "transactions",
-                "delay",
-                "throughput",
-            ]
-        )
-        for eid, ts, uid, et in zip(
-            df["event_id"], df["ts"], df["user_id"], df["event_type"]
-        ):
-            w.writerow(
-                [
-                    str(ts)[:19],
-                    et,
-                    f"u{uid}",
-                    f"s{eid % 7}",
-                    str(eid % 100),
-                    str(uid % 50),
-                    str(eid % 1000),
-                ]
-            )
-        return out.getvalue()
-
-    # r11 (guide §4/§6): the window predicate is pushed into the
-    # parquet read (`filters=` — the "server" filters by window instead
-    # of materializing the whole table per request, which every one of
-    # the ~30 window partitions was paying), and the CSV payload is
-    # rendered with vectorized pandas ops + to_csv instead of a per-row
-    # Python csv.writer loop. Byte-identical output: to_csv uses the
-    # same csv module quoting (QUOTE_MINIMAL) and the same \r\n line
-    # terminator, int64-to-str rendering matches str(int), and
-    # dt.strftime equals str(ts)[:19] for nanosecond timestamps.
+    # The window predicate is pushed into the parquet read (`filters=`),
+    # so the "server" never materializes the whole table per request,
+    # and the CSV payload is rendered with vectorized pandas ops. The
+    # output is byte-identical to a per-row csv.writer loop: to_csv uses
+    # the same csv quoting (QUOTE_MINIMAL) and \r\n line terminator,
+    # int64-to-str matches str(int), and dt.strftime equals str(ts)[:19].
     tbl = pq.read_table(
         url,
         columns=["event_id", "ts", "user_id", "event_type"],

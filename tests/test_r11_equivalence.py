@@ -1,17 +1,15 @@
-"""r11 optimization equivalence gates.
+"""Equivalence gates for the fused and vectorized fast paths.
 
-Every r11 A/B switch guards a pair of plans that MUST be
-result-identical — these tests pin that equivalence so a future edit
-to either variant (or a numpy/py version bump that changes rounding)
-fails loudly instead of silently diverging the benched default from
-the oracle-verified shape.
+Each fast path has a plainer reference shape it MUST match exactly —
+the chained two-crossing media operators, a row-at-a-time CSV server —
+so a future edit to either side (or a numpy/py version bump that
+changes rounding) fails loudly instead of silently diverging.
 """
 
 from __future__ import annotations
 
-import os
-
-import pytest
+import csv
+import io
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -43,71 +41,63 @@ def test_fused_jpeg_stats_equals_chained(spark):
     assert _rows(fused) == _rows(chained)
 
 
+def _row_loop_events_csv(url, lo, hi):
+    """Reference server: full-file read, pandas boolean filter, per-row
+    csv.writer loop — the plain shape the vectorized fetcher replaced."""
+    import pyarrow.parquet as pq
+
+    df = pq.read_table(url, columns=["event_id", "ts", "user_id", "event_type"]).to_pandas()
+    df = df[(df["ts"] >= lo) & (df["ts"] < hi)]
+    out = io.StringIO()
+    w = csv.writer(out)
+    w.writerow(
+        [
+            "waktu",
+            "appId_String",
+            "clientAddr",
+            "serverAddr",
+            "transactions",
+            "delay",
+            "throughput",
+        ]
+    )
+    for eid, ts, uid, et in zip(df["event_id"], df["ts"], df["user_id"], df["event_type"]):
+        w.writerow(
+            [
+                str(ts)[:19],
+                et,
+                f"u{uid}",
+                f"s{eid % 7}",
+                str(eid % 100),
+                str(uid % 50),
+                str(eid % 1000),
+            ]
+        )
+    return out.getvalue()
+
+
 def test_xmlapi_vectorized_fetcher_byte_identical():
     """The vectorized fixture fetcher (predicate-pushdown read +
-    pandas to_csv) must emit BYTE-identical CSV to the original row-loop
+    pandas to_csv) must emit BYTE-identical CSV to the row-loop
     csv.writer server, window by window — including the empty window."""
+    from datetime import datetime
+
+    import pandas as pd
+
     from etl_portofolio_spark.sources.http_xml import build_query_xml
     from etl_portofolio_spark.sources.xmlapi_fixture import fetch_events_csv
 
     url = f"{SF_DIR}/events.parquet"
-    from datetime import datetime
-
     windows = [
         (datetime(2024, 1, 1), datetime(2024, 1, 2)),
         (datetime(2024, 1, 2), datetime(2024, 1, 9)),
         (datetime(1999, 1, 1), datetime(1999, 1, 2)),  # empty window
     ]
-    old = os.environ.get("SPARK_GRAFT_XMLAPI_VEC")
-    try:
-        for lo, hi in windows:
-            body = build_query_xml(("waktu",), "", lo, hi)
-            os.environ["SPARK_GRAFT_XMLAPI_VEC"] = "1"
-            new_csv = fetch_events_csv(url, body, str(lo))
-            os.environ["SPARK_GRAFT_XMLAPI_VEC"] = "0"
-            old_csv = fetch_events_csv(url, body, str(lo))
-            assert new_csv == old_csv
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_XMLAPI_VEC", None)
-        else:
-            os.environ["SPARK_GRAFT_XMLAPI_VEC"] = old
-
-
-def test_xmlapi_arrow_read_equals_tuple_read(spark):
-    """The Arrow-batch DataSource read path must produce exactly the
-    rows of the row-at-a-time tuple path."""
-    from etl_portofolio_spark.sources.http_xml import register_xml_api
-
-    register_xml_api(spark)
-
-    def _load():
-        return (
-            spark.read.format("xmlapi")
-            .option(
-                "fetcher",
-                "etl_portofolio_spark.sources.xmlapi_fixture:fetch_events_csv",
-            )
-            .option("url", f"{SF_DIR}/events.parquet")
-            .option("starttime", "2024-01-01 00:00:00")
-            .option("endtime", "2024-01-04 00:00:00")
-            .option("windowminutes", "1440")
-            .load()
-        )
-
-    old = os.environ.get("SPARK_GRAFT_XMLAPI_ARROW")
-    try:
-        os.environ["SPARK_GRAFT_XMLAPI_ARROW"] = "1"
-        arrow_rows = _rows(_load())
-        os.environ["SPARK_GRAFT_XMLAPI_ARROW"] = "0"
-        tuple_rows = _rows(_load())
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_XMLAPI_ARROW", None)
-        else:
-            os.environ["SPARK_GRAFT_XMLAPI_ARROW"] = old
-    assert arrow_rows == tuple_rows
-    assert len(arrow_rows) > 0
+    for lo, hi in windows:
+        body = build_query_xml(("waktu",), "", lo, hi)
+        new_csv = fetch_events_csv(url, body, str(lo))
+        assert new_csv == _row_loop_events_csv(url, pd.Timestamp(lo), pd.Timestamp(hi))
+    assert new_csv.count("\r\n") == 1  # the empty window is header-only
 
 
 def test_fused_filled_media_stats_equals_chained(spark):
@@ -131,42 +121,3 @@ def test_fused_filled_media_stats_equals_chained(spark):
     fused = synthesize_filled_pixel_stats(docs, id_col="doc_id", text_col="text")
     assert fused.schema == chained.schema
     assert _rows(fused) == _rows(chained)
-
-
-@pytest.mark.parametrize("variant", ["minby", "joinback"])
-def test_dedup_elect_variants_identical(spark, variant):
-    """Both representative-election plans (min_by default vs the
-    reverted join-back, SPARK_GRAFT_DEDUP_ELECT) must produce the same
-    verified pairs — the A/B switch is a performance fork only."""
-    from etl_portofolio_spark.catalog import load_table
-    from etl_portofolio_spark.operators.dedup import minhash_candidate_pairs
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    # force the collapse path regardless of the corpus dup fraction:
-    # duplicate every text so the probe sees 50% duplicates
-    from pyspark.sql import functions as F
-
-    dup = docs.unionAll(
-        docs.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
-    )
-    old = os.environ.get("SPARK_GRAFT_DEDUP_ELECT")
-    try:
-        os.environ["SPARK_GRAFT_DEDUP_ELECT"] = variant
-        got = _rows(minhash_candidate_pairs(dup, "doc_id", "text"))
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_DEDUP_ELECT", None)
-        else:
-            os.environ["SPARK_GRAFT_DEDUP_ELECT"] = old
-    # compare against the other variant lazily via cached golden on the
-    # test instance: recompute with the default to keep the test
-    # self-contained
-    try:
-        os.environ["SPARK_GRAFT_DEDUP_ELECT"] = "minby"
-        golden = _rows(minhash_candidate_pairs(dup, "doc_id", "text"))
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_DEDUP_ELECT", None)
-        else:
-            os.environ["SPARK_GRAFT_DEDUP_ELECT"] = old
-    assert got == golden

@@ -323,3 +323,46 @@ def test_rouge_bleu_degenerate_corpus_engines_agree(spark, tmp_path):
     for c in ("m1", "t1", "m2", "t2", "ref_len", "hyp_len",
               "p1_permicro", "p2_permicro", "bp_permicro", "bleu_permicro"):
         assert drow[c] == srow[c], (c, drow[c], srow[c])
+
+
+def test_bigram_census_survives_empty_documents(spark, tmp_path):
+    """A document with no tokens must add no bigrams instead of failing
+    the query: slice(toks, 1, size(toks) - 1) is a negative-length
+    slice on an empty token array."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from etl_portofolio_spark.plans.round10_queries import q_good_turing_smoothing
+    from etl_portofolio_spark.plans.round11_queries import (
+        _tagged_gram_counts,
+        q_bleu_ngram_precision,
+        q_rouge_ngram_overlap,
+    )
+
+    toks = spark.createDataFrame(
+        [(0, []), (1, ["x"]), (2, ["a", "b", "c"])], "doc_id long, toks array<string>"
+    )
+    got = sorted(tuple(r) for r in _tagged_gram_counts(toks).collect())
+    assert got == [
+        (1, 1, "x", 1),
+        (2, 1, "a", 1),
+        (2, 1, "b", 1),
+        (2, 1, "c", 1),
+        (2, 2, "a b", 1),
+        (2, 2, "b c", 1),
+    ]
+
+    pdf = pd.DataFrame(
+        {
+            "doc_id": [0, 1, 2, 3],
+            "text": ["", "a b c", "   ", "a b"],
+            "lang": ["en"] * 4,
+            "source": ["s"] * 4,
+            "n_chars": [0, 5, 3, 3],
+        }
+    )
+    d = tmp_path / "empty_docs"
+    d.mkdir()
+    pdf.to_parquet(d / "documents.parquet")
+    for q in (q_rouge_ngram_overlap, q_bleu_ngram_precision, q_good_turing_smoothing):
+        assert q(spark, str(d)).agg(F.count(F.lit(1))).first()[0] >= 1

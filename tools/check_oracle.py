@@ -148,7 +148,9 @@ def compare(name, spark_df, duck_rows, duck_cols) -> list[str]:
     return errs
 
 
-def main() -> int:
+def main(spark=None) -> int:
+    """Run the differential; ``spark`` is a caller-configured session
+    (robustness_check) — building one here would reset its layout."""
     import duckdb
 
     import __spark_entry__ as entrymod
@@ -157,7 +159,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    spark = build_session("oracle-check")
+    spark = spark or build_session("oracle-check")
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
 

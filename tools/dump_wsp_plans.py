@@ -25,7 +25,6 @@ from etl_portofolio_spark.catalog import load_table  # noqa: E402
 from etl_portofolio_spark.plans.round8_queries import (  # noqa: E402
     _WSP_MIN_CO_DEN,
     _WSP_MIN_CO_NUM,
-    apply_runtime_confs,
 )
 from etl_portofolio_spark.operators.util import spread_by  # noqa: E402
 from etl_portofolio_spark.session import build_session  # noqa: E402
@@ -35,7 +34,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def main() -> None:
     spark = build_session("wsp-plan-dump")
-    apply_runtime_confs(spark)
 
     li = load_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_partkey")
     part = load_table(spark, SF_DIR, "part").select("p_partkey", "p_brand")

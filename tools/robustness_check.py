@@ -26,8 +26,8 @@ def main() -> int:
 
     n = os.environ.get("SPARK_GRAFT_ROBUST_PARTITIONS", "7")
     cores = os.environ.get("SPARK_GRAFT_ROBUST_CORES", "5")
-    # Build FIRST so check_oracle's build_session call reuses this
-    # session (getOrCreate) with the altered layout.
+    # check_oracle runs on THIS session: a second build_session call
+    # would re-apply the default shuffle.partitions over the altered one.
     spark = build_session("robustness-check", master=f"local[{cores}]")
     spark.conf.set("spark.sql.shuffle.partitions", n)
     # SPARK_GRAFT_ROBUST_AQE=off adds a second invariance axis: AQE
@@ -42,7 +42,7 @@ def main() -> int:
 
     from tools.check_oracle import main as check_main
 
-    return check_main()
+    return check_main(spark)
 
 
 if __name__ == "__main__":
