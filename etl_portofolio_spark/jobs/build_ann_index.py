@@ -54,9 +54,7 @@ def build_index(
             .join(codes, "vec_id")
             .select("vec_id", "lo", "span", "codes", "cluster_id")
         )
-        write_partitioned(
-            lists, f"{target_dir}/lists", "cluster_id", target_file_bytes=None
-        )
+        write_partitioned(lists, f"{target_dir}/lists", "cluster_id")
         centroids = (
             spark.read.parquet(f"{target_dir}/lists")
             .select(
@@ -196,9 +194,7 @@ def build_index_pq(
         cb = pq_seed_codebook(emb, m=pq_m, k=pq_k)
         codes = pq_encode_np(emb, cb)
         lists = emb.select("vec_id").join(assigned, "vec_id").join(codes, "vec_id")
-        write_partitioned(
-            lists, f"{target_dir}/lists", "cluster_id", target_file_bytes=None
-        )
+        write_partitioned(lists, f"{target_dir}/lists", "cluster_id")
         cb_rows = [
             (j, c, list(cv))
             for j, cents in enumerate(cb)

@@ -48,7 +48,6 @@ from etl_portofolio_spark.session import build_session
 from etl_portofolio_spark.sinks.writer import (
     publish_snapshot,
     write_partitioned,
-    write_with_metrics,
 )
 
 _SPLIT_SALT = "split:"
@@ -158,18 +157,11 @@ def run(
 
             n_chunks = read_snapshot(spark, f"{target_dir}/chunks_snapshots").count()
         else:
-            write_partitioned(
-                curated, f"{target_dir}/docs", ["split", "lang"], target_file_bytes=None
-            )
+            write_partitioned(curated, f"{target_dir}/docs", ["split", "lang"])
             # the chunk count comes out of the write pass itself
             # (df.observe) — no read-back scan of what was just written
-            observed = write_with_metrics(
-                chunks,
-                f"{target_dir}/chunks",
-                {"n_rows": F.count(F.lit(1))},
-                partition_col="split",
-            )
-            n_chunks = observed["n_rows"]
+            written = write_partitioned(chunks, f"{target_dir}/chunks", "split")
+            n_chunks = written["n_rows"]
     finally:
         curated.unpersist()
         release_cached()  # near-dup stage's scoped shingle persist

@@ -2,10 +2,10 @@
 
 Hour-windowed incremental loading of an epoch-clock history table into a
 ``ds``-partitioned parquet target. Differences by design: parallel
-partitioned JDBC reads (the reference used one connection), one cached
-pass per batch (the reference re-read the source for every count —
-SURVEY.md §3.1), and dynamic partition overwrite instead of the
-day-rollover TRUNCATE dance (§2.2 K4).
+partitioned JDBC reads (the reference used one connection), one observed
+write pass per batch that also yields its row count (the reference
+re-read the source for every count — SURVEY.md §3.1), and dynamic
+partition overwrite instead of the day-rollover TRUNCATE dance (§2.2 K4).
 
 Env config mirrors the reference (`Ingestion Data (MySQL).py:89-93`):
 ``ip`` ``port`` ``user`` ``password`` ``database``.

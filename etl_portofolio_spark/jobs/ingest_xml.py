@@ -28,10 +28,11 @@ from etl_portofolio_spark.sources.http_xml import TIME_FMT, register_xml_api
 
 def transform(df: DataFrame) -> DataFrame:
     """ts parse → +7h shift → string date parts → ds (F4–F12 chain)."""
-    # API emits "E MMM d HH:mm:ss z yyyy" (Ingestion Data (XML).py:141);
-    # LEGACY parser policy accepts the E/z pattern fields on Spark 3+.
-    df.sparkSession.conf.set("spark.sql.legacy.timeParserPolicy", "LEGACY")
-    waktu = shift_hours(F.to_timestamp(F.col("waktu"), "E MMM d HH:mm:ss z yyyy"))
+    # API emits "E MMM d HH:mm:ss z yyyy" (Ingestion Data (XML).py:141).
+    # The default (CORRECTED) parser rejects the E field in parse
+    # patterns, so the weekday is stripped first; the rest parses as is.
+    stamp = F.regexp_replace(F.col("waktu"), r"^\S+\s+", "")
+    waktu = shift_hours(F.to_timestamp(stamp, "MMM d HH:mm:ss z yyyy"))
     parts = date_parts(waktu)
     return df.select(
         F.col("appId_String").alias("aplikasi"),
@@ -61,7 +62,9 @@ def run(
     allowlist_csv: str | None = None,
 ) -> int:
     """Fetch [start, end) in parallel 5-minute windows and write one
-    idempotent partitioned batch. Returns rows written.
+    idempotent partitioned batch in a single observed pass. Returns rows
+    written; a fetch that fails fails the write job, which commits no
+    partition.
 
     The allowlist is applied as a broadcast left-semi join either way;
     ``allowlist_csv`` keeps the CSV entirely on the cluster (first
@@ -99,14 +102,7 @@ def run(
         raw = raw.join(
             F.broadcast(allow), raw["appId_String"] == allow["appId_allow"], "left_semi"
         )
-    out = transform(raw)
-    if out.isEmpty():
-        return 0
-    out = out.persist()
-    n = out.count()
-    write_partitioned(out, target_path)
-    out.unpersist()
-    return n
+    return write_partitioned(transform(raw), target_path)["n_rows"]
 
 
 def http_fetch(url: str, xml_body: str, window_id: str) -> str:

@@ -184,7 +184,7 @@ def apply_changes(
             staged = spark.read.parquet(staging).withColumn(
                 "kb", F.col("kb").cast("long")
             )
-            write_partitioned(staged, target_path, "kb", target_file_bytes=None)
+            write_partitioned(staged, target_path, "kb")
         for b in set(buckets) - kept:
             p = jvm.org.apache.hadoop.fs.Path(f"{target_path.rstrip('/')}/kb={b}")
             fs.delete(p, True)

@@ -185,8 +185,6 @@ def start_mv_maintenance(
     partials = f"{mv_root}/partials"
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         cur = load_mv_meta(mv_root) or {}
         if int(batch_id) <= cur.get("folded_through", -1):
             return  # replayed batch already folded into a generation
@@ -195,7 +193,9 @@ def start_mv_maintenance(
         out = _batch_rollup(batch, dims, measures).withColumn(
             "batch_id", F.lit(int(batch_id))
         )
-        out.write.mode("overwrite").partitionBy("batch_id").parquet(partials)
+        out.write.mode("overwrite").partitionBy("batch_id").option(
+            "partitionOverwriteMode", "dynamic"
+        ).parquet(partials)
 
     os.makedirs(mv_root, exist_ok=True)
     # merge over existing meta: a restart must NOT reset the folded

@@ -7,70 +7,79 @@ Reference behaviors re-expressed (SURVEY.md §2.2):
 - K2 full overwrite (`Ingestion Data (MySQL).py:52-57`).
 - K3 adaptive file sizing (`Ingestion Data (MySQL).py:34-51` — 10% sample
   write + py4j FileSystem.getContentSummary + repartition(ceil/128MiB)):
-  replaced by ``maxRecordsPerFile`` derived from a driver-side sample of
-  average row width — no scratch table, no JVM FS probing, and AQE
-  coalescing already right-sizes shuffle output. The ~128 MiB/file
-  *semantic* is kept as ``target_file_bytes``.
+  replaced by a REBALANCE hint on the partition key. AQE then sizes the
+  files from the shuffle's own statistics: one file per partition value
+  when it is small, several when it exceeds
+  ``spark.sql.adaptive.advisoryPartitionSizeInBytes``. No sample write,
+  no FS probe, no extra job.
 - K4 idempotent re-ingest (TRUNCATE PARTITION + append,
   `Ingestion Data (MySQL).py:132-149`): replaced by dynamic partition
-  overwrite — atomic per-partition replacement, safe to re-run.
+  overwrite — atomic per-partition replacement, safe to re-run. The mode
+  travels with each write (write option or table property), never
+  through the session conf.
 - K5 metadata refresh (`REFRESH TABLE`, `Ingestion Data (MySQL).py:65`):
   ``spark.catalog.refreshByPath`` for path tables.
 
+Every partitioned write is one observed pass: ``df.observe`` returns the
+rows and partitions it wrote, so callers need no count or probe job.
 At cluster scale the partition column (`ds`) keeps writes pruned to the
-day being (re)loaded, and ``maxRecordsPerFile`` bounds file count *and*
-size without a pre-write shuffle.
+day being (re)loaded.
 """
 
 from __future__ import annotations
 
-from collections.abc import Mapping
+from collections.abc import Callable, Mapping
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024  # reference's 128 MiB target
 
+#: the overwrite mode every partitioned write carries as a write option
+#: (path writes) or table property (catalog tables), so a write never
+#: depends on, or changes, the session's ``partitionOverwriteMode``
+_DYNAMIC = {"partitionOverwriteMode": "dynamic"}
 
-def _estimate_rows_per_file(
+
+def _observed_write(
     df: DataFrame,
-    target_file_bytes: int,
-    sample_rows: int = 1000,
-    scratch_dir: str | None = None,
-) -> int | None:
-    """Rows-per-file estimate from a bounded sample written AS parquet.
+    cols: list[str],
+    write: Callable[[DataFrame], None],
+    metrics: Mapping[str, Column] | None = None,
+) -> dict:
+    """Run ``write`` on ``df`` observed and rebalanced on ``cols``.
 
-    The reference wrote a 10% sample table and probed HDFS
-    getContentSummary (`Ingestion Data (MySQL).py:34-51`); this keeps
-    the idea but bounds the sample (``limit(n)``) and measures the
-    actual parquet encoding+compression — repr()/pickle width was a
-    poor proxy (VERDICT r1 #4). The scratch dir lives next to the
-    target when the caller has one (same filesystem — works on a real
-    cluster, where executors cannot reach driver-local /tmp), else
-    driver-local tempfile (local-mode/table sinks).
-    Returns None when the frame is empty (writer then skips the option).
+    ``df.observe`` aggregates ``n_rows``, the set of partition values
+    written (``partitions``: values for one column, Rows for a
+    composite key) and any caller ``metrics`` in the tasks that write
+    the files, so none of them costs a pass of its own. The REBALANCE
+    hint lets AQE size the files (K3): small output coalesces to one
+    file per partition value, and a value larger than
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` splits across
+    several.
     """
-    import shutil
-    import tempfile
-    import uuid
+    obs = Observation()
+    key = F.col(cols[0]) if len(cols) == 1 else F.struct(*cols)
+    named = {
+        "n_rows": F.count(F.lit(1)),
+        "partitions": F.collect_set(key),
+        **(metrics or {}),
+    }
+    write(
+        df.observe(obs, *[c.alias(n) for n, c in named.items()]).hint(
+            "rebalance", *cols
+        )
+    )
+    got = {**dict.fromkeys(named), "n_rows": 0, "partitions": [], **observed(obs)}
+    got["partitions"] = set(got["partitions"])
+    return got
 
-    spark = df.sparkSession
-    if scratch_dir is None:
-        tmp = tempfile.mkdtemp(prefix="sizing-")
-    else:
-        tmp = f"{scratch_dir.rstrip('/')}/.sizing-{uuid.uuid4().hex[:8]}"
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(tmp)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    try:
-        df.limit(sample_rows).coalesce(1).write.mode("overwrite").parquet(tmp)
-        size = fs.getContentSummary(jpath).getLength()
-        n = spark.read.parquet(tmp).count()  # parquet footer metadata only
-        if n == 0 or size <= 0:
-            return None
-        return max(int(target_file_bytes / max(size / n, 1.0)), 1)
-    finally:
-        fs.delete(jpath, True)
-        shutil.rmtree(tmp, ignore_errors=True)
+
+def observed(obs: Observation) -> dict:
+    """``obs.get`` once its action ran; ``{}`` when the optimizer proved
+    the observed plan empty and dropped the observation node (Spark then
+    reports an empty row, which ``Observation.get`` cannot convert)."""
+    return obs.get if obs._jo.getRow().length() else {}
 
 
 def write_partitioned(
@@ -78,10 +87,11 @@ def write_partitioned(
     path: str,
     partition_col: str | list[str] = "ds",
     mode: str = "overwrite",
-    target_file_bytes: int | None = DEFAULT_TARGET_FILE_BYTES,
     data_format: str = "parquet",
-) -> None:
-    """Partitioned columnar write with idempotent per-partition overwrite.
+    metrics: Mapping[str, Column] | None = None,
+) -> dict:
+    """Partitioned columnar write with idempotent per-partition overwrite,
+    in one observed pass; returns what it wrote.
 
     ``mode="overwrite"`` + dynamic partition overwrite replaces ONLY the
     partitions present in ``df`` (the reference's truncate-then-append
@@ -90,23 +100,25 @@ def write_partitioned(
     streaming sink uses ``[ds, batch_id]``. ``data_format`` selects the
     columnar container ("parquet" default, "orc" for ORC-standardized
     warehouses) — both are Spark-native vectorized formats with
-    identical pushdown/pruning semantics, so every property above holds
-    for either; the file-sizing probe stays parquet (it estimates row
-    width, which is format-independent to first order).
+    identical pushdown/pruning semantics.
+
+    The result holds ``n_rows`` and ``partitions`` (see
+    :func:`_observed_write`) plus one entry per caller ``metrics``
+    column (null-key counts, envelope stats), all collected by the
+    write pass itself. They catch input-data surprises on every batch;
+    WAP (`publish_snapshot`) reads back staged files and catches writer
+    bugs. An empty frame writes no partition and reports ``n_rows == 0``.
     """
-    spark = df.sparkSession
     cols = [partition_col] if isinstance(partition_col, str) else list(partition_col)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    writer = df.write.partitionBy(*cols).format(data_format).mode(mode)
-    if target_file_bytes:
-        # scratch on the TARGET's filesystem (dot-dir: hidden from readers)
-        rows_per_file = _estimate_rows_per_file(
-            df, target_file_bytes, scratch_dir=path
-        )
-        if rows_per_file:
-            writer = writer.option("maxRecordsPerFile", rows_per_file)
-    writer.save(path)
-    refresh_path(spark, path)
+
+    def write(out: DataFrame) -> None:
+        out.write.partitionBy(*cols).format(data_format).mode(mode).options(
+            **_DYNAMIC
+        ).save(path)
+
+    got = _observed_write(df, cols, write, metrics)
+    refresh_path(df.sparkSession, path)
+    return got
 
 
 def overwrite_table(df: DataFrame, path: str, data_format: str = "parquet") -> None:
@@ -138,55 +150,39 @@ def write_partitioned_table(
     table: str,
     partition_col: str | list[str] = "ds",
     mode: str = "overwrite",
-    target_file_bytes: int | None = DEFAULT_TARGET_FILE_BYTES,
-) -> None:
+) -> dict:
     """K1/K4 against a catalog table: create on first write, then
     per-partition dynamic overwrite (or plain append) via ``insertInto``.
+    Returns ``n_rows`` and ``partitions`` like :func:`write_partitioned`.
 
     ``saveAsTable(mode="overwrite")`` would drop and recreate the WHOLE
-    table; ``insertInto`` under ``partitionOverwriteMode=dynamic``
-    replaces only the partitions present in ``df`` — the truncate-then-
-    append dance as one atomic statement. ``insertInto`` is positional,
-    so columns are realigned to the table schema first.
+    table; ``insertInto`` under dynamic partition overwrite replaces
+    only the partitions present in ``df`` — the truncate-then-append
+    dance as one atomic statement. The table is created with
+    ``partitionOverwriteMode=dynamic`` as a storage property, which
+    every later ``insertInto`` honours whatever the session sets (the
+    same option on the ``insertInto`` writer is ignored, and a static
+    session would wipe the other partitions). ``insertInto`` is
+    positional, so columns are realigned to the table schema first.
     """
     spark = df.sparkSession
     cols = [partition_col] if isinstance(partition_col, str) else list(partition_col)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # Scratch on the table's own filesystem (its location, else the
-    # warehouse dir) — a driver-local tempfile would be unreachable by
-    # executors on a real cluster (ADVICE r2).
-    rows_per_file = (
-        _estimate_rows_per_file(
-            df, target_file_bytes, scratch_dir=_table_scratch_root(spark, table)
-        )
-        if target_file_bytes
-        else None
-    )
     if not spark.catalog.tableExists(table):
-        writer = df.write.partitionBy(*cols).format("parquet")
-        if rows_per_file:
-            writer = writer.option("maxRecordsPerFile", rows_per_file)
-        writer.saveAsTable(table)
+
+        def write(out: DataFrame) -> None:
+            out.write.partitionBy(*cols).format("parquet").options(
+                **_DYNAMIC
+            ).saveAsTable(table)
+
     else:
-        aligned = df.select(*spark.table(table).columns)
-        writer = aligned.write.mode(mode)
-        if rows_per_file:
-            writer = writer.option("maxRecordsPerFile", rows_per_file)
-        writer.insertInto(table)
+        df = df.select(*spark.table(table).columns)
+
+        def write(out: DataFrame) -> None:
+            out.write.mode(mode).insertInto(table)
+
+    got = _observed_write(df, cols, write)
     refresh_table(spark, table)
-
-
-def _table_scratch_root(spark: SparkSession, table: str) -> str:
-    """Filesystem root for the sizing scratch dir: the table's own
-    storage location when it exists (same filesystem the real write
-    lands on), else the session warehouse dir (where ``saveAsTable``
-    will create it). Either way the scratch sample is written somewhere
-    every executor can reach."""
-    if spark.catalog.tableExists(table):
-        for row in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
-            if (row[0] or "").strip() == "Location":
-                return row[1].strip()
-    return spark.conf.get("spark.sql.warehouse.dir")
+    return got
 
 
 def latest_table_partition(
@@ -263,25 +259,16 @@ def compact_partition(
     incremental appends (every reference micro-batch adds files). The
     rewrite is scoped to a single partition — read partition, rewrite
     via dynamic overwrite — so it is safe to run per-day behind the
-    ingest watermark and touches nothing else. ``sort_cols`` clusters
-    rows within files for parquet min/max skipping. Returns the file count
-    after compaction. Atomicity note: dynamic partition overwrite
-    replaces the partition in one commit; a crashed compaction leaves
-    the old files in place.
+    ingest watermark and touches nothing else. The file count is the
+    partition's listed bytes over ``target_file_bytes`` — metadata
+    only, no data pass. ``sort_cols`` clusters rows within files for
+    parquet min/max skipping. Returns the file count after compaction.
+    Atomicity note: dynamic partition overwrite replaces the partition
+    in one commit; a crashed compaction leaves the old files in place.
     """
-    from pyspark.sql import functions as F
-
+    part_dir = f"{path}/{partition_col}={value}"
     part_df = spark.read.parquet(path).where(F.col(partition_col) == value)
-    rows_per_file = _estimate_rows_per_file(
-        part_df, target_file_bytes, scratch_dir=path
-    )
-    n_rows = part_df.count()
-    # coalesce (no shuffle) to exactly the file count the size target
-    # implies — reading N small files otherwise yields N output tasks
-    n_files = (
-        max(1, -(-n_rows // rows_per_file)) if rows_per_file and n_rows else 1
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    n_files = max(1, -(-sum(_data_file_sizes(spark, part_dir)) // target_file_bytes))
     if sort_cols:
         # cluster rows ACROSS files: range-repartition gives each output
         # file a disjoint key range (coalesce would leave interleaved
@@ -292,26 +279,29 @@ def compact_partition(
             n_files, *sort_cols
         ).sortWithinPartitions(*sort_cols)
     else:
+        # coalesce (no shuffle): reading N small files otherwise yields
+        # N output tasks
         compacted = part_df.coalesce(n_files)
-    writer = (
-        compacted
-        .write.partitionBy(partition_col)
+    (
+        compacted.write.partitionBy(partition_col)
         .format("parquet")
         .mode("overwrite")
+        .options(**_DYNAMIC)
+        .save(path)
     )
-    if rows_per_file:
-        writer = writer.option("maxRecordsPerFile", rows_per_file)
-    writer.save(path)
     refresh_path(spark, path)
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(
-        f"{path}/{partition_col}={value}"
-    )
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return sum(
-        1
+    return len(_data_file_sizes(spark, part_dir))
+
+
+def _data_file_sizes(spark: SparkSession, directory: str) -> list[int]:
+    """Byte sizes of the parquet data files directly under ``directory``
+    — a filesystem listing, no data scan."""
+    jpath, fs = _hadoop_fs(spark, directory)
+    return [
+        f.getLen()
         for f in fs.listStatus(jpath)
         if f.getPath().getName().endswith(".parquet")
-    )
+    ]
 
 
 def retention_sweep(
@@ -427,8 +417,7 @@ def partition_file_stats(
     difference between "rewrite 2 hot days" and "rewrite the table"
     is the whole game).
     """
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    jpath, fs = _hadoop_fs(spark, path)
     if not fs.exists(jpath):
         return []
     out = []
@@ -436,13 +425,8 @@ def partition_file_stats(
     for entry in fs.listStatus(jpath):
         name = entry.getPath().getName()
         if entry.isDirectory() and name.startswith(prefix):
-            n_files = 0
-            n_bytes = 0
-            for f in fs.listStatus(entry.getPath()):
-                if f.getPath().getName().endswith(".parquet"):
-                    n_files += 1
-                    n_bytes += f.getLen()
-            out.append((name[len(prefix):], n_files, n_bytes))
+            sizes = _data_file_sizes(spark, entry.getPath().toString())
+            out.append((name[len(prefix):], len(sizes), sum(sizes)))
     return sorted(out)
 
 
@@ -626,48 +610,9 @@ def vacuum_snapshots(spark: SparkSession, root: str) -> list[int]:
 # --- observed writes: free in-flight audit metrics ---------------------------
 
 
-def write_with_metrics(
-    df: DataFrame,
-    path: str,
-    metrics: Mapping[str, Column],
-    partition_col: str | list[str] = "ds",
-    mode: str = "overwrite",
-    data_format: str = "parquet",
-) -> dict:
-    """Partitioned write that collects audit metrics DURING the write
-    pass itself — ``df.observe``: the metrics are aggregated by the
-    same tasks that produce the files, so row counts / null-key
-    counts / envelope stats cost ZERO extra scans (at 100 TB a
-    separate post-write audit scan is a whole second job).
-
-    Complementary to WAP (`publish_snapshot`), not a replacement: WAP
-    audits READ BACK the staged files and catch writer/encoder bugs;
-    ``observe`` measures the in-flight frame for free and catches
-    input-data surprises (null keys, empty batch, range walk-off) the
-    moment they stream past.  A pipeline uses observe metrics for
-    alerting on every batch and WAP for gating promotions.
-
-    Returns the observed metrics dict (name → value).
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    named = [col.alias(name) for name, col in metrics.items()]
-    write_partitioned(
-        df.observe(obs, *named),
-        path,
-        partition_col=partition_col,
-        mode=mode,
-        # sizing probe would trigger a SEPARATE action on the observed
-        # frame; metrics must come from the write pass alone
-        target_file_bytes=None,
-        data_format=data_format,
-    )
-    return obs.get
-
-
-#: the default audit metric set for an events-shaped frame: the checks
-#: a feed alert actually pages on
+#: the default audit metric set for an events-shaped frame (pass it as
+#: ``write_partitioned(..., metrics=...)``): the checks a feed alert
+#: actually pages on
 def default_write_metrics(key_col: str, ts_col: str) -> dict[str, Column]:
     return {
         "n_rows": F.count(F.lit(1)),

@@ -24,10 +24,10 @@ from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 from datetime import datetime, timedelta
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from etl_portofolio_spark.sinks.writer import write_partitioned
+from etl_portofolio_spark.sinks.writer import observed, write_partitioned
 
 DS_FORMAT = "%Y%m%d"  # the reference's yyyyMMdd string partition key
 
@@ -61,12 +61,23 @@ def time_windows(
         t += delta
 
 
+def window_days(start: datetime, end: datetime) -> set[str]:
+    """``ds`` values of the days ``[start, end)`` overlaps — worked out on
+    the driver, in the wall-clock coordinates described at
+    :meth:`IncrementalRunner.run_from_watermark`."""
+    days = set()
+    day = datetime(start.year, start.month, start.day)
+    while day < end:
+        days.add(day.strftime(DS_FORMAT))
+        day += timedelta(days=1)
+    return days
+
+
 @dataclass
 class WindowResult:
     window_start: datetime
     window_end: datetime
     rows: int
-    skipped_empty: bool
 
 
 class IncrementalRunner:
@@ -77,10 +88,11 @@ class IncrementalRunner:
     ``transform`` is the per-batch logic; the sink is a ``ds``-
     partitioned parquet path written with dynamic partition overwrite.
 
-    Empty batches are skipped without writing — the reference's
-    ``df.count() == 0`` gate (`Ingestion Data (MySQL).py:175-178`) done
-    with ``isEmpty()`` (scans at most one partition instead of counting
-    everything).
+    Each window is one observed write pass: the row count and the
+    partitions written come back from the write itself. An empty window
+    writes nothing and reports ``rows == 0`` — the reference's
+    empty-batch gate (`Ingestion Data (MySQL).py:175-178`) without a
+    probe job of its own.
     """
 
     def __init__(
@@ -89,25 +101,23 @@ class IncrementalRunner:
         source: Callable[[datetime, datetime], DataFrame],
         target_path: str,
         transform: Callable[[DataFrame], DataFrame] | None = None,
-        partition_col: str = "ds",
     ) -> None:
         self.spark = spark
         self.source = source
         self.transform = transform or (lambda df: df)
         self.target_path = target_path
-        self.partition_col = partition_col
         #: partitions already (re)written by THIS run — first touch of a
         #: partition overwrites it (the reference's day-rollover
         #: truncate), later windows of the same partition append.
         self._seen: set = set()
 
     def watermark(self) -> str | None:
-        return latest_partition(self.target_path, self.partition_col)
+        return latest_partition(self.target_path)
 
-    def _write(self, batch: DataFrame, mode: str) -> None:
+    def _write(self, batch: DataFrame, mode: str) -> dict:
         """Sink one partition-subset of a batch; overridden by the
         catalog-table runner."""
-        write_partitioned(batch, self.target_path, self.partition_col, mode=mode)
+        return write_partitioned(batch, self.target_path, mode=mode)
 
     def run_window(self, start: datetime, end: datetime) -> WindowResult:
         """Run one window standalone: rewrites the partitions it touches."""
@@ -119,31 +129,40 @@ class IncrementalRunner:
 
         Windows can be FINER than the partition key (hourly windows into
         daily ``ds``): a per-window blanket dynamic overwrite would then
-        clobber the same day's earlier hours. Instead, rows landing in a
-        partition this run has not touched yet are written with dynamic
-        overwrite (truncating whatever an older run left there — K4
-        semantics); rows for partitions this run already wrote are
-        appended.
+        clobber the same day's earlier hours. The window's days D come
+        from its bounds: days this run has not written yet are written
+        with dynamic overwrite (truncating whatever an older run left
+        there — K4 semantics), days it already wrote are appended to.
+        Usually that is one write; a window straddling both kinds makes
+        two filtered writes. Rows whose ``ds`` falls outside D are not
+        written; the window raises ``ValueError`` after writing its own
+        days.
         """
-        batch = self.transform(self.source(start, end))
-        if batch.isEmpty():
-            return WindowResult(start, end, 0, skipped_empty=True)
-        # Cache: the batch is consumed three times (count + ds probe +
-        # write). The reference instead re-read its JDBC source for
-        # every count (`Ingestion Data (MySQL).py:172,175`).
-        batch = batch.persist()
-        rows = batch.count()
-        pc = self.partition_col
-        ds_vals = {r[0] for r in batch.select(pc).distinct().collect()}
-        fresh = ds_vals - self._seen
-        if fresh:
-            self._write(batch.where(F.col(pc).isin(*fresh)), mode="overwrite")
-        stale = ds_vals & self._seen
-        if stale:
-            self._write(batch.where(F.col(pc).isin(*stale)), mode="append")
-        self._seen |= ds_vals
-        batch.unpersist()
-        return WindowResult(start, end, rows, skipped_empty=False)
+        days = window_days(start, end)
+        if not days:
+            return WindowResult(start, end, 0)
+        batch_ds = Observation()
+        batch = self.transform(self.source(start, end)).observe(
+            batch_ds, F.collect_set("ds").alias("ds")
+        )
+        rows, written = 0, set()
+        for mode, part in (
+            ("overwrite", days - self._seen),
+            ("append", days & self._seen),
+        ):
+            if part:
+                got = self._write(batch.where(F.col("ds").isin(*part)), mode)
+                rows += got["n_rows"]
+                written |= got["partitions"]
+        # the first write's pass fulfils the observation
+        strays = set(observed(batch_ds).get("ds", ())) - days
+        if strays:
+            raise ValueError(
+                f"window [{start}, {end}) produced ds {sorted(strays)} outside "
+                f"its days {sorted(days)}; those rows were not written"
+            )
+        self._seen |= written
+        return WindowResult(start, end, rows)
 
     def run(
         self, start: datetime, end: datetime, delta: timedelta
@@ -190,24 +209,16 @@ class TableIncrementalRunner(IncrementalRunner):
         source: Callable[[datetime, datetime], DataFrame],
         target_table: str,
         transform: Callable[[DataFrame], DataFrame] | None = None,
-        partition_col: str = "ds",
     ) -> None:
-        super().__init__(
-            spark, source, target_path="", transform=transform,
-            partition_col=partition_col,
-        )
+        super().__init__(spark, source, target_path="", transform=transform)
         self.target_table = target_table
 
     def watermark(self) -> str | None:
         from etl_portofolio_spark.sinks.writer import latest_table_partition
 
-        return latest_table_partition(
-            self.spark, self.target_table, self.partition_col
-        )
+        return latest_table_partition(self.spark, self.target_table)
 
-    def _write(self, batch: DataFrame, mode: str) -> None:
+    def _write(self, batch: DataFrame, mode: str) -> dict:
         from etl_portofolio_spark.sinks.writer import write_partitioned_table
 
-        write_partitioned_table(
-            batch, self.target_table, self.partition_col, mode=mode
-        )
+        return write_partitioned_table(batch, self.target_table, mode=mode)

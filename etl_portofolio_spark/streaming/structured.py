@@ -161,8 +161,8 @@ def make_batch_sink(
         if transform is not None:
             out = transform(out)
         out = out.withColumn("batch_id", F.lit(int(batch_id)))
-        if not out.isEmpty():
-            write_partitioned(out, target_path, [partition_col, "batch_id"])
+        # an empty batch writes no partition
+        write_partitioned(out, target_path, [partition_col, "batch_id"])
 
     return _sink
 

@@ -649,24 +649,39 @@ def test_jdbc_incremental_ingest_end_to_end(spark, tmp_path):
     assert spark.read.parquet(target).count() == len(rows)
 
 
-def test_file_sizing_tracks_parquet_bytes(spark, tmp_path):
-    """maxRecordsPerFile derives from measured parquet encoding: with a
-    small byte target, emitted files stay near (within 4x of) it, and the
-    sizing scratch dir is cleaned up / invisible to readers."""
-    target = str(tmp_path / "tbl")
-    ev = _events_with_ds(spark)
-    write_partitioned(ev, target, target_file_bytes=64 * 1024)
-    files = [
-        os.path.join(dp, f)
-        for dp, _, fs in os.walk(target)
-        for f in fs
-        if f.endswith(".parquet")
-    ]
-    assert files
-    for f in files:
-        assert os.path.getsize(f) < 4 * 64 * 1024
-    assert not [d for d in os.listdir(target) if d.startswith(".sizing-")]
-    assert spark.read.parquet(target).count() == ev.count()
+def _files_per_ds(target: str) -> dict[str, int]:
+    return {
+        d: len([f for f in os.listdir(os.path.join(target, d)) if f.endswith(".parquet")])
+        for d in os.listdir(target)
+        if d.startswith("ds=")
+    }
+
+
+def test_file_sizing_follows_aqe_advisory_size(spark, tmp_path):
+    """The writer's REBALANCE hint lets AQE size files: a default write
+    gives one file per ds however many input partitions feed it, and a
+    ds larger than the advisory partition size splits across files."""
+    ev = spark.range(0, 30000, numPartitions=16).select(
+        F.sha2(F.col("id").cast("string"), 256).alias("payload"),
+        F.concat(F.lit("2024010"), (F.col("id") % 3 + 1).cast("string")).alias("ds"),
+    )
+    small = str(tmp_path / "small")
+    got = write_partitioned(ev, small)
+    days = {"20240101", "20240102", "20240103"}
+    assert got["n_rows"] == 30000 == spark.read.parquet(small).count()
+    assert got["partitions"] == days
+    assert _files_per_ds(small) == {f"ds={d}": 1 for d in days}
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(64 * 1024))
+    try:
+        split = str(tmp_path / "split")
+        write_partitioned(ev, split)
+    finally:
+        spark.conf.set(key, old)
+    assert max(_files_per_ds(split).values()) > 1
+    assert spark.read.parquet(split).count() == 30000
 
 
 def test_compact_partition_reduces_files_preserves_rows(spark, tmp_path):
@@ -700,7 +715,7 @@ def test_retention_sweep_drops_only_old_partitions(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "20240101"), (2, "20240102"), (3, "20240103")], "k long, ds string"
     )
-    write_partitioned(df, path, "ds", target_file_bytes=None)
+    write_partitioned(df, path, "ds")
     dropped = retention_sweep(spark, path, "ds", keep_from="20240102")
     assert dropped == ["20240101"]
     left = sorted(r["ds"] for r in spark.read.parquet(path).collect())
@@ -716,7 +731,7 @@ def test_analyze_table_feeds_cbo_stats(spark, catalog_db, tmp_path):
     df = spark.createDataFrame(
         [(i, f"2024010{1 + i % 2}") for i in range(40)], "k long, ds string"
     )
-    write_partitioned_table(df, table, "ds", target_file_bytes=None)
+    write_partitioned_table(df, table, "ds")
     analyze_table(spark, table, columns=("k",))
     detail = {
         (r[0] or "").strip(): (r[1] or "")
@@ -1101,20 +1116,17 @@ def test_orc_partitioned_write_roundtrip_and_pushdown(spark, tmp_path):
     assert "PushedFilters: [IsNotNull(k), GreaterThan(k,50)" in plan
 
 
-def test_write_with_metrics_observes_during_write(spark, tmp_path):
+def test_write_partitioned_observes_metrics_during_write(spark, tmp_path):
     """Audit metrics come out of the write pass itself and match an
     independent aggregation; the write is a normal partitioned write."""
-    from etl_portofolio_spark.sinks.writer import (
-        default_write_metrics,
-        write_with_metrics,
-    )
+    from etl_portofolio_spark.sinks.writer import default_write_metrics
 
     ev = load_table(spark, SF_DIR, "events").select(
         "event_id", "user_id", "ts", F.date_format("ts", "yyyyMMdd").alias("ds")
     )
     path = str(tmp_path / "observed")
-    got = write_with_metrics(
-        ev, path, default_write_metrics("user_id", "ts"), partition_col="ds"
+    got = write_partitioned(
+        ev, path, "ds", metrics=default_write_metrics("user_id", "ts")
     )
     expected = ev.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -1130,6 +1142,25 @@ def test_write_with_metrics_observes_during_write(spark, tmp_path):
     back = spark.read.parquet(path)
     assert back.count() == got["n_rows"]
     assert "ds" in back.columns
+
+
+@pytest.mark.parametrize("empty", ["data", "plan"])
+def test_write_partitioned_empty_frame_writes_nothing(spark, tmp_path, empty):
+    """An empty frame reports n_rows == 0 and writes no partition, both
+    when the data is empty and when the optimizer proves the plan empty
+    (which drops the observation node)."""
+    from etl_portofolio_spark.sinks.writer import default_write_metrics
+
+    ev = _events_with_ds(spark)
+    cond = F.col("event_id") < 0 if empty == "data" else F.lit(False)
+    path = str(tmp_path / "empty")
+    got = write_partitioned(
+        ev.where(cond), path, metrics=default_write_metrics("user_id", "ts")
+    )
+    assert got["n_rows"] == 0
+    assert got["partitions"] == set()
+    assert got["min_ts"] is None
+    assert not [d for d in os.listdir(path) if d.startswith("ds=")]
 
 
 def test_export_jsonl_shards_bounded_and_ordered(spark, tmp_path):

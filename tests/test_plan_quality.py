@@ -167,7 +167,7 @@ def test_partition_pruning_on_ds_layout(spark, tmp_path):
         [(i, f"2024010{1 + i % 3}") for i in range(60)], "k long, ds string"
     )
     path = str(tmp_path / "pt")
-    write_partitioned(df, path, "ds", target_file_bytes=None)
+    write_partitioned(df, path, "ds")
     scan = spark.read.parquet(path).where(F.col("ds") == "20240102")
     plan = _plan(scan)
     pf = plan.split("PartitionFilters:")[1].split("\n")[0]

@@ -2,7 +2,8 @@
 
 ``session.apply_runtime_confs`` sets RUNTIME_CONFS once per session, at
 ``build_session`` or at the first registry dispatch; plan builders never
-touch session confs, and no engine module grows an env-var switch.
+touch session confs, no module outside ``session.py`` and ``plans/``
+sets one, and no engine module grows an env-var switch.
 """
 
 from __future__ import annotations
@@ -63,6 +64,10 @@ def test_no_env_switches_and_no_per_builder_confs():
             bad += [f"{rel}: env {v!r}" for v in _env_reads(ast.parse(src)) if v not in allowed]
             if rel.startswith("plans/") and "apply_runtime_confs(" in src:
                 bad.append(f"{rel}: apply_runtime_confs( in a plan builder module")
+            # jobs, sinks and operators carry what they need as write
+            # options or expressions; a session conf set there leaks
+            if rel != "session.py" and not rel.startswith("plans/") and "conf.set(" in src:
+                bad.append(f"{rel}: conf.set( outside session.py and plans/")
     assert not bad, bad
 
 
