@@ -17,11 +17,15 @@ operators:
    (`compact_partition`, dynamic-overwrite scoped to one partition,
    optional sort clustering for min/max skipping),
 3. **stats refresh** — optional `ANALYZE TABLE` for the CBO when the
-   path is registered as a table (`analyze_table`).
+   path is registered as a table (`analyze_table`),
+4. **zonemap refresh** — optional (`zonemap_col`): the persisted map
+   (`sources/skipping.refresh_zonemap`) footer-reads only the files it
+   lacks and drops the ones compaction removed; no data scan, no job.
 
-Scale shape: steps 1-2 decide everything from filesystem metadata —
-the only data read/written is the partitions actually rewritten, so a
-quiet table costs O(#partitions) listing and nothing else.  Reruns
+Scale shape: steps 1, 2 and 4 decide everything from filesystem
+metadata — the only data read/written is the partitions actually
+rewritten, so a quiet table costs O(#partitions) listing and nothing
+else.  Reruns
 are idempotent: a compacted partition no longer exceeds the threshold
 and is skipped; a swept partition is gone.
 """
@@ -33,10 +37,7 @@ import argparse
 from pyspark.sql import SparkSession
 
 from etl_portofolio_spark.session import build_session
-from etl_portofolio_spark.sources.skipping import (
-    persist_zonemap,
-    refresh_zonemap_incremental,
-)
+from etl_portofolio_spark.sources.skipping import refresh_zonemap
 from etl_portofolio_spark.sinks.writer import (
     analyze_table,
     compact_partition,
@@ -90,19 +91,14 @@ def run_maintenance(
     }
     # zonemap refresh LAST — compaction just changed the file set, and
     # the persisted map must describe the files readers will actually
-    # open (a stale map is still safe via load_zonemap's reconciliation,
-    # but refreshed here the very next reader prunes at full strength).
-    # Quiet nights take the O(new files) incremental path; a compaction
-    # rewrite invalidates wholesale, so that night pays the full rebuild.
+    # open (a stale map is still safe via skipping._reconcile, but
+    # refreshed here the very next reader prunes at full strength).
+    # The refresh footer-reads only the files the map lacks — appends,
+    # or the files a compaction wrote — and drops the ones it removed.
     zonemap_files = None
     if zonemap_col:
-        if compacted:
-            zonemap_files = persist_zonemap(spark, path, zonemap_col)
-        else:
-            kept, added, _dropped = refresh_zonemap_incremental(
-                spark, path, zonemap_col
-            )
-            zonemap_files = kept + added
+        kept, added, _dropped = refresh_zonemap(path, zonemap_col)
+        zonemap_files = kept + added
     return {
         "dropped": dropped,
         "compacted": compacted,

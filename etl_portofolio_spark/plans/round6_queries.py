@@ -74,7 +74,7 @@ def q_zonemap_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats / Iceberg manifests.
     """
     from etl_portofolio_spark.sinks.writer import write_range_clustered
-    from etl_portofolio_spark.sources.skipping import skipping_scan
+    from etl_portofolio_spark.sources.skipping import footer_zonemap, skipping_scan
 
     def _build(tmp: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(
@@ -83,14 +83,12 @@ def q_zonemap_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_range_clustered(ev, tmp, "event_id", n_files=8)
 
     path = ensure_fixture(sf_dir, "events_clustered", _build)
-    bounds = (
-        spark.read.parquet(path)
-        .agg(F.min("event_id").alias("lo"), F.max("event_id").alias("hi"))
-        .first()
-    )
-    lo = bounds["lo"]
-    hi = lo + (bounds["hi"] - bounds["lo"]) // 20
-    df = skipping_scan(spark, path, "event_id", lo, hi)
+    # event_id is a non-null bigint: the footer envelopes' extremes are
+    # the table's exact min/max, with no aggregate job
+    zmap = footer_zonemap(path, "event_id")
+    lo = min(zmin for _, zmin, _, _ in zmap)
+    hi = lo + (max(zmax for _, _, zmax, _ in zmap) - lo) // 20
+    df = skipping_scan(spark, path, "event_id", lo, hi, zonemap=zmap)
     n_read = len(df.inputFiles())
     if not 0 < n_read < 8:
         raise AssertionError(
@@ -1089,6 +1087,7 @@ def q_bloom_pruned_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom_point_lookup,
         build_bloom_index,
     )
+    from etl_portofolio_spark.sources.skipping import footer_zonemap
 
     def _ready(p: str) -> bool:
         return os.path.exists(
@@ -1103,7 +1102,8 @@ def q_bloom_pruned_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_bloom_index(spark, tmp, "event_id")
 
     path = ensure_fixture(sf_dir, "events_hashed", _build, ready=_ready)
-    needle = spark.read.parquet(path).agg(F.max("event_id")).first()[0]
+    # the max of a non-null bigint column, from footer stats (no job)
+    needle = max(zmax for _, _, zmax, _ in footer_zonemap(path, "event_id"))
     df = bloom_point_lookup(spark, path, "event_id", needle)
     n_read = len(df.inputFiles())
     if not 0 < n_read < 8:

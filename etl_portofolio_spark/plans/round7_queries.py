@@ -1388,7 +1388,6 @@ def q_sql_script_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     logarithmic in the price domain — O(log(domain)) passes at any
     data size.
     """
-    spark.conf.set("spark.sql.scripting.enabled", "true")
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("r7_orders")
     return spark.sql(
         f"""

@@ -314,8 +314,7 @@ def retention_sweep(
     on the partition value — the reference's `ds=yyyyMMdd` strings sort
     chronologically). Metadata + file-system only: O(#partitions), no
     data scan. Returns the dropped partition values."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    jpath, fs = _hadoop_fs(spark, path)
     if not fs.exists(jpath):
         return []
     dropped = []

@@ -19,11 +19,13 @@ Design for 100 TB:
   carries only the indexed column.
 - **Sidecar** is O(#files) rows of (file, m, k, n, bits) parquet under
   ``<path>/_bloom/<col>/`` — the `_`-prefixed convention Spark readers
-  ignore (same contract as `_zonemap`).
-- **Probe** is driver-side metadata: hash the needle once, test each
-  file's bits, read survivors with basePath (partition columns kept),
-  re-apply the exact predicate (Bloom admits false positives, never
-  false negatives — the correctness contract mirrors
+  ignore (same contract as `_zonemap`).  ``file`` is the path relative
+  to the table root, the key of the file index in ``sources.skipping``.
+- **Probe** is driver-side metadata, no Spark job: read the sidecar
+  with pyarrow, reconcile it against the live listing, hash the needle
+  once, test each file's bits, read survivors with basePath (partition
+  columns kept), re-apply the exact predicate (Bloom admits false
+  positives, never false negatives — the correctness contract mirrors
   ``skipping.prune_files``).
 
 Hashing is md5-based like everything else in this engine, so the index
@@ -34,11 +36,17 @@ PYTHONHASHSEED dependence).
 from __future__ import annotations
 
 import hashlib
-import math
 import os
 
+import pyarrow.dataset as pa_ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from etl_portofolio_spark.sources.skipping import (
+    _read_sidecar,
+    _read_survivors,
+    _reconcile,
+)
 
 _BLOOM_DIR = "_bloom"
 #: target bits per distinct value; 10 bits/value with k=7 gives ~0.8% FPP
@@ -64,7 +72,8 @@ def build_bloom_index(
     spark: SparkSession, path: str, col: str, bits_per_value: int = _BITS_PER_VALUE
 ) -> int:
     """Build and persist per-file Bloom filters for ``col`` under
-    ``<path>/_bloom/<col>/``; returns the number of files indexed.
+    ``<path>/_bloom/<col>/``; returns the number of files indexed,
+    counted from the sidecar's parquet metadata (no read-back job).
 
     One distributed pass: per-file grouping + an Arrow-batched fold.
     ``m`` sizes to the file's row count (distinct-count upper bound),
@@ -116,29 +125,23 @@ def build_bloom_index(
     sidecar = src.groupBy("__file").applyInPandas(
         _fold, "file string, m long, k int, n_values long, bits binary"
     )
-    target = f"{path}/{_BLOOM_DIR}/{col}"
+    target = os.path.join(path, _BLOOM_DIR, col)
     sidecar.write.mode("overwrite").parquet(target)
-    return spark.read.parquet(target).count()
+    return pa_ds.dataset(target, format="parquet").count_rows()
 
 
 def _load_sidecar(
-    spark: SparkSession, path: str, col: str
-) -> list[tuple[str, int, int, bytes]] | None:
-    """Sidecar rows with file paths resolved against the CURRENT table
-    root (they are stored relative — see build_bloom_index)."""
-    target = f"{path}/{_BLOOM_DIR}/{col}"
-    if not os.path.isdir(target):
+    path: str, col: str
+) -> list[tuple[str, int | None, int | None, bytes | None]] | None:
+    """Sidecar rows reconciled against the live listing
+    (``skipping._reconcile``): one ``(file, m, k, bits)`` per live data
+    file, ``m is None`` for a file the sidecar lacks.  ``None`` when no
+    index was ever built."""
+    rows = _read_sidecar(os.path.join(path, _BLOOM_DIR, col))
+    if rows is None:
         return None
-    root = os.path.abspath(path).rstrip("/")
-    return [
-        (
-            os.path.join(root, r["file"].removeprefix("file://").lstrip("/")),
-            r["m"],
-            r["k"],
-            bytes(r["bits"]),
-        )
-        for r in spark.read.parquet(target).collect()
-    ]
+    indexed = {r["file"]: (r["m"], r["k"], r["bits"]) for r in rows}
+    return [(f, *(e or (None, None, None))) for f, e in _reconcile(path, indexed)]
 
 
 def _engine_string(spark: SparkSession, value: object) -> str:
@@ -162,9 +165,10 @@ def _engine_string(spark: SparkSession, value: object) -> str:
 
 
 def bloom_prune_files(
-    sidecar: list[tuple[str, int, int, bytes]], value: object
+    sidecar: list[tuple[str, int | None, int | None, bytes | None]], value: object
 ) -> list[str]:
-    """Files whose Bloom filter claims the value may be present.
+    """Files whose Bloom filter claims the value may be present; a file
+    the sidecar lacks (``m is None``) always survives.
 
     Like ``skipping.prune_files``: may keep useless files (false
     positives, ~1%), may NEVER drop a file that holds the value.
@@ -175,7 +179,7 @@ def bloom_prune_files(
     """
     keep = []
     for f, m, k, bits in sidecar:
-        if all(
+        if m is None or all(
             bits[idx >> 3] & (1 << (idx & 7)) for idx in _indexes(value, m, k)
         ):
             keep.append(f)
@@ -187,34 +191,20 @@ def bloom_point_lookup(
     path: str,
     col: str,
     value: object,
-    sidecar: list[tuple[str, int, int, bytes]] | None = None,
+    sidecar: list[tuple[str, int | None, int | None, bytes | None]] | None = None,
 ) -> DataFrame:
     """Equality lookup served through the Bloom sidecar: prune the file
     list, read survivors (basePath keeps partition columns), re-apply
-    the exact predicate.  Falls back to a full scan when no index was
-    ever built (pruning degrades, correctness doesn't) — the same
-    degradation contract as ``skipping.load_zonemap``.
-
-    Reconciliation: files on disk but missing from the sidecar
-    (appended since the build) always survive; sidecar entries whose
-    files are gone are dropped.
+    the exact predicate (``skipping._read_survivors``).  Falls back to a
+    full scan when no index was ever built (pruning degrades,
+    correctness doesn't) — the same degradation contract as
+    ``skipping.load_zonemap``.  Files appended since the build always
+    survive; entries whose files are gone were dropped by
+    :func:`_load_sidecar`.
     """
-    from etl_portofolio_spark.sources.skipping import _data_files
-
-    side = sidecar if sidecar is not None else _load_sidecar(spark, path, col)
-    live = set(_data_files(path))
+    side = sidecar if sidecar is not None else _load_sidecar(path, col)
+    exact = F.col(col) == F.lit(value)
     if side is None:
-        return spark.read.parquet(path).where(F.col(col) == F.lit(value))
-    indexed = {f for f, *_ in side}
-    keep = [
-        f
-        for f in bloom_prune_files(side, _engine_string(spark, value))
-        if f in live
-    ] + sorted(live - indexed)
-    if not keep:
-        return spark.read.parquet(path).where(F.lit(False))
-    return (
-        spark.read.option("basePath", path)
-        .parquet(*keep)
-        .where(F.col(col) == F.lit(value))
-    )
+        return spark.read.parquet(path).where(exact)
+    keep = bloom_prune_files(side, _engine_string(spark, value))
+    return _read_survivors(spark, path, keep, [exact])

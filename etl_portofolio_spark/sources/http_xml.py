@@ -73,6 +73,20 @@ class WindowPartition(InputPartition):
     end: str
 
 
+def _window_partitions(start: str, end: str, minutes: int) -> list[WindowPartition]:
+    """Tumbling ``minutes``-long windows over [start, end) (``TIME_FMT``
+    strings), the last one cut at ``end`` — one input partition each."""
+    t0 = datetime.strptime(start, TIME_FMT)
+    t1 = datetime.strptime(end, TIME_FMT)
+    delta = timedelta(minutes=minutes)
+    out = []
+    while t0 < t1:
+        w_end = min(t0 + delta, t1)
+        out.append(WindowPartition(t0.strftime(TIME_FMT), w_end.strftime(TIME_FMT)))
+        t0 = w_end
+    return out
+
+
 def resolve_fetcher(spec: str) -> Callable[[str, str, str], str]:
     """Import ``module:function`` → callable(url, xml_body, window_id) -> CSV text."""
     mod, _, fn = spec.partition(":")
@@ -100,15 +114,7 @@ class XmlApiReader(DataSourceReader):
         """Tumbling windows over [start, end) — the reference's 5-minute
         driver loop (`Ingestion Data (XML).py:70-75`) became the
         partition plan, so windows fetch in parallel."""
-        t0 = datetime.strptime(self.start, TIME_FMT)
-        t1 = datetime.strptime(self.end, TIME_FMT)
-        delta = timedelta(minutes=self.window_minutes)
-        out = []
-        while t0 < t1:
-            w_end = min(t0 + delta, t1)
-            out.append(WindowPartition(t0.strftime(TIME_FMT), w_end.strftime(TIME_FMT)))
-            t0 = w_end
-        return out
+        return _window_partitions(self.start, self.end, self.window_minutes)
 
     def read(self, partition: WindowPartition) -> Iterator[tuple]:
         """Executor-side: fetch one window's CSV and parse with explicit
@@ -195,17 +201,7 @@ class XmlApiStreamReader(DataSourceStreamReader):
         return {"t": self._batch.end}
 
     def partitions(self, start: dict, end: dict) -> list[WindowPartition]:
-        t0 = datetime.strptime(start["t"], TIME_FMT)
-        t1 = datetime.strptime(end["t"], TIME_FMT)
-        delta = timedelta(minutes=self._batch.window_minutes)
-        out = []
-        while t0 < t1:
-            w_end = min(t0 + delta, t1)
-            out.append(
-                WindowPartition(t0.strftime(TIME_FMT), w_end.strftime(TIME_FMT))
-            )
-            t0 = w_end
-        return out
+        return _window_partitions(start["t"], end["t"], self._batch.window_minutes)
 
     def read(self, partition: WindowPartition) -> Iterator[tuple]:
         return self._batch.read(partition)

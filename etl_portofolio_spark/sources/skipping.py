@@ -1,24 +1,29 @@
-"""Read-side data skipping: zone-map file pruning over clustered layouts.
+"""Read-side data skipping: one driver-side file index for file pruning.
 
 The read-side half of ``sinks.writer.write_range_clustered`` (which
 lays files out with disjoint per-file [min, max] envelopes on the
 cluster column).  A point or range predicate on that column should
 read ONE file, not all of them — this module makes that happen from
 plain Spark + parquet, the way Delta's file-level stats / Iceberg's
-manifest min-max do it:
+manifest min-max do it.  Pruning is decided on the driver from
+metadata; Spark only reads the files that survive.
 
-- ``build_zonemap``: one distributed scan produces the per-file
-  (file, min, max, rows) table — O(#files) rows, built ONCE and
-  amortized over every subsequent query.  At 100 TB the zonemap for a
-  100k-file table is ~100k rows: driver-collectable metadata, the same
-  scale contract as Iceberg's manifests.
-- ``footer_zonemap``: the no-extra-scan variant — reads parquet FOOTER
-  statistics via pyarrow (pure metadata IO, no data pages touched).
-  Right after a write, when the files were just produced and a full
-  scan would be wasteful; footer stats are what the writer already
-  persisted for free.
-- ``skipping_scan``: prunes the file list against the predicate's
-  [lo, hi] envelope, reads only surviving files, and RE-APPLIES the
+- ``footer_zonemap``: per-file (file, min, max, rows) envelopes from
+  parquet FOOTER statistics via pyarrow — metadata IO only, no data
+  pages, no Spark job.  Footers are the only source of zonemap stats.
+- ``refresh_zonemap`` / ``load_zonemap``: the persisted map, a single
+  pyarrow-written file under ``<path>/_zonemap/<col>/``.  A refresh
+  footer-reads only the files the map lacks and drops entries whose
+  files are gone, so it serves both appends and compaction.
+- The index is shared with ``sources.bloomindex``: both sidecars key
+  each file by its path RELATIVE to the table root (the table directory
+  may be renamed, or named by a relative path), both are read with
+  pyarrow by :func:`_read_sidecar`, and :func:`_reconcile` joins either
+  to the live listing — a file the sidecar lacks comes back with
+  unknown stats and always survives; an entry whose file is gone drops.
+- ``skipping_scan`` / ``skipping_scan_multi``: prune the file list
+  against the predicate's [lo, hi] envelope, then
+  :func:`_read_survivors` reads only surviving files and RE-APPLIES the
   exact predicate (the zonemap admits false positives — a surviving
   file can still hold rows outside the range; it can never hold a
   false negative, which is the correctness contract).
@@ -31,48 +36,54 @@ which composes with this (``PushedFilters`` in the scan node).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import glob
+import os
+from collections.abc import Mapping
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def build_zonemap(spark: SparkSession, path: str, col: str) -> DataFrame:
-    """Per-file [min, max, rows] envelope table for ``col``.
-
-    One aggregation grouped on ``input_file_name()`` — combinable
-    map-side, shuffles only #files rows.  Persist the result next to
-    the table (a normal parquet write) and every reader prunes from it
-    without touching the data again.
-    """
-    # mergeSchema: on a schema-evolved layout the default read may pick
-    # a vintage that predates `col`; merged, old files contribute NULL
-    # min/max → unknown stats → never pruned (the safe degradation)
-    return (
-        spark.read.option("mergeSchema", "true").parquet(path)
-        .groupBy(F.input_file_name().alias("file"))
-        .agg(
-            F.min(col).alias("zmin"),
-            F.max(col).alias("zmax"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-    )
+#: zonemap artifacts live under an underscore directory — Spark's file
+#: listing ignores `_`/`.`-prefixed entries, so the map never pollutes
+#: reads of the table itself (the `_SUCCESS` convention)
+_ZONEMAP_DIR = "_zonemap"
+_ZONEMAP_FILE = "zonemap.parquet"
 
 
 def _data_files(path: str) -> list[str]:
-    """Parquet DATA files under ``path`` — excludes entries under
+    """Parquet DATA files under ``path``, sorted — excludes entries under
     ``_``/``.``-prefixed components (Spark's hidden-file convention:
     `_SUCCESS`, `_zonemap`, checkpoint metadata), matching what
     ``spark.read.parquet`` itself would list.
     """
-    import glob
-    import os
-
     out = []
     for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True):
         rel = os.path.relpath(f, path)
         if any(p.startswith(("_", ".")) for p in rel.split(os.sep)):
             continue
         out.append(f)
-    return out
+    return sorted(out)
+
+
+def _footer_envelope(file: str, col: str) -> tuple[object, object, int]:
+    """``(min, max, rows)`` of ``col`` from one file's parquet footer;
+    min and max are ``None`` (unknown stats, never pruned) when the
+    column is absent — a schema-evolved vintage that predates it, or a
+    Hive partition column — or a row group carries no stats."""
+    md = pq.read_metadata(file)
+    if col not in md.schema.names:
+        return None, None, md.num_rows
+    idx = md.schema.names.index(col)
+    lo = hi = None
+    for rg in range(md.num_row_groups):
+        st = md.row_group(rg).column(idx).statistics
+        if st is None or not st.has_min_max:
+            return None, None, md.num_rows
+        lo = st.min if lo is None else min(lo, st.min)
+        hi = st.max if hi is None else max(hi, st.max)
+    return lo, hi, md.num_rows
 
 
 def footer_zonemap(path: str, col: str) -> list[tuple[str, object, object, int]]:
@@ -83,36 +94,69 @@ def footer_zonemap(path: str, col: str) -> list[tuple[str, object, object, int]]
     design: footers are a few KiB each and the file count bounds the
     work — the same O(#files) contract as a manifest listing.  On an
     object store this is one ranged GET per file; for hot tables
-    prefer the persisted ``build_zonemap`` output.
+    prefer the persisted map (``refresh_zonemap``).
     """
-    import glob
-    import os
+    return [(f, *_footer_envelope(f, col)) for f in _data_files(path)]
 
-    import pyarrow.parquet as pq
 
-    out: list[tuple[str, object, object, int]] = []
-    for f in sorted(_data_files(path)):
-        md = pq.ParquetFile(f).metadata
-        if col not in md.schema.names:
-            # schema-evolved vintage (file predates the column) or a
-            # Hive partition column (never in the footer): unknown
-            # stats — the file is unprunable, never an error
-            out.append((f, None, None, md.num_rows))
-            continue
-        idx = md.schema.names.index(col)
-        lo, hi, rows = None, None, 0
-        prunable = True
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            rows += md.row_group(rg).num_rows
-            if st is None or not st.has_min_max:
-                # a row group without stats makes the file unprunable
-                prunable = False
-                break
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-        out.append((f, lo, hi, rows) if prunable else (f, None, None, rows))
-    return out
+# --- the file index: sidecars keyed relative to the table root ---------------
+
+
+def _read_sidecar(target: str) -> list[dict] | None:
+    """Rows of a sidecar file or directory, read on the driver with
+    pyarrow (no Spark job); ``None`` when none was ever written.  The
+    directory read skips `_`/`.` entries (`_SUCCESS`, `.crc`, temp
+    files), as Spark's would."""
+    if not os.path.exists(target):
+        return None
+    return pq.read_table(target).to_pylist()
+
+
+def _reconcile(
+    path: str, entries: Mapping[str, tuple]
+) -> list[tuple[str, tuple | None]]:
+    """Join a sidecar, keyed by file path RELATIVE to the table root,
+    to the live file listing — the property that makes a stale sidecar
+    safe:
+
+    - an entry whose file is gone from disk (compacted away) drops out
+      (reading it would error);
+    - a file on disk the sidecar lacks (appended since it was built)
+      comes back paired with ``None``: unknown stats, so it ALWAYS
+      survives pruning — skipping degrades, correctness doesn't.
+
+    Returns ``[(live_file, entry or None), ...]`` with files spelled
+    like ``path``.  An O(#files) driver-side listing, the same metadata
+    contract as pruning itself.
+    """
+    return [(f, entries.get(os.path.relpath(f, path))) for f in _data_files(path)]
+
+
+def _read_survivors(
+    spark: SparkSession, path: str, files: list[str], conds: list[Column]
+) -> DataFrame:
+    """Read the files that survived pruning and re-apply the exact
+    predicate ``conds`` — pruning is necessary, not sufficient.  No
+    survivor gives an empty frame with the table's schema."""
+    if not files:
+        return spark.read.parquet(path).where(F.lit(False))
+    # basePath keeps Hive partition columns in the schema when reading
+    # a pruned subset of a partitioned layout — without it the two
+    # branches (pruned vs empty-prune) would return different schemas
+    df = spark.read.option("basePath", path).parquet(*files)
+    for cond in conds:
+        df = df.where(cond)
+    return df
+
+
+def _range_conds(preds: list[tuple[str, object | None, object | None]]) -> list[Column]:
+    conds = []
+    for col, lo, hi in preds:
+        if lo is not None:
+            conds.append(F.col(col) >= F.lit(lo))
+        if hi is not None:
+            conds.append(F.col(col) <= F.lit(hi))
+    return conds
 
 
 def prune_files(
@@ -156,137 +200,68 @@ def skipping_scan(
     list — never a wrong answer.
     """
     zmap = zonemap if zonemap is not None else footer_zonemap(path, col)
-    files = prune_files(zmap, lo, hi)
-    if not files:
-        # no file can match: an empty frame with the table's schema
-        return spark.read.parquet(path).where(F.lit(False))
-    # basePath keeps Hive partition columns in the schema when reading
-    # a pruned subset of a partitioned layout — without it the two
-    # branches (pruned vs empty-prune) would return different schemas
-    df = spark.read.option("basePath", path).parquet(*files)
-    if lo is not None:
-        df = df.where(F.col(col) >= F.lit(lo))
-    if hi is not None:
-        df = df.where(F.col(col) <= F.lit(hi))
-    return df
+    return _read_survivors(
+        spark, path, prune_files(zmap, lo, hi), _range_conds([(col, lo, hi)])
+    )
 
 
 # --- persisted zonemaps: the maintenance-loop artifact -----------------------
 
-#: zonemap artifacts live under an underscore directory — Spark's file
-#: listing ignores `_`/`.`-prefixed entries, so the map never pollutes
-#: reads of the table itself (the `_SUCCESS` convention)
-_ZONEMAP_DIR = "_zonemap"
+
+def _zonemap_dir(path: str, col: str) -> str:
+    return os.path.join(path, _ZONEMAP_DIR, col)
 
 
-def persist_zonemap(spark: SparkSession, path: str, col: str) -> int:
-    """Build and persist the zonemap for ``col`` at
-    ``<path>/_zonemap/<col>/`` — the nightly-maintenance artifact that
-    lets every subsequent reader prune without touching data OR
-    footers.  Returns the number of files mapped.
-    """
-    zmap = build_zonemap(spark, path, col)
-    target = f"{path}/{_ZONEMAP_DIR}/{col}"
-    zmap.coalesce(1).write.mode("overwrite").parquet(target)
-    return spark.read.parquet(target).count()
+def _mapped(rows: list[dict] | None) -> dict[str, tuple[object, object, int]]:
+    return {r["file"]: (r["zmin"], r["zmax"], r["n_rows"]) for r in rows or ()}
 
 
-def load_zonemap(
-    spark: SparkSession, path: str, col: str
-) -> list[tuple[str, object, object, int]] | None:
-    """Load a persisted zonemap and RECONCILE it against the live file
-    listing — the property that makes a stale map safe:
-
-    - a file in the map but gone from disk (compacted away) is dropped
-      from the map (reading it would error);
-    - a file on disk but missing from the map (appended since the last
-      refresh) enters with unknown stats, so it ALWAYS survives
-      pruning — skipping degrades, correctness doesn't.
+def load_zonemap(path: str, col: str) -> list[tuple[str, object, object, int]] | None:
+    """The persisted zonemap, reconciled against the live file listing
+    (:func:`_reconcile`): unmapped files enter with unknown stats
+    (``n_rows == -1``), so they always survive pruning.
 
     Returns ``None`` when no map was ever persisted (callers fall back
-    to ``footer_zonemap``).  Reconciliation is a driver-side directory
-    listing — O(#files), the same metadata contract as pruning itself.
+    to ``footer_zonemap``).
     """
-    import os
-
-    target = f"{path}/{_ZONEMAP_DIR}/{col}"
-    if not os.path.isdir(target):
+    rows = _read_sidecar(_zonemap_dir(path, col))
+    if rows is None:
         return None
-    mapped = {
-        r["file"].removeprefix("file://"): (r["zmin"], r["zmax"], r["n_rows"])
-        for r in spark.read.parquet(target).collect()
-    }
-    live = set(_data_files(path))
-    out: list[tuple[str, object, object, int]] = []
-    for f in sorted(live):
-        if f in mapped:
-            lo, hi, rows = mapped[f]
-            out.append((f, lo, hi, rows))
-        else:
-            out.append((f, None, None, -1))  # unmapped: never pruned
-    return out
-
-
-def refresh_zonemap_incremental(
-    spark: SparkSession, path: str, col: str
-) -> tuple[int, int, int]:
-    """Bring the persisted zonemap up to date touching only CHANGED
-    files: footer-read the files missing from the map (appends since
-    the last refresh), drop entries whose files are gone (compaction),
-    keep everything else verbatim.  Returns (kept, added, dropped).
-
-    The cost model is the point: a full ``persist_zonemap`` rebuild
-    scans the whole table; this pays O(new files) footer reads + one
-    tiny metadata write — the nightly cadence for an append-mostly
-    table, with the full rebuild reserved for after a clustering
-    rewrite.  Falls back to a full build when no map exists yet.
-    """
-    import os
-
-    import pyarrow.parquet as pq
-
-    target = f"{path}/{_ZONEMAP_DIR}/{col}"
-    if not os.path.isdir(target):
-        return (0, persist_zonemap(spark, path, col), 0)
-    raw = spark.read.parquet(target)
-    raw_rows = raw.collect()
-    live = set(_data_files(path))
-    kept_rows = [
-        r for r in raw_rows if r["file"].removeprefix("file://") in live
+    return [
+        (f, *(e or (None, None, -1))) for f, e in _reconcile(path, _mapped(rows))
     ]
-    dropped = len(raw_rows) - len(kept_rows)
-    known = {r["file"].removeprefix("file://") for r in kept_rows}
-    new_rows = []
-    for f in sorted(live - known):
-        md = pq.ParquetFile(f).metadata
-        if col not in md.schema.names:
-            # evolved vintage / partition column: unknown stats, file
-            # degrades to unprunable instead of aborting the refresh
-            new_rows.append(("file://" + f, None, None, md.num_rows))
-            continue
-        idx = md.schema.names.index(col)
-        lo, hi, rows, prunable = None, None, 0, True
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            rows += md.row_group(rg).num_rows
-            if st is None or not st.has_min_max:
-                prunable = False
-                break
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-        if not prunable:
-            lo = hi = None
-        new_rows.append(("file://" + f, lo, hi, rows))
-    merged = spark.createDataFrame(
-        [tuple(r) for r in kept_rows] + new_rows, raw.schema
-    )
-    # write via a temp dir: the overwrite would otherwise delete the
-    # very files the kept rows were just read from mid-plan
-    merged_rows = merged.collect()
-    spark.createDataFrame(merged_rows, raw.schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(target)
-    return (len(kept_rows), len(new_rows), dropped)
+
+
+def refresh_zonemap(path: str, col: str) -> tuple[int, int, int]:
+    """Bring the persisted zonemap at ``<path>/_zonemap/<col>/`` up to
+    date touching only CHANGED files: footer-read the files the map
+    lacks (appends since the last refresh, or the files a compaction
+    wrote), drop entries whose files are gone, keep everything else
+    verbatim.  With no map yet, every file is footer-read.  Returns
+    (kept, added, dropped).
+
+    The map is written with pyarrow to one fixed file name: a hidden
+    temp file first, then ``os.replace`` over the old map, so a reader
+    sees the old map or the new one, never a partial one.  Any other
+    entry in the directory (a map written by an older layout) goes.
+    """
+    target = _zonemap_dir(path, col)
+    mapped = _mapped(_read_sidecar(target))
+    rows = []
+    for f, e in _reconcile(path, mapped):
+        zmin, zmax, n_rows = e or _footer_envelope(f, col)
+        rows.append(
+            {"file": os.path.relpath(f, path), "zmin": zmin, "zmax": zmax, "n_rows": n_rows}
+        )
+    kept = sum(r["file"] in mapped for r in rows)
+    os.makedirs(target, exist_ok=True)
+    tmp = os.path.join(target, "." + _ZONEMAP_FILE)
+    pq.write_table(pa.Table.from_pylist(rows), tmp)
+    os.replace(tmp, os.path.join(target, _ZONEMAP_FILE))
+    for name in os.listdir(target):
+        if name != _ZONEMAP_FILE:
+            os.remove(os.path.join(target, name))
+    return kept, len(rows) - kept, len(mapped) - kept
 
 
 def skipping_scan_multi(
@@ -307,17 +282,6 @@ def skipping_scan_multi(
     """
     surviving: set[str] | None = None
     for col, lo, hi in preds:
-        zmap = footer_zonemap(path, col)
-        files = set(prune_files(zmap, lo, hi))
+        files = set(prune_files(footer_zonemap(path, col), lo, hi))
         surviving = files if surviving is None else (surviving & files)
-    files_list = sorted(surviving or set())
-    if not files_list:
-        df = spark.read.parquet(path).where(F.lit(False))
-    else:
-        df = spark.read.option("basePath", path).parquet(*files_list)
-    for col, lo, hi in preds:
-        if lo is not None:
-            df = df.where(F.col(col) >= F.lit(lo))
-        if hi is not None:
-            df = df.where(F.col(col) <= F.lit(hi))
-    return df
+    return _read_survivors(spark, path, sorted(surviving or ()), _range_conds(preds))

@@ -19,7 +19,6 @@ than duplicates — the reference's truncate+append, made atomic.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 from datetime import datetime, timedelta
@@ -27,27 +26,31 @@ from datetime import datetime, timedelta
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from etl_portofolio_spark.sinks.writer import observed, write_partitioned
+from etl_portofolio_spark.sinks.writer import _hadoop_fs, observed, write_partitioned
 
 DS_FORMAT = "%Y%m%d"  # the reference's yyyyMMdd string partition key
 
 
-def latest_partition(path: str, partition_col: str = "ds") -> str | None:
+def latest_partition(
+    spark: SparkSession, path: str, partition_col: str = "ds"
+) -> str | None:
     """Max partition value from the directory layout (the watermark).
 
     The reference runs ``SHOW PARTITIONS`` + sort + collect
     (`Ingestion Data (MySQL).py:23-31`); for path tables the partition
-    values are directory names — an O(#partitions) driver-side listing,
-    no Spark job at all.
+    values are directory names — an O(#partitions) listing through the
+    Hadoop FileSystem (so ``file:``/``hdfs:`` URIs work like plain
+    paths), no Spark job at all.
     """
-    if not os.path.isdir(path):
+    jpath, fs = _hadoop_fs(spark, path)
+    if not fs.exists(jpath):
         return None
     prefix = f"{partition_col}="
-    values = [
-        d[len(prefix) :]
-        for d in os.listdir(path)
-        if d.startswith(prefix) and os.path.isdir(os.path.join(path, d))
-    ]
+    values = []
+    for entry in fs.listStatus(jpath):
+        name = entry.getPath().getName()
+        if entry.isDirectory() and name.startswith(prefix):
+            values.append(name[len(prefix) :])
     return max(values) if values else None
 
 
@@ -112,7 +115,7 @@ class IncrementalRunner:
         self._seen: set = set()
 
     def watermark(self) -> str | None:
-        return latest_partition(self.target_path)
+        return latest_partition(self.spark, self.target_path)
 
     def _write(self, batch: DataFrame, mode: str) -> dict:
         """Sink one partition-subset of a batch; overridden by the

@@ -13,6 +13,13 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_MID = "/root/testdata/sf0.01"
 
 
+def cwd_relative(spark, path: str) -> str:
+    """``path`` relative to the working directory: the base both Python's
+    file listing and the JVM's Hadoop FileSystem resolve it against."""
+    assert spark._jvm.java.lang.System.getProperty("user.dir") == os.getcwd()
+    return os.path.relpath(path)
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = build_session("etl-portofolio-spark-tests", master="local[4]")

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from etl_portofolio_spark.catalog import load_table
 from etl_portofolio_spark.sources import bloomindex
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, cwd_relative
 
 
 def _rows(df):
@@ -29,6 +29,18 @@ def test_build_probe_and_prune(spark, tmp_path):
     assert got.count() >= 1
 
 
+def test_lookup_prunes_under_relative_path(spark, tmp_path):
+    path = cwd_relative(spark, str(tmp_path / "hashed"))
+    ev = load_table(spark, SF_DIR, "events").select("event_id", "value")
+    ev.repartition(4).write.parquet(path)
+    bloomindex.build_bloom_index(spark, path, "event_id")
+    needle = ev.agg(F.max("event_id")).first()[0]
+    got = bloomindex.bloom_point_lookup(spark, path, "event_id", needle)
+    assert 0 < len(got.inputFiles()) < 4
+    full = spark.read.parquet(path).where(F.col("event_id") == needle)
+    assert _rows(got) == _rows(full)
+
+
 def test_no_false_negatives_over_sample(spark, tmp_path):
     """Every sampled present value must survive pruning AND return its
     rows — the Bloom contract (false positives allowed, negatives not)."""
@@ -36,7 +48,7 @@ def test_no_false_negatives_over_sample(spark, tmp_path):
     ev = load_table(spark, SF_DIR, "events").select("event_id", "user_id")
     ev.repartition(4).write.parquet(path)
     bloomindex.build_bloom_index(spark, path, "event_id")
-    side = bloomindex._load_sidecar(spark, path, "event_id")
+    side = bloomindex._load_sidecar(path, "event_id")
     sample = [r["event_id"] for r in ev.limit(25).collect()]
     full = {
         r["event_id"]

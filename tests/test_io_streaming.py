@@ -75,12 +75,24 @@ def test_overwrite_table_roundtrip(spark, tmp_path):
 
 def test_latest_partition_reads_layout(spark, tmp_path):
     target = str(tmp_path / "tbl")
-    assert latest_partition(target) is None
+    assert latest_partition(spark, target) is None
     write_partitioned(_events_with_ds(spark), target)
     days = sorted(
         r["ds"] for r in _events_with_ds(spark).select("ds").distinct().collect()
     )
-    assert latest_partition(target) == days[-1]
+    assert latest_partition(spark, target) == days[-1]
+
+
+def test_watermark_of_file_uri_target(spark, tmp_path):
+    """A ``file://`` URI target keeps its watermark, so a resumed run
+    does not restart from its default start."""
+    target = str(tmp_path / "tbl")
+    write_partitioned(_events_with_ds(spark), target)
+    days = sorted(
+        r["ds"] for r in _events_with_ds(spark).select("ds").distinct().collect()
+    )
+    runner = IncrementalRunner(spark, lambda s, e: None, "file://" + target)
+    assert runner.watermark() == days[-1]
 
 
 def test_time_windows_cover_range():

@@ -8,13 +8,15 @@ rows to the unpruned filter (pruning never changes answers).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from etl_portofolio_spark.catalog import load_table
 from etl_portofolio_spark.sinks.writer import write_range_clustered
 from etl_portofolio_spark.sources import skipping
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, cwd_relative
 
 
 @pytest.fixture(scope="module")
@@ -36,18 +38,6 @@ def test_footer_zonemap_covers_all_files_disjointly(spark, clustered):
     spans = sorted((lo, hi) for _, lo, hi, _ in zmap)
     for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
         assert hi1 < lo2  # the writer's disjoint-envelope property
-
-
-def test_build_zonemap_matches_footer_stats(spark, clustered):
-    zmap_scan = {
-        r["file"].removeprefix("file://"): (r["zmin"], r["zmax"], r["n_rows"])
-        for r in skipping.build_zonemap(spark, clustered, "event_id").collect()
-    }
-    zmap_footer = {
-        f: (lo, hi, rows)
-        for f, lo, hi, rows in skipping.footer_zonemap(clustered, "event_id")
-    }
-    assert zmap_scan == zmap_footer
 
 
 def test_skipping_scan_prunes_to_few_files_and_matches_full_filter(
@@ -119,9 +109,9 @@ def test_persisted_zonemap_roundtrip_and_pruning(spark, tmp_path):
     path = str(tmp_path / "tbl")
     ev = load_table(spark, SF_DIR, "events").select("event_id", "value")
     write_range_clustered(ev, path, "event_id", n_files=6)
-    n = skipping.persist_zonemap(spark, path, "event_id")
+    _kept, n, _dropped = skipping.refresh_zonemap(path, "event_id")
     assert n == 6
-    zmap = skipping.load_zonemap(spark, path, "event_id")
+    zmap = skipping.load_zonemap(path, "event_id")
     assert zmap is not None and len(zmap) == 6
     # scanning with the persisted map matches the footer-stat scan
     ids = spark.read.parquet(path).agg(
@@ -145,19 +135,105 @@ def test_stale_zonemap_reconciles_appends_and_rewrites(spark, tmp_path):
     path = str(tmp_path / "tbl")
     ev = load_table(spark, SF_DIR, "events").select("event_id", "value")
     write_range_clustered(ev, path, "event_id", n_files=4)
-    skipping.persist_zonemap(spark, path, "event_id")
+    skipping.refresh_zonemap(path, "event_id")
     # append new rows OUTSIDE the old key range without refreshing
     hi = spark.read.parquet(path).agg(F.max("event_id")).first()[0]
     extra = spark.range(hi + 1000, hi + 1010).select(
         F.col("id").alias("event_id"), F.lit(7).cast("long").alias("value")
     )
     extra.coalesce(1).write.mode("append").parquet(path)
-    zmap = skipping.load_zonemap(spark, path, "event_id")
+    zmap = skipping.load_zonemap(path, "event_id")
     # the unmapped new file has unknown stats => included in any range
     got = skipping.skipping_scan(
         spark, path, "event_id", hi + 1000, hi + 2000, zonemap=zmap
     )
     assert got.count() == 10  # appended rows found despite stale map
+
+
+def _assert_map_prunes(spark, path, n_files):
+    """A narrow range through the persisted map reads a strict subset of
+    the files and returns exactly the plain filter's rows."""
+    ids = spark.read.parquet(path).agg(
+        F.min("event_id").alias("lo"), F.max("event_id").alias("hi")
+    ).first()
+    lo, hi = ids["lo"], ids["lo"] + (ids["hi"] - ids["lo"]) // 8
+    got = skipping.skipping_scan(
+        spark, path, "event_id", lo, hi,
+        zonemap=skipping.load_zonemap(path, "event_id"),
+    )
+    assert 0 < len(got.inputFiles()) < n_files
+    full = spark.read.parquet(path).where(
+        (F.col("event_id") >= lo) & (F.col("event_id") <= hi)
+    )
+    assert _rows(got) == _rows(full)
+
+
+def test_persisted_zonemap_prunes_under_relative_path(spark, tmp_path):
+    path = cwd_relative(spark, str(tmp_path / "tbl"))
+    ev = load_table(spark, SF_DIR, "events").select("event_id", "value")
+    write_range_clustered(ev, path, "event_id", n_files=4)
+    skipping.refresh_zonemap(path, "event_id")
+    _assert_map_prunes(spark, path, 4)
+
+
+def test_persisted_zonemap_survives_table_rename(spark, tmp_path):
+    """Fixtures publish by renaming a build directory: the map must
+    still name the files at the new location."""
+    built = str(tmp_path / "building")
+    ev = load_table(spark, SF_DIR, "events").select("event_id", "value")
+    write_range_clustered(ev, built, "event_id", n_files=4)
+    skipping.refresh_zonemap(built, "event_id")
+    path = str(tmp_path / "published")
+    os.rename(built, path)
+    _assert_map_prunes(spark, path, 4)
+
+
+def test_refresh_replaces_absolute_path_map(spark, tmp_path):
+    """A map from the older layout (Spark part files keyed by absolute
+    URIs) reconciles to unknown stats; the next refresh drops its
+    entries and leaves only the one map file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "tbl")
+    ev = load_table(spark, SF_DIR, "events").select("event_id", "value")
+    write_range_clustered(ev, path, "event_id", n_files=4)
+    old = os.path.join(path, "_zonemap", "event_id")
+    os.makedirs(old)
+    pq.write_table(
+        pa.table({
+            "file": ["file://" + f for f, *_ in skipping.footer_zonemap(path, "event_id")],
+            "zmin": [0] * 4, "zmax": [0] * 4, "n_rows": [1] * 4,
+        }),
+        os.path.join(old, "part-00000.snappy.parquet"),
+    )
+    open(os.path.join(old, "_SUCCESS"), "w").close()
+    assert all(lo is None for _, lo, _, _ in skipping.load_zonemap(path, "event_id"))
+    assert skipping.refresh_zonemap(path, "event_id") == (0, 4, 4)
+    assert os.listdir(old) == ["zonemap.parquet"]
+    _assert_map_prunes(spark, path, 4)
+
+
+def test_file_index_runs_no_spark_jobs(spark, tmp_path):
+    """Sidecars are driver metadata: refreshing and loading the zonemap
+    and loading the Bloom sidecar run no Spark job."""
+    from etl_portofolio_spark.sources import bloomindex
+
+    path = str(tmp_path / "tbl")
+    ev = load_table(spark, SF_DIR, "events").select("event_id", "value")
+    write_range_clustered(ev, path, "event_id", n_files=4)
+    bloomindex.build_bloom_index(spark, path, "event_id")
+    sc = spark.sparkContext
+    sc.setJobGroup("file_index", "file index metadata reads")
+    try:
+        assert skipping.refresh_zonemap(path, "event_id") == (0, 4, 0)
+        assert skipping.refresh_zonemap(path, "event_id") == (4, 0, 0)
+        assert len(skipping.load_zonemap(path, "event_id")) == 4
+        assert len(bloomindex._load_sidecar(path, "event_id")) == 4
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("file_index")) == []
 
 
 def test_maintenance_refreshes_zonemap_after_compaction(spark, tmp_path):
@@ -181,7 +257,7 @@ def test_maintenance_refreshes_zonemap_after_compaction(spark, tmp_path):
         zonemap_col="k",
     )
     assert summary["compacted"]  # the fat partition was rewritten
-    zmap = skipping.load_zonemap(spark, path, "k")
+    zmap = skipping.load_zonemap(path, "k")
     assert zmap is not None
     # the refreshed map covers exactly the live files (no stale entries)
     live = set(spark.read.parquet(path).inputFiles())
@@ -241,9 +317,7 @@ def test_incremental_zonemap_refresh(spark, tmp_path):
     path = str(tmp_path / "tbl")
     ev = load_table(spark, SF_DIR, "events").select("event_id", "value")
     write_range_clustered(ev, path, "event_id", n_files=4)
-    kept, added, dropped = skipping.refresh_zonemap_incremental(
-        spark, path, "event_id"
-    )
+    kept, added, dropped = skipping.refresh_zonemap(path, "event_id")
     assert (kept, added, dropped) == (0, 4, 0)  # first call = full build
     # append two new files
     hi = spark.read.parquet(path).agg(F.max("event_id")).first()[0]
@@ -251,19 +325,17 @@ def test_incremental_zonemap_refresh(spark, tmp_path):
         spark.range(hi + 1000 + k * 10, hi + 1005 + k * 10).select(
             F.col("id").alias("event_id"), F.lit(1).cast("long").alias("value")
         ).coalesce(1).write.mode("append").parquet(path)
-    kept, added, dropped = skipping.refresh_zonemap_incremental(
-        spark, path, "event_id"
-    )
+    kept, added, dropped = skipping.refresh_zonemap(path, "event_id")
     assert (kept, added, dropped) == (4, 2, 0)
     zmap = {f: (lo, hi2, n) for f, lo, hi2, n in
-            skipping.load_zonemap(spark, path, "event_id")}
+            skipping.load_zonemap(path, "event_id")}
     footer = {f: (lo, hi2, n) for f, lo, hi2, n in
               skipping.footer_zonemap(path, "event_id")}
     assert zmap == footer  # incrementally-built map == from-scratch map
     # point lookup into an appended file prunes to exactly that file
     got = skipping.skipping_scan(
         spark, path, "event_id", hi + 1000, hi + 1000,
-        zonemap=skipping.load_zonemap(spark, path, "event_id"),
+        zonemap=skipping.load_zonemap(path, "event_id"),
     )
     assert len(got.inputFiles()) == 1 and got.count() == 1
 
@@ -329,7 +401,7 @@ def test_footer_zonemap_degrades_on_missing_column(spark, tmp_path):
     stats = {lo for _, lo, _, _ in zmap}
     assert None in stats and 10 in stats  # old file unknown, new file mapped
     # incremental refresh over the same layout also survives
-    kept, added, dropped = skipping.refresh_zonemap_incremental(spark, path, "v")
+    kept, added, dropped = skipping.refresh_zonemap(path, "v")
     assert added == 2 and dropped == 0
 
 
