@@ -2,9 +2,10 @@
 
 Differences by design (SURVEY.md §3.2): the fetch+parse runs on
 EXECUTORS (one input partition per 5-minute window) instead of driver
-pandas; the response schema is declared; the allowlist filter is a
-broadcast left-semi join; writes are idempotent dynamic partition
-overwrites instead of append-with-truncate-flag (the reference computed
+pandas; the response schema is declared and handed to the reader; a
+list allowlist is an ``isin`` predicate and a CSV allowlist a broadcast
+left-semi join; writes are idempotent dynamic partition overwrites
+instead of append-with-truncate-flag (the reference computed
 ``is_truncate`` but never used it — §2.11.7).
 
 Intended column set per §2.11.1: transactions/delay/throughput (the
@@ -23,7 +24,7 @@ from pyspark.sql import functions as F
 from etl_portofolio_spark.functions import date_parts, ds_from_ts, shift_hours
 from etl_portofolio_spark.session import build_session
 from etl_portofolio_spark.sinks.writer import write_partitioned
-from etl_portofolio_spark.sources.http_xml import TIME_FMT, register_xml_api
+from etl_portofolio_spark.sources import http_xml
 
 
 def transform(df: DataFrame) -> DataFrame:
@@ -66,11 +67,13 @@ def run(
     written; a fetch that fails fails the write job, which commits no
     partition.
 
-    The allowlist is applied as a broadcast left-semi join either way;
+    A list allowlist is an ``isin`` predicate on ``appId_String``: a
+    list already lives on the driver, so the filter costs no job.
     ``allowlist_csv`` keeps the CSV entirely on the cluster (first
-    column = allowed app id) — the reference collected it into a driver
-    pandas list (`Ingestion Data (XML).py`), which caps the allowlist
-    at driver memory and serializes it into every task closure.
+    column = allowed app id) as a broadcast left-semi join, since its
+    size is unbounded — the reference collected it into a driver pandas
+    list (`Ingestion Data (XML).py`), which caps the allowlist at driver
+    memory and serializes it into every task closure.
 
     An EMPTY allowlist (header-only CSV, empty list) applies no filter
     — matching the reference's falsy-list behavior, where "no entries"
@@ -78,30 +81,31 @@ def run(
     alone would silently drop every row). The emptiness probe on the
     CSV is a bounded single-row action on a dimension-sized input.
     """
-    register_xml_api(spark)
+    http_xml.register_xml_api(spark)
     raw = (
         spark.read.format("xmlapi")
+        .schema(http_xml.RESPONSE_SCHEMA)
         .option("url", url)
         .option("fetcher", fetcher)
-        .option("starttime", start.strftime(TIME_FMT))
-        .option("endtime", end.strftime(TIME_FMT))
+        .option("starttime", start.strftime(http_xml.TIME_FMT))
+        .option("endtime", end.strftime(http_xml.TIME_FMT))
         .option("windowminutes", str(window_minutes))
         .load()
     )
-    allow = None
     if allowlist_csv:
         allow_raw = spark.read.option("header", "true").csv(allowlist_csv)
         allow = allow_raw.select(
             F.col(allow_raw.columns[0]).alias("appId_allow")
         ).distinct()
-        if allow.isEmpty():  # header-only CSV: not configured, no filter
-            allow = None
+        # a header-only CSV means not configured: no filter
+        if not allow.isEmpty():
+            raw = raw.join(
+                F.broadcast(allow),
+                raw["appId_String"] == allow["appId_allow"],
+                "left_semi",
+            )
     elif allowlist:
-        allow = spark.createDataFrame([(a,) for a in allowlist], ["appId_allow"])
-    if allow is not None:
-        raw = raw.join(
-            F.broadcast(allow), raw["appId_String"] == allow["appId_allow"], "left_semi"
-        )
+        raw = raw.where(F.col("appId_String").isin(*allowlist))
     return write_partitioned(transform(raw), target_path)["n_rows"]
 
 
@@ -143,8 +147,8 @@ def main() -> None:
     spark = build_session("ingest-xml")
     n = run(
         spark,
-        datetime.strptime(args.start, TIME_FMT),
-        datetime.strptime(args.end, TIME_FMT),
+        datetime.strptime(args.start, http_xml.TIME_FMT),
+        datetime.strptime(args.end, http_xml.TIME_FMT),
         args.target,
         url=args.url,
         allowlist_csv=args.allowlist_csv,

@@ -6,10 +6,10 @@ write the day's partition idempotently. The per-day loop, source/target
 watermark logic (`Processing Data.py:97-120`) and TRUNCATE-on-rollover
 (`:140-149`) collapse into IncrementalRunner + dynamic overwrite.
 
-The transform itself is the engine's flagship plan
-(`plans/reference_queries.q_flagship_throughput_pivot`): one batch per
-day, with the fact scan pruned to that day's data by the runner's window
-predicate (partition pruning on a ds-partitioned production table).
+The transform itself is the engine's flagship statement
+(`plans/reference_queries.q_flagship_throughput_pivot`), one batch per
+day, reading the fact once. The day's bounds filter `events.ts` before
+the dim join, the reference's `d.ds='...'` (`Processing Data.py:181-182`).
 """
 
 from __future__ import annotations
@@ -18,7 +18,6 @@ import argparse
 from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from etl_portofolio_spark.session import build_session
 from etl_portofolio_spark.streaming.incremental import DS_FORMAT, IncrementalRunner
@@ -33,14 +32,9 @@ def build_runner(
     )
 
     def source(s: datetime, e: datetime) -> DataFrame:
-        # The window predicate on the bucketed minute prunes the fact
-        # scan (Catalyst pushes it through the pivot down to the events
-        # read; on a ds-partitioned production table this is partition
-        # pruning, the reference's `d.ds='...'` at Processing Data.py:182).
-        out = q_flagship_throughput_pivot(spark, source_sf_dir)
-        return out.where(
-            (F.col("menit_ts") >= F.lit(s)) & (F.col("menit_ts") < F.lit(e))
-        )
+        # The bounds reach the events scan: pushed parquet filters on a
+        # micros `ts` column, a scan-stage Filter on the nanos fixtures.
+        return q_flagship_throughput_pivot(spark, source_sf_dir, s, e)
 
     return IncrementalRunner(spark, source, target_path)
 

@@ -13,11 +13,13 @@ Every computed column is aliased identically in the Spark plan and the
 DuckDB oracle (driver hash-matches by column name).
 
 Scale notes are inline: dims are broadcast, facts are filtered before the
-join so pushdown reaches the parquet scan, and the pivot pre-aggregates
-each side before the full-outer join so key multiplicity stays 1.
+join so pushdown reaches the parquet scan, and the direction pivot is one
+conditional aggregate over one fact scan.
 """
 
 from __future__ import annotations
+
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -87,71 +89,67 @@ WHERE r.r_name IN ('ASIA', 'EUROPE') AND n.n_name NOT LIKE 'A%'
 # ---------------------------------------------------------------------------
 
 
-def q_flagship_throughput_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
+#: Formatted twice: ``{window}`` here, then ``{events}`` and ``{dim}`` by
+#: ``spark.sql``, which binds them to DataFrame arguments.
+_FLAGSHIP_SQL = """
+SELECT user_id, remote_key, menit_ts, value_in, value_out,
+       value_in + value_out AS value_total,
+       date_format(menit_ts, 'yyyyMMdd') AS ds,
+       date_format(menit_ts, 'dd') AS tanggal,
+       date_format(menit_ts, 'HH') AS jam,
+       date_format(menit_ts, 'mm') AS menit
+FROM (
+  SELECT /*+ BROADCAST(d) */ e.user_id, d.remote_key,
+         date_trunc('minute', e.ts) AS menit_ts,
+         max(CASE WHEN e.event_type = 'click' THEN e.value END) AS value_in,
+         max(CASE WHEN e.event_type = 'view' THEN e.value END) AS value_out
+  FROM {{events}} e JOIN {{dim}} d ON e.user_id = d.c_custkey
+  WHERE e.event_type IN ('click', 'view'){window}
+  GROUP BY e.user_id, d.remote_key, date_trunc('minute', e.ts),
+           CASE WHEN e.ts IS NULL THEN e.event_type END
+)
+"""
+
+_WINDOW = " AND e.ts >= CAST(:lo AS TIMESTAMP) AND e.ts < CAST(:hi AS TIMESTAMP)"
+
+
+def q_flagship_throughput_pivot(
+    spark: SparkSession,
+    sf_dir: str,
+    lo: datetime | None = None,
+    hi: datetime | None = None,
+) -> DataFrame:
     """Flagship: J1–J4 + P3–P10 + A3 + F1–F13 in one plan.
 
     The reference's daily transform (``Processing Data.py:154-237``):
-    join the fact to the dim chain, bucket to the minute, split by
-    direction, FULL OUTER join the two directions back on
-    (key, description, minute), derive in+out total (null-propagating,
-    SURVEY §2.11/F13), date parts and a ds literal.
+    join the fact to the dim chain, bucket to the minute, pivot the
+    direction, derive in+out total (null-propagating, SURVEY §2.11/F13),
+    date parts and ``ds``. The reference pivots by a FULL OUTER join of
+    the two directions; here one aggregate takes a conditional ``max``
+    per direction. Its key carries ``event_type`` for null minutes only:
+    the outer join never matches null keys, so a null-``ts`` click and
+    view stay two rows, as in ``ORACLE_FLAGSHIP``.
+
+    ``[lo, hi)`` restricts ``events.ts`` before the dim join; for
+    minute-aligned bounds that is the window on ``menit_ts``. The bounds
+    are named parameters sent as strings and cast in SQL, so they are read
+    in the session time zone, never the host's.
 
     Divergence documented per SURVEY §2.11.6: minute bucketing uses
     calendar year (``date_trunc``), not the reference's week-year
     ``'YYYY-…'`` format string.
 
-    Scale: the fact is filtered to the two directions at scan time
-    (predicate pushdown), the dim join is broadcast (no fact shuffle),
-    and each direction side is pre-aggregated (max per key-minute) so the
-    full-outer join is 1:1 — at 100 TB the only shuffles are the two
-    partial aggs and the outer join, all on the same key, and AQE merges
-    them into co-partitioned stages.
+    Scale: one fact scan carrying the direction and window predicates,
+    the dim chain broadcast, one aggregate shuffle.
     """
-    events = load_table(spark, sf_dir, "events")
-    dim = _dim_chain(spark, sf_dir)
-
-    fact = (
-        events.where(F.col("event_type").isin("click", "view"))
-        .select(
-            "user_id",
-            "event_type",
-            "value",
-            minute_bucket("ts").alias("menit_ts"),
-        )
-        # Broadcast the dim chain: at fixture scale it is tiny; at cluster
-        # scale customer-sized dims still broadcast under the 64m threshold
-        # or AQE converts to broadcast at runtime.
-        .join(F.broadcast(dim), F.col("user_id") == F.col("c_custkey"))
-    )
-
-    def side(direction: str, alias: str) -> DataFrame:
-        return (
-            fact.where(F.col("event_type") == direction)
-            .groupBy("user_id", "remote_key", "menit_ts")
-            .agg(F.max("value").alias(alias))
-        )
-
-    inn = side("click", "value_in")
-    out = side("view", "value_out")
-
-    # FULL OUTER with list-on join => Spark coalesces the key columns,
-    # matching SQL USING semantics (Processing Data.py:190-207).
-    pivoted = inn.join(out, ["user_id", "remote_key", "menit_ts"], "full")
-
-    parts = date_parts(F.col("menit_ts"))
-    return pivoted.select(
-        "user_id",
-        "remote_key",
-        "menit_ts",
-        "value_in",
-        "value_out",
-        # Null-propagating sum: null when either direction is missing —
-        # deliberately matches the reference (SURVEY §2.11/F13).
-        (F.col("value_in") + F.col("value_out")).alias("value_total"),
-        ds_from_ts(F.col("menit_ts")).alias("ds"),
-        parts["tanggal"].alias("tanggal"),
-        parts["jam"].alias("jam"),
-        parts["menit"].alias("menit"),
+    window, args = "", None
+    if lo is not None or hi is not None:
+        window, args = _WINDOW, {"lo": str(lo), "hi": str(hi)}
+    return spark.sql(
+        _FLAGSHIP_SQL.format(window=window),
+        args=args,
+        events=load_table(spark, sf_dir, "events"),
+        dim=_dim_chain(spark, sf_dir),
     )
 
 

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+import time
 from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
@@ -145,6 +147,77 @@ def test_process_daily_job_end_to_end(spark, tmp_path):
     assert got.count() == expected.count()
     assert got.exceptAll(expected).count() == 0
     full.unpersist()
+
+
+def test_process_daily_window_is_read_in_the_session_time_zone(spark, tmp_path):
+    """A day window's bounds mean the session zone's (UTC) day whatever
+    the host zone: the window writes exactly that day's slice of the
+    unwindowed flagship."""
+    from etl_portofolio_spark.plans.reference_queries import (
+        q_flagship_throughput_pivot,
+    )
+
+    expected = q_flagship_throughput_pivot(spark, SF_DIR).where(
+        F.col("ds") == "20240101"
+    ).drop("ds")
+    target = str(tmp_path / "daily_tz")
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "Asia/Jakarta"
+    time.tzset()
+    try:
+        runner = process_daily.build_runner(spark, SF_DIR, target)
+        rows = runner.run_window(datetime(2024, 1, 1), datetime(2024, 1, 2)).rows
+    finally:
+        if old_tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    got = spark.read.parquet(target).drop("ds")
+    assert rows == got.count() == expected.count() > 0
+    assert got.exceptAll(expected).count() == 0
+    assert expected.exceptAll(got).count() == 0
+
+
+def _jobs_run_by(spark, group: str, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_xml_batch_with_list_allowlist_runs_two_jobs(spark, tmp_path):
+    """The list allowlist is a predicate: no broadcast job per batch."""
+    target = str(tmp_path / "xml_jobs")
+
+    def batch():
+        ingest_xml.run(
+            spark,
+            datetime(2024, 1, 1, 0, 0),
+            datetime(2024, 1, 1, 0, 10),
+            target,
+            allowlist=["app0", "app1"],
+            fetcher="tests.test_jobs:fake_api",
+        )
+
+    batch()  # warm: first-use costs are not per-batch costs
+    assert _jobs_run_by(spark, "xml_batch_jobs", batch) <= 2
+
+
+def test_daily_window_runs_six_jobs(spark, tmp_path):
+    """One daily window: one events scan, no outer join."""
+    runner = process_daily.build_runner(spark, SF_DIR, str(tmp_path / "daily_jobs"))
+
+    def window():
+        runner.run_window(datetime(2024, 1, 2), datetime(2024, 1, 3))
+
+    window()  # warm: schema inference of the tables is once per process
+    assert _jobs_run_by(spark, "daily_window_jobs", window) <= 6
 
 
 def test_curate_corpus_job_end_to_end(spark, tmp_path):
