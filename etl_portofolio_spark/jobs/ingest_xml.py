@@ -1,8 +1,9 @@
 """XML-API ingestion job — the reference's `Ingestion Data (XML).py`.
 
 Differences by design (SURVEY.md §3.2): the fetch+parse runs on
-EXECUTORS (one input partition per 5-minute window) instead of driver
-pandas; the response schema is declared and handed to the reader; a
+EXECUTORS (one partition and one task per 5-minute window, read by
+``http_xml.read_windows``, which plans no Python data source) instead of
+driver pandas; the response schema is declared and handed to the reader; a
 list allowlist is an ``isin`` predicate and a CSV allowlist a broadcast
 left-semi join; writes are idempotent dynamic partition overwrites
 instead of append-with-truncate-flag (the reference computed
@@ -64,8 +65,8 @@ def run(
 ) -> int:
     """Fetch [start, end) in parallel 5-minute windows and write one
     idempotent partitioned batch in a single observed pass. Returns rows
-    written; a fetch that fails fails the write job, which commits no
-    partition.
+    written; the fetch runs inside the write job, so a fetch that fails
+    fails that job, which commits no partition.
 
     A list allowlist is an ``isin`` predicate on ``appId_String``: a
     list already lives on the driver, so the filter costs no job.
@@ -81,16 +82,13 @@ def run(
     alone would silently drop every row). The emptiness probe on the
     CSV is a bounded single-row action on a dimension-sized input.
     """
-    http_xml.register_xml_api(spark)
-    raw = (
-        spark.read.format("xmlapi")
-        .schema(http_xml.RESPONSE_SCHEMA)
-        .option("url", url)
-        .option("fetcher", fetcher)
-        .option("starttime", start.strftime(http_xml.TIME_FMT))
-        .option("endtime", end.strftime(http_xml.TIME_FMT))
-        .option("windowminutes", str(window_minutes))
-        .load()
+    raw = http_xml.read_windows(
+        spark,
+        url=url,
+        fetcher=fetcher,
+        starttime=start.strftime(http_xml.TIME_FMT),
+        endtime=end.strftime(http_xml.TIME_FMT),
+        windowminutes=str(window_minutes),
     )
     if allowlist_csv:
         allow_raw = spark.read.option("header", "true").csv(allowlist_csv)

@@ -27,7 +27,6 @@ from pyspark.sql import types as T
 
 from etl_portofolio_spark.catalog import load_table
 from etl_portofolio_spark.functions import (
-    composite_key,
     date_parts,
     ds_from_ts,
     epoch_to_ts_utc7,
@@ -42,31 +41,31 @@ from etl_portofolio_spark.functions import (
 # ---------------------------------------------------------------------------
 
 
+_DIM_CHAIN_SQL = """
+SELECT /*+ BROADCAST(n, r) */ c.c_custkey, c.c_name, n.n_name, r.r_name,
+       concat_ws(' - ', r.r_name, n.n_name, c.c_name) AS remote_key
+FROM {customer} c
+JOIN {nation} n ON c.c_nationkey = n.n_nationkey
+JOIN {region} r ON n.n_regionkey = r.r_regionkey
+WHERE r.r_name IN ('ASIA', 'EUROPE') AND n.n_name NOT LIKE 'A%'
+"""
+
+
 def _dim_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """customer⋈nation⋈region dim chain with residual filters.
 
     Mirrors ``Processing Data.py:173-182``: small dims first with IN-list
-    and NOT LIKE residuals, composite display key via concat.
-    Both dims are broadcast — no shuffle for the dim chain at any scale;
-    the only shuffle-free fact join this feeds is also broadcast.
+    and NOT LIKE residuals, composite display key via concat. One
+    statement over the scans passed as DataFrame arguments. Both dims are
+    broadcast — no shuffle for the dim chain at any scale; the only
+    shuffle-free fact join this feeds is also broadcast.
     """
-    customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-
-    dim = (
-        customer.join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .where(F.col("r_name").isin("ASIA", "EUROPE") & ~F.col("n_name").like("A%"))
-        .select(
-            "c_custkey",
-            "c_name",
-            "n_name",
-            "r_name",
-            composite_key("r_name", "n_name", "c_name").alias("remote_key"),
-        )
+    return spark.sql(
+        _DIM_CHAIN_SQL,
+        customer=load_table(spark, sf_dir, "customer"),
+        nation=load_table(spark, sf_dir, "nation"),
+        region=load_table(spark, sf_dir, "region"),
     )
-    return dim
 
 
 def q_dim_chain_join(spark: SparkSession, sf_dir: str) -> DataFrame:

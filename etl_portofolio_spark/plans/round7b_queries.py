@@ -1092,15 +1092,23 @@ def q_incremental_runner_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _build(tmp: str) -> None:
         ev = load_table(spark, sf_dir, "events")
-        b = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).first()
-        start = datetime(b["lo"].year, b["lo"].month, b["lo"].day)
-        end = datetime(b["hi"].year, b["hi"].month, b["hi"].day) + timedelta(
-            days=1
-        )
+        # days and bounds cross the Python/Spark boundary as strings, read
+        # in the session zone: a naive datetime literal is converted with
+        # the host's zone
+        b = ev.agg(
+            F.date_format(F.min("ts"), "yyyy-MM-dd").alias("lo"),
+            F.date_format(F.max("ts"), "yyyy-MM-dd").alias("hi"),
+        ).first()
+        start = datetime.strptime(b["lo"], "%Y-%m-%d")
+        end = datetime.strptime(b["hi"], "%Y-%m-%d") + timedelta(days=1)
+
+        def bound(t: datetime):
+            return F.lit(str(t)).cast("timestamp")
+
         runner = IncrementalRunner(
             spark,
             source=lambda s, e: ev.where(
-                (F.col("ts") >= F.lit(s)) & (F.col("ts") < F.lit(e))
+                (F.col("ts") >= bound(s)) & (F.col("ts") < bound(e))
             ),
             target_path=tmp,
             transform=lambda df: df.withColumn(

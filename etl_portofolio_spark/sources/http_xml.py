@@ -6,10 +6,21 @@ the CSV response in driver pandas (`Ingestion Data (XML).py:91-132`) —
 the whole payload transits driver RAM, its key scalability defect
 (SURVEY.md §3.2).
 
-Here the same API shape is a Spark 4 Python ``DataSource``: one input
-partition per time window, each EXECUTOR fetches and parses its own
-window. The fetch function is pluggable via a ``fetcher`` option naming
-a ``module:function`` importable on executors — tests inject a
+Here one Spark partition is one time window and each EXECUTOR fetches
+and parses its own window. Two surfaces share the window slicer
+(``_window_partitions``) and the per-window fetch and parse
+(``XmlApiReader.read``):
+
+- ``read_windows(spark, **options)``, the batch read the XML job uses: a
+  ``spark.range`` of one row per window, fetched by ``mapInArrow``. It
+  needs no Python planner call on the driver.
+- the Spark 4 Python ``DataSource`` ``xmlapi`` for
+  ``spark.read.format("xmlapi")`` and ``readStream`` callers, after
+  ``register_xml_api(spark)``. Each of its batch reads makes two
+  driver-side Python planner calls before a job is submitted.
+
+The fetch function is pluggable via a ``fetcher`` option naming a
+``module:function`` importable on executors — tests inject a
 deterministic fake; production points it at an HTTP client. The response
 schema is declared explicitly (the reference's pandas dtype inference
 flips types on empty responses — SURVEY.md §1.3).
@@ -22,6 +33,7 @@ from dataclasses import dataclass
 from datetime import datetime, timedelta
 from typing import Callable, Iterator
 
+from pyspark.sql import DataFrame
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -120,8 +132,9 @@ class XmlApiReader(DataSourceReader):
         """Executor-side: fetch one window's CSV and parse with explicit
         types (S3's `pd.read_csv(StringIO)` without dtype inference).
 
-        Yields plain tuples: Spark's datasource worker already converts
-        the tuple stream to Arrow batches in C, and the stage is bound by
+        Yields plain tuples: Spark's datasource worker converts the
+        stream to Arrow batches, and ``read_windows`` makes one typed
+        Arrow batch per window from them; the stage is bound by
         python-worker startup, not row processing."""
         import csv
         import io
@@ -169,6 +182,42 @@ class XmlApiDataSource(DataSource):
 
 def register_xml_api(spark) -> None:
     spark.dataSource.register(XmlApiDataSource)
+
+
+def read_windows(spark, **options: str) -> DataFrame:
+    """The batch read of ``spark.read.format("xmlapi").options(**options)
+    .load()`` — same option map, same rows — with no Python data-source
+    planning on the driver.
+
+    ``spark.range(0, n, 1, n)`` carries window *i* of
+    ``_window_partitions`` to task *i*, whose ``mapInArrow`` runs
+    ``XmlApiReader.read`` and yields one Arrow batch typed by the declared
+    schema. A fetch that raises fails the job that consumes the frame.
+    """
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = StructType.fromDDL(options.get("schema", RESPONSE_SCHEMA))
+    reader = XmlApiReader(schema, options)
+    windows = reader.partitions()
+    arrow_schema = to_arrow_schema(schema)
+
+    def fetch(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                rows = list(reader.read(windows[i]))
+                if rows:
+                    yield pa.RecordBatch.from_arrays(
+                        [
+                            pa.array(col, type=field.type)
+                            for col, field in zip(zip(*rows), arrow_schema)
+                        ],
+                        schema=arrow_schema,
+                    )
+
+    n = len(windows)
+    return spark.range(0, n, 1, n).mapInArrow(fetch, schema)
 
 
 class XmlApiStreamReader(DataSourceStreamReader):

@@ -1,6 +1,7 @@
 """The flagship daily pivot: null-minute parity with the reference's
-full-outer oracle, and the shape of the windowed plan on both events
-layouts (micros ``ts`` and nanos ``ts``)."""
+full-outer oracle, the shape of the windowed plan on both events
+layouts (micros ``ts`` and nanos ``ts``), and the dim chain's broadcast
+joins."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ import pyarrow.parquet as pq
 
 from etl_portofolio_spark.plans.reference_queries import (
     ORACLE_FLAGSHIP,
+    q_dim_chain_join,
     q_flagship_throughput_pivot,
 )
 from tools.check_oracle import compare
@@ -143,3 +145,19 @@ def test_windowed_flagship_reads_events_once_with_bounds_at_the_scan(spark, tmp_
     cond = details[bound.split(" ")[1]]
     assert "2024-01-02 00:00:00" in cond and "2024-01-03 00:00:00" in cond, cond
     assert windowed.count() == q_flagship_throughput_pivot(spark, micros_dir, lo, hi).count()
+
+
+def test_dim_chain_broadcasts_both_dims_without_a_shuffle(spark):
+    """Both dim joins are broadcast by the statement's hint, not by the
+    size threshold: with automatic broadcasts off the plan still has two
+    broadcast hash joins and no exchange."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = _plan(q_dim_chain_join(spark, SF_DIR))
+    finally:
+        spark.conf.set(key, old)
+    assert plan.count(") BroadcastHashJoin") == 2, plan
+    assert plan.count(") BroadcastExchange") == 2, plan
+    assert ") Exchange" not in plan and "SortMergeJoin" not in plan, plan

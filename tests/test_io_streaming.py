@@ -12,6 +12,7 @@ from etl_portofolio_spark.catalog import load_table
 from etl_portofolio_spark.sinks.writer import overwrite_table, write_partitioned
 from etl_portofolio_spark.sources.http_xml import (
     build_query_xml,
+    read_windows,
     register_xml_api,
 )
 from etl_portofolio_spark.sources.jdbc import JdbcWindowSource, pushdown_subquery
@@ -312,6 +313,49 @@ def test_xml_api_datasource_distributed_fetch(spark):
     assert row["transactions"] == 20.0 and row["delay"] == 2.5
     # explicit schema, not inferred
     assert dict(df.dtypes)["throughput"] == "double"
+
+
+def ragged_fetch(url: str, xml_body: str, window_id: str) -> str:
+    """Fake API with degenerate answers: the 00:05 window is empty, the
+    00:10 window header-only, and the other windows leave some double
+    cells empty."""
+    header = "waktu,appId_String,clientAddr,serverAddr,transactions,delay,throughput"
+    if window_id.endswith("00:05:00"):
+        return ""
+    if window_id.endswith("00:10:00"):
+        return header + "\n"
+    rows = [
+        f"{window_id},app{i},10.0.0.{i},10.1.0.{i},"
+        f"{'' if i % 2 else f'{i}.0'},{'' if i % 3 == 0 else '0.5'},{i * 100}.0"
+        for i in range(4)
+    ]
+    return "\n".join([header] + rows)
+
+
+def test_read_windows_equals_the_format_read(spark):
+    """``read_windows`` gives the ``format("xmlapi")`` read's schema, one
+    partition per window and the same rows, over a span that is not a
+    multiple of the window, empty and header-only answers, and empty
+    double cells read as null."""
+    opts = {
+        "fetcher": "tests.test_io_streaming:ragged_fetch",
+        "starttime": "2024-01-01 00:00:00",
+        "endtime": "2024-01-01 00:17:00",
+        "windowminutes": "5",
+    }
+    register_xml_api(spark)
+    want = spark.read.format("xmlapi").options(**opts).load()
+    got = read_windows(spark, **opts)
+    assert got.schema == want.schema
+    assert got.rdd.getNumPartitions() == want.rdd.getNumPartitions() == 4
+    assert got.count() == want.count() == 2 * 4
+    assert got.exceptAll(want).count() == want.exceptAll(got).count() == 0
+    assert {r["waktu"] for r in got.select("waktu").distinct().collect()} == {
+        "2024-01-01 00:00:00",
+        "2024-01-01 00:15:00",
+    }
+    assert got.where(F.col("transactions").isNull()).count() == 2 * 2
+    assert got.where(F.col("delay").isNull()).count() == 2 * 2
 
 
 # --- jdbc source -------------------------------------------------------------

@@ -1,9 +1,13 @@
 """Round-7b wave: algorithmic cross-checks beyond the oracle hash —
 HLL register mergeability, MMR greedy optimality vs brute force, MRR
-unit exactness, and the sink roundtrip's heal-after-double-ingest
-invariant."""
+unit exactness, the sink roundtrip's heal-after-double-ingest
+invariant, and the incremental runner's windows under a non-UTC host
+zone."""
 
 from __future__ import annotations
+
+import os
+import time
 
 from pyspark.sql import functions as F
 
@@ -156,3 +160,33 @@ def test_sink_roundtrip_heals_double_ingest(spark, tmp_path):
     healed = spark.read.parquet(tgt)
     assert healed.count() == ev.count()
     assert healed.groupBy("event_id").count().where(F.col("count") > 1).count() == 0
+
+
+def test_incremental_runner_ingest_windows_read_in_the_session_time_zone(
+    spark, duck, tmp_path, monkeypatch
+):
+    """The runner's 12-hour windows are session-zone (UTC) hours whatever
+    the host zone. The fixture cache points at ``tmp_path``, so the
+    warehouse is built under the test's zone, never served from a
+    cache another run built."""
+    from etl_portofolio_spark import fixtures
+    from etl_portofolio_spark.plans.round7b_queries import ROUND7B_QUERIES
+    from tools.check_oracle import compare
+
+    monkeypatch.setattr(fixtures, "_ROOT", str(tmp_path / "fixtures"))
+    build, oracle = ROUND7B_QUERIES["incremental_runner_ingest"]
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "Asia/Jakarta"
+    time.tzset()
+    try:
+        got = build(spark, SF_DIR)
+    finally:
+        if old_tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    assert os.listdir(tmp_path / "fixtures")
+    rel = duck.execute(oracle)
+    rows, cols = rel.fetchall(), [d[0] for d in rel.description]
+    assert not compare("incremental_runner_ingest", got, rows, cols)
