@@ -11,7 +11,7 @@ import importlib
 import sys
 
 JOBS = {
-    "ingest_xml": "XML-API ingestion (5-min windows, executor-side fetch)",
+    "ingest_xml": "XML-API ingestion (5-min fetches, hourly windows, watermark resume)",
     "ingest_jdbc": "JDBC incremental ingestion (hourly stripes, watermark resume)",
     "process_daily": "daily join/pivot processing (the reference's flagship)",
     "curate_corpus": "LLM corpus curation (dedup → gate → split → chunk; --publish WAP)",

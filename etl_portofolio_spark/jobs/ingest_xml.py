@@ -1,13 +1,14 @@
 """XML-API ingestion job — the reference's `Ingestion Data (XML).py`.
 
 Differences by design (SURVEY.md §3.2): the fetch+parse runs on
-EXECUTORS (one partition and one task per 5-minute window, read by
-``http_xml.read_windows``, which plans no Python data source) instead of
-driver pandas; the response schema is declared and handed to the reader; a
-list allowlist is an ``isin`` predicate and a CSV allowlist a broadcast
-left-semi join; writes are idempotent dynamic partition overwrites
-instead of append-with-truncate-flag (the reference computed
-``is_truncate`` but never used it — §2.11.7).
+EXECUTORS (one task per 5-minute window, read by
+``http_xml.read_windows`` straight into Arrow batches) instead of driver
+pandas, with the response schema declared; the allowlist is an ``isin``
+predicate or a broadcast left-semi join. The job is an
+:class:`IncrementalRunner` source, like ``ingest_jdbc``: the first window
+of a ``ds`` day overwrites it, later windows of the run append (the
+reference's ``is_truncate`` was computed but never used — §2.11.7).
+API times are UTC; ``ds`` and the runner's windows are UTC+7 wall time.
 
 Intended column set per §2.11.1: transactions/delay/throughput (the
 reference selected misspelled names the API was never asked for).
@@ -17,15 +18,19 @@ from __future__ import annotations
 
 import argparse
 import os
-from datetime import datetime
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_portofolio_spark.functions import date_parts, ds_from_ts, shift_hours
+from etl_portofolio_spark.functions.timeparts import DEFAULT_TZ_OFFSET_HOURS
 from etl_portofolio_spark.session import build_session
-from etl_portofolio_spark.sinks.writer import write_partitioned
 from etl_portofolio_spark.sources import http_xml
+from etl_portofolio_spark.streaming.incremental import DS_FORMAT, IncrementalRunner
+
+#: ds clock (UTC+7, the runner's windows) minus API clock (UTC)
+API_CLOCK_OFFSET = timedelta(hours=DEFAULT_TZ_OFFSET_HOURS)
 
 
 def transform(df: DataFrame) -> DataFrame:
@@ -52,59 +57,67 @@ def transform(df: DataFrame) -> DataFrame:
     )
 
 
-def run(
+def build_runner(
     spark: SparkSession,
-    start: datetime,
-    end: datetime,
     target_path: str,
     allowlist: list[str] | None = None,
     url: str = "",
     fetcher: str = "etl_portofolio_spark.jobs.ingest_xml:http_fetch",
     window_minutes: int = 5,
     allowlist_csv: str | None = None,
-) -> int:
-    """Fetch [start, end) in parallel 5-minute windows and write one
-    idempotent partitioned batch in a single observed pass. Returns rows
-    written; the fetch runs inside the write job, so a fetch that fails
-    fails that job, which commits no partition.
+) -> IncrementalRunner:
+    """The XML job as an :class:`IncrementalRunner` source: runner window
+    ``[s, e)`` (ds clock) fetches the API span ``[s, e) - API_CLOCK_OFFSET``
+    in ``window_minutes`` windows, one task each.
 
-    A list allowlist is an ``isin`` predicate on ``appId_String``: a
-    list already lives on the driver, so the filter costs no job.
-    ``allowlist_csv`` keeps the CSV entirely on the cluster (first
-    column = allowed app id) as a broadcast left-semi join, since its
-    size is unbounded — the reference collected it into a driver pandas
-    list (`Ingestion Data (XML).py`), which caps the allowlist at driver
-    memory and serializes it into every task closure.
+    A list allowlist is an ``isin`` predicate (no job); ``allowlist_csv``
+    (first column = app id) a broadcast left-semi join, since its size is
+    unbounded (the reference collected it to the driver). An EMPTY
+    allowlist (header-only CSV, empty list) filters nothing: the
+    reference's falsy list means "not configured", not "deny all". The
+    CSV's emptiness probe runs once per runner, not once per window.
 
-    An EMPTY allowlist (header-only CSV, empty list) applies no filter
-    — matching the reference's falsy-list behavior, where "no entries"
-    means "not configured", not "deny all" (r4 ADVICE: the semi-join
-    alone would silently drop every row). The emptiness probe on the
-    CSV is a bounded single-row action on a dimension-sized input.
+    API rows outside the window's days raise ``ValueError`` once its own
+    days are written; a window straddling a day this run wrote and one
+    it did not writes twice, fetching each time.
     """
-    raw = http_xml.read_windows(
-        spark,
-        url=url,
-        fetcher=fetcher,
-        starttime=start.strftime(http_xml.TIME_FMT),
-        endtime=end.strftime(http_xml.TIME_FMT),
-        windowminutes=str(window_minutes),
-    )
+    allow = None
     if allowlist_csv:
-        allow_raw = spark.read.option("header", "true").csv(allowlist_csv)
-        allow = allow_raw.select(
-            F.col(allow_raw.columns[0]).alias("appId_allow")
-        ).distinct()
-        # a header-only CSV means not configured: no filter
-        if not allow.isEmpty():
-            raw = raw.join(
+        allow = spark.read.option("header", "true").csv(allowlist_csv)
+        allow = allow.select(F.col(allow.columns[0]).alias("appId_allow")).distinct()
+        allow = None if allow.isEmpty() else allow
+
+    def source(start: datetime, end: datetime) -> DataFrame:
+        raw = http_xml.read_windows(
+            spark,
+            url=url,
+            fetcher=fetcher,
+            starttime=(start - API_CLOCK_OFFSET).strftime(http_xml.TIME_FMT),
+            endtime=(end - API_CLOCK_OFFSET).strftime(http_xml.TIME_FMT),
+            windowminutes=str(window_minutes),
+        )
+        if allow is not None:
+            return raw.join(
                 F.broadcast(allow),
                 raw["appId_String"] == allow["appId_allow"],
                 "left_semi",
             )
-    elif allowlist:
-        raw = raw.where(F.col("appId_String").isin(*allowlist))
-    return write_partitioned(transform(raw), target_path)["n_rows"]
+        if allowlist:
+            return raw.where(F.col("appId_String").isin(*allowlist))
+        return raw
+
+    return IncrementalRunner(spark, source, target_path, transform=transform)
+
+
+def run(
+    spark: SparkSession, start: datetime, end: datetime, target_path: str, **options
+) -> int:
+    """Fetch the API-clock span [start, end) as one runner window
+    (``options``: :func:`build_runner`'s) that rewrites the ``ds`` days it
+    touches; returns rows written. Hour by hour it keeps each day's last
+    hour only; a schedule resumes from the watermark, as :func:`main` does."""
+    runner = build_runner(spark, target_path, **options)
+    return runner.run_window(start + API_CLOCK_OFFSET, end + API_CLOCK_OFFSET).rows
 
 
 def http_fetch(url: str, xml_body: str, window_id: str) -> str:
@@ -136,22 +149,23 @@ def http_fetch(url: str, xml_body: str, window_id: str) -> str:
 
 def main() -> None:
     p = argparse.ArgumentParser(description=__doc__)
-    p.add_argument("--start", required=True, help="YYYY-mm-dd HH:MM:SS")
-    p.add_argument("--end", required=True)
+    p.add_argument("--default-start", required=True, help="YYYYmmdd")
     p.add_argument("--target", required=True)
     p.add_argument("--url", default=os.getenv("api_url", ""))
     p.add_argument("--allowlist-csv", default=None)
     args = p.parse_args()
     spark = build_session("ingest-xml")
-    n = run(
-        spark,
-        datetime.strptime(args.start, http_xml.TIME_FMT),
-        datetime.strptime(args.end, http_xml.TIME_FMT),
-        args.target,
-        url=args.url,
-        allowlist_csv=args.allowlist_csv,
+    runner = build_runner(
+        spark, args.target, url=args.url, allowlist_csv=args.allowlist_csv
     )
-    print(f"rows written: {n}")
+    # runner windows are ds-clock wall time
+    now_ds = datetime.now(timezone.utc).replace(tzinfo=None) + API_CLOCK_OFFSET
+    results = runner.run_from_watermark(
+        end=now_ds,
+        delta=timedelta(hours=1),
+        default_start=datetime.strptime(args.default_start, DS_FORMAT),
+    )
+    print(f"windows: {len(results)}, rows: {sum(r.rows for r in results)}")
 
 
 if __name__ == "__main__":

@@ -37,6 +37,8 @@ from collections.abc import Mapping
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_portofolio_spark.sinks.writer import write_partitioned
+
 _META_FILE = "_mv_meta.json"
 #: measure kinds the rewriter can re-aggregate losslessly
 _REAGG = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
@@ -176,7 +178,8 @@ def start_mv_maintenance(
     checkpoint-replayed batch N must NOT rewrite ``batch_id=N`` or
     every answer double-counts.  The sink therefore drops any batch at
     or below the folded watermark; dynamic overwrite keeps handling
-    replays ABOVE it.
+    replays ABOVE it.  Keyed by ``batch_id`` too, an empty micro-batch's
+    rollup has no rows even with no dims, so it writes no partial.
     """
     for name, (kind, _e) in measures.items():
         if kind not in _REAGG:
@@ -188,14 +191,9 @@ def start_mv_maintenance(
         cur = load_mv_meta(mv_root) or {}
         if int(batch_id) <= cur.get("folded_through", -1):
             return  # replayed batch already folded into a generation
-        if batch.isEmpty():
-            return
-        out = _batch_rollup(batch, dims, measures).withColumn(
-            "batch_id", F.lit(int(batch_id))
-        )
-        out.write.mode("overwrite").partitionBy("batch_id").option(
-            "partitionOverwriteMode", "dynamic"
-        ).parquet(partials)
+        keyed = batch.withColumn("batch_id", F.lit(batch_id))
+        out = _batch_rollup(keyed, ("batch_id", *dims), measures)
+        write_partitioned(out, partials, "batch_id")
 
     os.makedirs(mv_root, exist_ok=True)
     # merge over existing meta: a restart must NOT reset the folded

@@ -7,9 +7,9 @@ the whole payload transits driver RAM, its key scalability defect
 (SURVEY.md §3.2).
 
 Here one Spark partition is one time window and each EXECUTOR fetches
-and parses its own window. Two surfaces share the window slicer
-(``_window_partitions``) and the per-window fetch and parse
-(``XmlApiReader.read``):
+its own window and parses it straight into typed Arrow record batches.
+Two surfaces share the window slicer (``_window_partitions``) and the
+per-window fetch and parse (``XmlApiReader.read``):
 
 - ``read_windows(spark, **options)``, the batch read the XML job uses: a
   ``spark.range`` of one row per window, fetched by ``mapInArrow``. It
@@ -23,15 +23,21 @@ The fetch function is pluggable via a ``fetcher`` option naming a
 ``module:function`` importable on executors — tests inject a
 deterministic fake; production points it at an HTTP client. The response
 schema is declared explicitly (the reference's pandas dtype inference
-flips types on empty responses — SURVEY.md §1.3).
+flips types on empty responses — SURVEY.md §1.3). Window bounds here
+are API-clock (UTC); ``jobs.ingest_xml`` maps its ds-clock (UTC+7)
+windows onto them.
 """
 
 from __future__ import annotations
 
 import importlib
+import io
 from dataclasses import dataclass
 from datetime import datetime, timedelta
 from typing import Callable, Iterator
+
+import pyarrow as pa
+from pyarrow import csv
 
 from pyspark.sql import DataFrame
 from pyspark.sql.datasource import (
@@ -40,6 +46,7 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 #: The reference's request/response columns (`Ingestion Data (XML).py:95-102`,
@@ -110,12 +117,8 @@ class XmlApiReader(DataSourceReader):
         self.schema_ = schema
         self.url = options.get("url", "")
         self.fetcher_spec = options["fetcher"]
-        self.columns = tuple(
-            options.get(
-                "columns",
-                "waktu,appId_String,clientAddr,serverAddr,transactions,delay,throughput",
-            ).split(",")
-        )
+        # the request asks for the declared columns unless told otherwise
+        self.columns = tuple(options.get("columns", ",".join(schema.names)).split(","))
         self.flow_filter = options.get("flowfilter", "")
         self.resolution = options.get("resolution", "FIVE_MINUTE")
         self.start = options["starttime"]
@@ -128,17 +131,15 @@ class XmlApiReader(DataSourceReader):
         partition plan, so windows fetch in parallel."""
         return _window_partitions(self.start, self.end, self.window_minutes)
 
-    def read(self, partition: WindowPartition) -> Iterator[tuple]:
-        """Executor-side: fetch one window's CSV and parse with explicit
-        types (S3's `pd.read_csv(StringIO)` without dtype inference).
+    def read(self, partition: WindowPartition) -> Iterator[pa.RecordBatch]:
+        """Executor-side: fetch one window's CSV and parse it into Arrow
+        ``RecordBatch``es of the declared schema (S3's `pd.read_csv`
+        without dtype inference), which Spark's data-source worker and
+        ``read_windows``'s ``mapInArrow`` take as they are.
 
-        Yields plain tuples: Spark's datasource worker converts the
-        stream to Arrow batches, and ``read_windows`` makes one typed
-        Arrow batch per window from them; the stage is bound by
-        python-worker startup, not row processing."""
-        import csv
-        import io
-
+        Columns match by name: a missing one reads as null, an
+        undeclared one is dropped, an empty cell of a double is null.
+        An empty or header-only answer yields no batch."""
         fetch = resolve_fetcher(self.fetcher_spec)
         body = build_query_xml(
             self.columns,
@@ -150,17 +151,17 @@ class XmlApiReader(DataSourceReader):
         text = fetch(self.url, body, partition.start)
         if not text.strip():
             return
-        double_cols = {
-            f.name for f in self.schema_.fields if f.dataType.typeName() == "double"
-        }
-        reader = csv.DictReader(io.StringIO(text))
-        for rec in reader:
-            yield tuple(
-                (float(rec[f.name]) if rec.get(f.name) not in (None, "") else None)
-                if f.name in double_cols
-                else rec.get(f.name)
-                for f in self.schema_.fields
-            )
+        schema = to_arrow_schema(self.schema_)
+        table = csv.read_csv(
+            io.BytesIO(text.encode()),
+            convert_options=csv.ConvertOptions(
+                column_types=schema,
+                include_columns=schema.names,
+                include_missing_columns=True,
+                null_values=[""],
+            ),
+        )
+        yield from table.to_batches()
 
 
 class XmlApiDataSource(DataSource):
@@ -191,30 +192,17 @@ def read_windows(spark, **options: str) -> DataFrame:
 
     ``spark.range(0, n, 1, n)`` carries window *i* of
     ``_window_partitions`` to task *i*, whose ``mapInArrow`` runs
-    ``XmlApiReader.read`` and yields one Arrow batch typed by the declared
-    schema. A fetch that raises fails the job that consumes the frame.
+    ``XmlApiReader.read`` and yields its Arrow batches unchanged. A fetch
+    that raises fails the job that consumes the frame.
     """
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     schema = StructType.fromDDL(options.get("schema", RESPONSE_SCHEMA))
     reader = XmlApiReader(schema, options)
     windows = reader.partitions()
-    arrow_schema = to_arrow_schema(schema)
 
     def fetch(batches):
-        import pyarrow as pa
-
         for batch in batches:
             for i in batch.column(0).to_pylist():
-                rows = list(reader.read(windows[i]))
-                if rows:
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array(col, type=field.type)
-                            for col, field in zip(zip(*rows), arrow_schema)
-                        ],
-                        schema=arrow_schema,
-                    )
+                yield from reader.read(windows[i])
 
     n = len(windows)
     return spark.range(0, n, 1, n).mapInArrow(fetch, schema)
@@ -252,7 +240,7 @@ class XmlApiStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict) -> list[WindowPartition]:
         return _window_partitions(start["t"], end["t"], self._batch.window_minutes)
 
-    def read(self, partition: WindowPartition) -> Iterator[tuple]:
+    def read(self, partition: WindowPartition) -> Iterator[pa.RecordBatch]:
         return self._batch.read(partition)
 
     def commit(self, end: dict) -> None:

@@ -209,22 +209,18 @@ def test_xml_batch_with_list_allowlist_runs_two_jobs(spark, tmp_path):
     assert _jobs_run_by(spark, "xml_batch_jobs", batch) <= 2
 
 
-def test_xml_batch_reads_through_map_in_arrow_over_range(spark, tmp_path, monkeypatch):
+def test_xml_batch_reads_through_map_in_arrow_over_range(spark, tmp_path):
     """The batch's read needs no Python data-source planning: it is a
     MapInArrow over a Range of one partition per window."""
-    frames = []
-    monkeypatch.setattr(
-        ingest_xml, "write_partitioned", lambda df, path: frames.append(df) or {"n_rows": 0}
-    )
-    ingest_xml.run(
+    runner = ingest_xml.build_runner(
         spark,
-        datetime(2024, 1, 1, 0, 0),
-        datetime(2024, 1, 1, 0, 10),
         str(tmp_path / "xml_plan"),
         allowlist=["app0", "app1"],
         fetcher="tests.test_jobs:fake_api",
     )
-    (df,) = frames
+    # the runner window of the API span 00:00-00:10 (+7 h, ds clock)
+    s, e = datetime(2024, 1, 1, 7, 0), datetime(2024, 1, 1, 7, 10)
+    df = runner.transform(runner.source(s, e))
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
     executed = df._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" in optimized and "Range (0, 2, step=1, splits=Some(2))" in optimized

@@ -239,3 +239,50 @@ def test_legacy_minus_one_partial_still_counts(spark, tmp_path):
     got2 = {r["k"]: r["n"] for r in read_maintained_mv(spark, mv_root).collect()}
     assert got2 == {"a": 11, "b": 5}
     assert compact_mv_partials(spark, mv_root) == 0
+
+
+@pytest.mark.parametrize(
+    "dims, want", [(("k",), [("a", 4, 2), ("b", 2, 1)]), ((), [(6, 3)])]
+)
+def test_empty_micro_batch_writes_no_partial(spark, tmp_path, dims, want):
+    """A micro-batch whose rows are all filtered out before the sink
+    writes no ``batch_id=`` partial, with or without dims, and the
+    maintained MV answers as the non-empty batches alone do."""
+    import os
+
+    from etl_portofolio_spark.sinks.matview import (
+        read_maintained_mv,
+        start_mv_maintenance,
+    )
+
+    src = str(tmp_path / "src")
+    mv_root = str(tmp_path / "mv")
+    # one file per micro-batch: the second holds only filtered-out rows
+    spark.createDataFrame([("a", 1), ("b", 2), ("a", 3)], "k string, v long").coalesce(
+        1
+    ).write.mode("append").parquet(src)
+    spark.createDataFrame([("z", 9)], "k string, v long").coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    stream = (
+        spark.readStream.schema("k string, v long")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+        .where(F.col("k") != "z")
+    )
+    q = start_mv_maintenance(
+        stream,
+        mv_root,
+        dims,
+        {"s": ("sum", "v"), "n": ("count", "*")},
+        str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(120)
+    # both micro-batches ran and committed
+    commits = os.listdir(str(tmp_path / "ckpt" / "commits"))
+    assert {"0", "1"} <= set(commits), commits
+    partials = sorted(
+        d for d in os.listdir(f"{mv_root}/partials") if d.startswith("batch_id=")
+    )
+    assert partials == ["batch_id=0"]
+    assert _rows(read_maintained_mv(spark, mv_root)) == want

@@ -210,6 +210,29 @@ def test_xml_fetch_failure_leaves_no_new_or_partial_ds(spark, tmp_path):
     assert _rows(spark.read.parquet(target)) == before
 
 
+def test_xml_hourly_schedule_keeps_every_hour(spark, tmp_path):
+    """Two scheduled calls ending at 02:00 and 03:00 (ds clock): the
+    second rewrites the day from its first hour, so the day equals a
+    clean run of the three hours."""
+    day = datetime(2024, 1, 5)
+    sched = str(tmp_path / "sched")
+    runner = ingest_xml.build_runner(
+        spark, sched, fetcher="tests.test_window_writes:api_rows", window_minutes=30
+    )
+    for hour in (2, 3):
+        runner.run_from_watermark(
+            end=day + timedelta(hours=hour), delta=timedelta(hours=1), default_start=day
+        )
+    clean = str(tmp_path / "clean")
+    api_day = day - ingest_xml.API_CLOCK_OFFSET
+    ingest_xml.run(
+        spark, api_day, api_day + timedelta(hours=3), clean,
+        fetcher="tests.test_window_writes:api_rows", window_minutes=30,
+    )
+    assert _ds_counts(spark.read.parquet(sched)) == {"20240105": 3 * 2 * 5}
+    assert _rows(spark.read.parquet(sched)) == _rows(spark.read.parquet(clean))
+
+
 # --- runner edge cases --------------------------------------------------------
 
 
@@ -273,3 +296,61 @@ def test_window_straddling_seen_and_unseen_day_matches_one_shot(
     assert [r.rows for r in results] == [36, 36, 36]
     assert _rows(read()) == _rows(ev)
     assert _ds_counts(read()) == {"20240105": 48, "20240106": 48, "20240107": 12}
+
+
+@pytest.mark.parametrize("sink", ["path", "table"])
+def test_rerun_after_straddling_window_fails_before_its_append_equals_clean_run(
+    spark, tmp_path, catalog_db, sink
+):
+    """A window covering a day this run wrote and one it has not fails
+    after its overwrite write and before its append: the unseen day is
+    written, the seen day lacks the window's hours. Re-running the range
+    gives exactly the clean run."""
+    ev = _events(spark, datetime(2024, 1, 5), hours=54)
+    start, end, delta = datetime(2024, 1, 5), datetime(2024, 1, 7, 6), timedelta(hours=18)
+    base = IncrementalRunner if sink == "path" else TableIncrementalRunner
+
+    class FailsOnFirstAppend(base):
+        failed = False
+
+        def _write(self, batch, mode):
+            if mode == "append" and not FailsOnFirstAppend.failed:
+                FailsOnFirstAppend.failed = True
+                raise RuntimeError("injected failure before the append")
+            return super()._write(batch, mode)
+
+    if sink == "path":
+        clean, target = str(tmp_path / "clean"), str(tmp_path / "t")
+        read = spark.read.parquet
+    else:
+        clean, target = f"{catalog_db}.clean", f"{catalog_db}.crash"
+        read = spark.table
+    base(spark, _window_source(ev), clean).run(start, end, delta)
+
+    with pytest.raises(RuntimeError, match="injected failure before the append"):
+        FailsOnFirstAppend(spark, _window_source(ev), target).run(start, end, delta)
+    # window two overwrote 01-06 with its 12 hours, then failed before
+    # appending its 6 hours of 01-05
+    assert _ds_counts(read(target)) == {"20240105": 36, "20240106": 24}
+
+    base(spark, _window_source(ev), target).run(start, end, delta)
+    assert _rows(read(target)) == _rows(read(clean))
+
+
+# --- write policy -------------------------------------------------------------
+
+
+def test_window_jobs_write_only_through_the_runner():
+    """The three windowed jobs hand their frames to the runner; none
+    writes itself, so the window write policy lives in
+    ``streaming/incremental.py`` only."""
+    jobs = os.path.join(os.path.dirname(os.path.dirname(__file__)), "etl_portofolio_spark", "jobs")
+    bad = []
+    for name in ("ingest_xml.py", "ingest_jdbc.py", "process_daily.py"):
+        src = open(os.path.join(jobs, name), encoding="utf-8").read()
+        bad += [
+            f"{name}: {w}"
+            for w in ("write_partitioned(", ".write.", "saveAsTable", "insertInto")
+            if w in src
+        ]
+    assert not bad, bad
