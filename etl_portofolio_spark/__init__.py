@@ -11,11 +11,27 @@ capabilities of the reference ETL portfolio (see SURVEY.md):
 
 Design: operators are thin functions that build DataFrame plans; Catalyst
 is the optimizer and Tungsten the execution engine. There is no custom IR.
+
+The public names resolve on first use (PEP 562), so importing a
+submodule that needs no PySpark (``worker_daemon``, which runs before
+the workers' first PySpark import) does not import it.
 """
 
-from etl_portofolio_spark.session import build_session
-from etl_portofolio_spark.catalog import TABLES, register_tables
-from etl_portofolio_spark.caching import release_cached
+from importlib import import_module
 
-__all__ = ["build_session", "register_tables", "TABLES", "release_cached"]
+#: public name -> the submodule defining it
+_EXPORTS = {
+    "build_session": "session",
+    "register_tables": "catalog",
+    "TABLES": "catalog",
+    "release_cached": "caching",
+}
+
+__all__ = list(_EXPORTS)
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    if name in _EXPORTS:
+        return getattr(import_module(f"{__name__}.{_EXPORTS[name]}"), name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

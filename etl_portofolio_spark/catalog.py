@@ -41,25 +41,47 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _NANO_TS_COLUMNS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
+def listing_signature(path: str) -> tuple[tuple[str, int, int], ...] | None:
+    """``(name, size, mtime_ns)`` of each data file of the table at
+    ``path``: the file itself, or every file under the directory outside
+    ``_``/``.``-prefixed entries (Spark's hidden files), sorted. Stat
+    calls only: no file is opened and no Spark job runs. ``None`` when
+    ``path`` is not a local file or directory."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+    if not os.path.isdir(path):
+        return None
+    out = []
+    for dirpath, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            if not f.startswith(("_", ".")):
+                full = os.path.join(dirpath, f)
+                st = os.stat(full)
+                out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
 #: Per-process cache of INFERRED SCHEMAS (metadata only, never data):
 #: schema inference on a parquet path costs a footer-reading driver job
 #: on EVERY ``spark.read.parquet`` call (~135 ms each at sf0.1 —
 #: measured r10), and every registry query pays it 1-3x per execution.
 #: Production engines read catalog tables whose schemas are known; this
-#: cache is the path-based equivalent — infer once per (dir, table) per
-#: process, then pass the schema explicitly. Keyed on the resolved path
-#: so different sf dirs never share an entry.
-_SCHEMA_CACHE: dict[str, "object"] = {}
+#: cache is the path-based equivalent: path -> (listing signature,
+#: schema). A rewritten table (new names, sizes or mtimes) is inferred
+#: again, so a column added in place is seen by the next ``load_table``.
+_SCHEMA_CACHE: dict[str, tuple[object, object]] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table. Plain parquet scan — pushdown-friendly."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    schema = _SCHEMA_CACHE.get(path)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[path] = schema
-    df = spark.read.schema(schema).parquet(path)
+    sig = listing_signature(path)
+    sig_schema = _SCHEMA_CACHE.get(path)
+    if sig_schema is None or sig_schema[0] != sig:
+        sig_schema = _SCHEMA_CACHE[path] = (sig, spark.read.parquet(path).schema)
+    df = spark.read.schema(sig_schema[1]).parquet(path)
     for col in _NANO_TS_COLUMNS.get(name, ()):
         if dict(df.dtypes).get(col) == "bigint":
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` DIV 1000")))

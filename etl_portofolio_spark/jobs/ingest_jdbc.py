@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import argparse
 import os
-from datetime import datetime, timedelta, timezone
+from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,7 +24,11 @@ from pyspark.sql import types as T
 from etl_portofolio_spark.functions import ds_from_ts, epoch_to_ts_utc7
 from etl_portofolio_spark.session import build_session
 from etl_portofolio_spark.sources.jdbc import JdbcWindowSource
-from etl_portofolio_spark.streaming.incremental import DS_FORMAT, IncrementalRunner
+from etl_portofolio_spark.streaming.incremental import (
+    DS_FORMAT,
+    IncrementalRunner,
+    wall_clock_now,
+)
 
 
 def transform(df: DataFrame) -> DataFrame:
@@ -70,11 +74,8 @@ def main() -> None:
     runner = build_runner(spark, source, args.target)
     # runner windows are ds-timezone wall-clock (see JdbcWindowSource._epoch)
     # — "now" must be in the same coordinates, not host-local.
-    now_local = datetime.now(timezone.utc).replace(tzinfo=None) + timedelta(
-        hours=source.tz_offset_hours
-    )
     results = runner.run_from_watermark(
-        end=now_local,
+        end=wall_clock_now(timedelta(hours=source.tz_offset_hours)),
         delta=timedelta(hours=1),
         default_start=datetime.strptime(args.default_start, DS_FORMAT),
     )

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import argparse
 import os
-from datetime import datetime, timedelta, timezone
+from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,7 +27,11 @@ from etl_portofolio_spark.functions import date_parts, ds_from_ts, shift_hours
 from etl_portofolio_spark.functions.timeparts import DEFAULT_TZ_OFFSET_HOURS
 from etl_portofolio_spark.session import build_session
 from etl_portofolio_spark.sources import http_xml
-from etl_portofolio_spark.streaming.incremental import DS_FORMAT, IncrementalRunner
+from etl_portofolio_spark.streaming.incremental import (
+    DS_FORMAT,
+    IncrementalRunner,
+    wall_clock_now,
+)
 
 #: ds clock (UTC+7, the runner's windows) minus API clock (UTC)
 API_CLOCK_OFFSET = timedelta(hours=DEFAULT_TZ_OFFSET_HOURS)
@@ -159,9 +163,8 @@ def main() -> None:
         spark, args.target, url=args.url, allowlist_csv=args.allowlist_csv
     )
     # runner windows are ds-clock wall time
-    now_ds = datetime.now(timezone.utc).replace(tzinfo=None) + API_CLOCK_OFFSET
     results = runner.run_from_watermark(
-        end=now_ds,
+        end=wall_clock_now(API_CLOCK_OFFSET),
         delta=timedelta(hours=1),
         default_start=datetime.strptime(args.default_start, DS_FORMAT),
     )

@@ -51,6 +51,10 @@ WHERE r.r_name IN ('ASIA', 'EUROPE') AND n.n_name NOT LIKE 'A%'
 """
 
 
+#: The dim chain's tables, bound by name in ``_DIM_CHAIN_SQL``.
+DIM_TABLES = ("customer", "nation", "region")
+
+
 def _dim_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """customer⋈nation⋈region dim chain with residual filters.
 
@@ -61,10 +65,7 @@ def _dim_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-free fact join this feeds is also broadcast.
     """
     return spark.sql(
-        _DIM_CHAIN_SQL,
-        customer=load_table(spark, sf_dir, "customer"),
-        nation=load_table(spark, sf_dir, "nation"),
-        region=load_table(spark, sf_dir, "region"),
+        _DIM_CHAIN_SQL, **{t: load_table(spark, sf_dir, t) for t in DIM_TABLES}
     )
 
 
@@ -117,6 +118,7 @@ def q_flagship_throughput_pivot(
     sf_dir: str,
     lo: datetime | None = None,
     hi: datetime | None = None,
+    dim: DataFrame | None = None,
 ) -> DataFrame:
     """Flagship: J1–J4 + P3–P10 + A3 + F1–F13 in one plan.
 
@@ -134,6 +136,10 @@ def q_flagship_throughput_pivot(
     are named parameters sent as strings and cast in SQL, so they are read
     in the session time zone, never the host's.
 
+    ``dim`` replaces the dim chain built from ``sf_dir`` (the daily job
+    passes the chain it bound once, see ``jobs/process_daily``); it must
+    have ``_dim_chain``'s columns.
+
     Divergence documented per SURVEY §2.11.6: minute bucketing uses
     calendar year (``date_trunc``), not the reference's week-year
     ``'YYYY-…'`` format string.
@@ -148,7 +154,7 @@ def q_flagship_throughput_pivot(
         _FLAGSHIP_SQL.format(window=window),
         args=args,
         events=load_table(spark, sf_dir, "events"),
-        dim=_dim_chain(spark, sf_dir),
+        dim=_dim_chain(spark, sf_dir) if dim is None else dim,
     )
 
 

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -52,6 +52,12 @@ def latest_partition(
         if entry.isDirectory() and name.startswith(prefix):
             values.append(name[len(prefix) :])
     return max(values) if values else None
+
+
+def wall_clock_now(offset: timedelta) -> datetime:
+    """Naive "now" on the clock ``offset`` ahead of UTC, whatever the
+    host's zone: the coordinates of a runner's windows."""
+    return datetime.now(timezone.utc).replace(tzinfo=None) + offset
 
 
 def time_windows(

@@ -26,8 +26,14 @@ from tests.conftest import SF_DIR
 
 
 @pytest.fixture()
-def sf_copy(tmp_path):
-    """A private, mutable copy of the sf tables (sf0.001)."""
+def sf_copy(tmp_path, monkeypatch):
+    """A private, mutable copy of the sf tables (sf0.001), with a private
+    fixture cache: the copy's path and mtimes repeat across pytest runs
+    (``pytest-of-<user>/pytest-<n>`` is reused), so a shared /tmp cache
+    would serve an earlier run's entries under the same key."""
+    from etl_portofolio_spark import fixtures
+
+    monkeypatch.setattr(fixtures, "_ROOT", str(tmp_path / "fixtures"))
     d = tmp_path / "sfcopy"
     d.mkdir()
     for t in ("orders", "lineitem", "events"):

@@ -3,15 +3,16 @@
 from __future__ import annotations
 
 import os
+import shutil
 import time
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import functions as F
 
 from etl_portofolio_spark.jobs import ingest_jdbc, ingest_xml, process_daily
 from etl_portofolio_spark.catalog import load_table
 from etl_portofolio_spark.sources.jdbc import JdbcWindowSource
-from etl_portofolio_spark.streaming.incremental import IncrementalRunner
+from etl_portofolio_spark.streaming.incremental import IncrementalRunner, wall_clock_now
 
 from .conftest import SF_DIR
 
@@ -179,6 +180,25 @@ def test_process_daily_window_is_read_in_the_session_time_zone(spark, tmp_path):
     assert expected.exceptAll(got).count() == 0
 
 
+def test_cli_now_is_read_on_the_window_clock_not_the_host_zone():
+    """The CLIs' default end: "now" on a fixed offset from UTC (0 for the
+    daily job's session zone, +7 h for the ingestion jobs' ds clock)."""
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "Asia/Jakarta"
+    time.tzset()
+    try:
+        daily, ds_clock = wall_clock_now(timedelta(0)), wall_clock_now(timedelta(hours=7))
+        utc = datetime.now(timezone.utc).replace(tzinfo=None)
+    finally:
+        if old_tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    assert abs(utc - daily) < timedelta(seconds=5)
+    assert abs(utc + timedelta(hours=7) - ds_clock) < timedelta(seconds=5)
+
+
 def _jobs_run_by(spark, group: str, fn) -> int:
     """Spark jobs ``fn()`` runs, counted by job group."""
     sc = spark.sparkContext
@@ -228,15 +248,76 @@ def test_xml_batch_reads_through_map_in_arrow_over_range(spark, tmp_path):
     assert "BatchScan" not in executed, executed
 
 
-def test_daily_window_runs_six_jobs(spark, tmp_path):
-    """One daily window: one events scan, no outer join."""
+def test_daily_window_runs_four_jobs(spark, tmp_path):
+    """One daily window: one events scan, no outer join, and no dim scan
+    or broadcast job (the runner bound the dim chain once)."""
     runner = process_daily.build_runner(spark, SF_DIR, str(tmp_path / "daily_jobs"))
 
     def window():
         runner.run_window(datetime(2024, 1, 2), datetime(2024, 1, 3))
 
     window()  # warm: schema inference of the tables is once per process
-    assert _jobs_run_by(spark, "daily_window_jobs", window) <= 6
+    assert _jobs_run_by(spark, "daily_window_jobs", window) == 4
+
+
+def _copy_dims_and_events(tmp_path) -> str:
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for t in ("customer", "nation", "region", "events"):
+        shutil.copy(os.path.join(SF_DIR, f"{t}.parquet"), sf / f"{t}.parquet")
+    return str(sf)
+
+
+def test_daily_runner_rebinds_dims_that_changed_between_windows(spark, tmp_path):
+    """A dim file rewritten between two windows: the second window joins
+    the new rows, the first keeps what it wrote."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    sf = _copy_dims_and_events(tmp_path)
+    target = str(tmp_path / "daily_dims")
+    runner = process_daily.build_runner(spark, sf, target)
+    runner.run_window(datetime(2024, 1, 2), datetime(2024, 1, 3))
+    nation = os.path.join(sf, "nation.parquet")
+    t = pq.read_table(nation)
+    renamed = pc.binary_join_element_wise(t["n_name"], "_V2", "")
+    pq.write_table(t.set_column(t.schema.get_field_index("n_name"), "n_name", renamed), nation)
+    assert runner.run_window(datetime(2024, 1, 3), datetime(2024, 1, 4)).rows > 0
+
+    keys = {
+        r.ds: r.keys
+        for r in spark.read.parquet(target)
+        .groupBy("ds")
+        .agg(F.collect_set("remote_key").alias("keys"))
+        .collect()
+    }
+    assert set(keys) == {"20240102", "20240103"}
+    assert not any("_V2" in k for k in keys["20240102"])
+    assert keys["20240103"] and all("_V2 - " in k for k in keys["20240103"])
+
+
+def _ds_dirs(path: str) -> list[str]:
+    return sorted(d for d in os.listdir(path) if d.startswith("ds="))
+
+
+def test_daily_empty_window_writes_nothing_and_next_window_matches_clean_run(
+    spark, tmp_path
+):
+    """A day without events on the bound dim writes 0 rows and no
+    partition; the next window's table equals a clean run of that day."""
+    day = (datetime(2024, 1, 2), datetime(2024, 1, 3))
+    target = str(tmp_path / "daily_after_empty")
+    runner = process_daily.build_runner(spark, SF_DIR, target)
+    assert runner.run_window(datetime(2023, 12, 31), datetime(2024, 1, 1)).rows == 0
+    assert not os.path.exists(target) or _ds_dirs(target) == []
+    runner.run_window(*day)
+
+    clean = str(tmp_path / "daily_clean")
+    process_daily.build_runner(spark, SF_DIR, clean).run_window(*day)
+    got, want = spark.read.parquet(target), spark.read.parquet(clean)
+    assert _ds_dirs(target) == _ds_dirs(clean) == ["ds=20240102"]
+    assert got.count() == want.count() > 0
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
 
 def test_curate_corpus_job_end_to_end(spark, tmp_path):

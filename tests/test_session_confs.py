@@ -19,9 +19,11 @@ _ENGINE = os.path.join(_REPO, "etl_portofolio_spark")
 
 #: Every env var the engine may read, by module. The jobs' entries are
 #: the reference scripts' connection settings (`os.getenv` in the
-#: reference), not engine behaviour switches.
+#: reference), not engine behaviour switches; `PYTHONPATH` and
+#: `SPARK_HOME` are where Spark's Python workers look for code.
 _ALLOWED_ENV = {
-    "session.py": {"SPARK_GRAFT_CPUS"},
+    "session.py": {"SPARK_GRAFT_CPUS", "PYTHONPATH"},
+    "worker_daemon.py": {"SPARK_HOME"},
     "catalog.py": {"SPARK_GRAFT_SF_DIR"},
     "jobs/ingest_xml.py": {"api_url", "api_user", "api_password", "api_verify_tls"},
     "jobs/ingest_jdbc.py": {"ip", "port", "database", "user", "password"},
